@@ -64,7 +64,7 @@ object ABConf {
       .withDefaultValue(Nil)
     for (r <- 1 to rounds) {
       System.err.println(s"=== round $r/$rounds ===")
-      canaries.foreach(q => canaryTimes(q) ::= time(q, None))
+      canaries.foreach(q => canaryTimes(q) ::= time(q, Some(valA)))
       val rotated =
         if (r % 2 == 1) variants else variants.reverse
       for ((tag, v) <- rotated; q <- queries)

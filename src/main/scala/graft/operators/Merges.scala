@@ -132,6 +132,12 @@ object Merges {
     * `carryNotes=false` for the legacy reset behavior
     * (scd2_manager.py:134-139).
     *
+    * `expireAbsent=true` (default) treats `nw` as a full snapshot:
+    * current keys absent from it are expired, as in the reference.
+    * `expireAbsent=false` treats `nw` as an incremental batch: absent
+    * current keys pass through unchanged (status `preserve`), which is
+    * what the streaming sinks need in the same single join.
+    *
     * Single pass: one full-outer join of the new batch against CURRENT
     * history; each joined row emits 0-2 output rows via
     * `inline(array_compact(...))`. Expired history is unioned back
@@ -140,8 +146,12 @@ object Merges {
   def scd2(hist: DataFrame, nw: DataFrame, key: String,
       compareCols: Seq[String], batchTs: java.sql.Timestamp,
       notesCol: Option[String] = Some("notes"), carryNotes: Boolean = true,
-      dropStatus: Boolean = true): DataFrame = {
+      dropStatus: Boolean = true, expireAbsent: Boolean = true): DataFrame = {
     import graft.model.{Schemas => S}
+    // presence flags are null on the side the full-outer join did not
+    // match; the emit conditions negate them, so test them null-safely
+    val inNew = col("_in_new").isNotNull
+    val inHist = col("_in_hist").isNotNull
     val dataCols = nw.columns.filterNot(_ == key).toSeq
     val flag = coalesce(col(S.CurrentFlag).cast(IntegerType), lit(0))
     val expiredHist = hist.filter(flag =!= 1)
@@ -177,11 +187,16 @@ object Merges {
       ).map { case (n, t) => StructField(n, t) }.toArray)
     )
     // 0-2 emitted rows per joined row, one pass:
+    val unchanged = when(inNew && inHist && !ch, rowStruct(histRow, "unchanged"))
+    val expires = if (expireAbsent) !inNew || ch else inNew && ch
     val emitted = array(
-      // unchanged current version passes through
-      when(inNew && inHist && !ch, rowStruct(histRow, "unchanged")).otherwise(nullRow),
-      // changed or removed current version gets expired
-      when(inHist && (!inNew || ch), rowStruct(expiredRow, "expire")).otherwise(nullRow),
+      // unchanged current version passes through, and so does an absent
+      // one when the batch is incremental
+      (if (expireAbsent) unchanged
+       else unchanged.when(inHist && !inNew, rowStruct(histRow, "preserve")))
+        .otherwise(nullRow),
+      // changed (or, for a snapshot, removed) current version gets expired
+      when(inHist && expires, rowStruct(expiredRow, "expire")).otherwise(nullRow),
       // brand-new or changed key gets a fresh current version
       when(inNew && (!inHist || ch), rowStruct(insertRow,
         "insert")).otherwise(nullRow)

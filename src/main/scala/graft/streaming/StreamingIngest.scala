@@ -19,6 +19,14 @@ import org.apache.spark.sql.Row
   * plays the same role); the SCD merges are idempotent under
   * foreachBatch retries because change detection compares values
   * (SURVEY §7.4.5).
+  *
+  * A foreachBatch `batch` is a plan, not data: every reference to it
+  * re-runs the whole trigger upstream, stateful dedup included. The
+  * SCD2 sinks therefore evaluate each micro-batch once
+  * ([[evaluatedOnce]]) and merge it with one full-outer join
+  * ([[Merges.scd2]]), so a trigger computes its output once and hands
+  * it to the table, as Structured Streaming (SIGMOD 2018) does for its
+  * own sinks.
   */
 object StreamingIngest {
 
@@ -94,6 +102,56 @@ object StreamingIngest {
     else None
   }
 
+  /** Runs `f` over `batch` evaluated exactly once, then releases it.
+    *
+    * Each reference to a foreachBatch batch (a join side, a collect, a
+    * write) re-runs the trigger's upstream: source scan, normalize and
+    * the stateful dedup with its state-store commit. `persist()` cannot
+    * stop that: the analyzer gives the batch's `LogicalRDD` fresh
+    * expression ids at every later reference, so only the first one
+    * hits the cache. An eager local checkpoint (the idiom
+    * [[graft.operators.Dedup.connectedComponents]] uses) evaluates the
+    * batch once into block-manager blocks that every reference reads.
+    * The blocks are unpersisted when `f` returns, so a long-running
+    * stream holds at most the current trigger's batch.
+    */
+  private def evaluatedOnce[T](batch: DataFrame)(f: DataFrame => T): T = {
+    val once = batch.localCheckpoint(eager = true)
+    try f(once)
+    finally once.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
+  }
+
+  /** `batch`'s schema plus the SCD2 version columns: the shape of an
+    * empty history table.
+    */
+  private def scd2Schema(batch: DataFrame) = {
+    import graft.model.{Schemas => S}
+    import org.apache.spark.sql.types._
+    StructType(batch.schema.fields ++ Seq(
+      StructField(S.EffectiveStart, TimestampType),
+      StructField(S.EffectiveEnd, TimestampType),
+      StructField(S.CurrentFlag, IntegerType)))
+  }
+
+  /** Writes `merged` into the bucketed table at `tablePath`, replacing
+    * only the `_bucket` partitions it holds (dynamic partition
+    * overwrite), and restores the session's overwrite mode.
+    */
+  private def overwriteBuckets(merged: DataFrame, tablePath: String): Unit = {
+    val spark = merged.sparkSession
+    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try merged.write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    }
+  }
+
   /** Wire a deduped stream into an SCD1-merged parquet table via
     * foreachBatch. Each micro-batch: read current table state, merge,
     * overwrite (crash-recoverable via [[swapTable]]).
@@ -139,7 +197,7 @@ object StreamingIngest {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) => evaluatedOnce(batch) { batch =>
         val spark = batch.sparkSession
         def bucketOf(c: org.apache.spark.sql.Column) =
           pmod(xxhash64(c), lit(numBuckets.toLong))
@@ -156,17 +214,11 @@ object StreamingIngest {
               .drop("_bucket")
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[Row], batch.schema)
-        val merged = Merges.scd1(hist, batch, key, compareCols, notesCol = None)
-          .withColumn("_bucket", bucketOf(col(key)))
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try merged.write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        ()
-      }
+        overwriteBuckets(
+          Merges.scd1(hist, batch, key, compareCols, notesCol = None)
+            .withColumn("_bucket", bucketOf(col(key))),
+          tablePath)
+      }}
 
   /** Read a bucketed SCD1 table back without its layout column. */
   def readBucketedTable(spark: SparkSession, tablePath: String): DataFrame =
@@ -263,7 +315,11 @@ object StreamingIngest {
   def dedupIngestBatch(batch: DataFrame, docsPath: String,
       postingsTable: String, idCol: String, textCol: String, n: Int,
       threshold: Double, maxDocFreq: Long, buckets: Int,
-      useBloom: Boolean = true, bloomCapacity: Long = 8L << 20): Unit = {
+      useBloom: Boolean = true,
+      bloomCapacity: Long = 8L << 20): Unit = evaluatedOnce(batch) { batch =>
+    // the shingle pass, the survivor anti-join, the survivor postings and
+    // the docs append all read `batch`; unmaterialized, a streaming
+    // upstream ran 7 times per trigger (StreamingSpec pins one)
     import graft.operators.Dedup
     import graft.expr.BloomMightContain
     val spark = batch.sparkSession
@@ -705,7 +761,10 @@ object StreamingIngest {
     */
   def semanticDedupIngestBatch(batch: DataFrame, docsPath: String,
       cellsPath: String, centroids: DataFrame, idCol: String,
-      vecCol: String, threshold: Double): Unit = {
+      vecCol: String, threshold: Double): Unit = evaluatedOnce(batch) { batch =>
+    // the assignment pass, the survivor anti-join and the cell append
+    // all read `batch`; unmaterialized, a streaming upstream ran 7 times
+    // per trigger (StreamingSpec pins one)
     import graft.operators.Similarity
     val spark = batch.sparkSession
     // three consumers (corpus join, within-batch dominance ×2 sides,
@@ -786,14 +845,18 @@ object StreamingIngest {
     * Semantics (reference: src/etl/scd2_manager.py:8-196 under re-poll):
     *  - `batchIsSnapshot=true` — the micro-batch is a FULL feed poll,
     *    exactly one reference cron run: current keys absent from the
-    *    batch are expired (the reference's remove path). Plain
-    *    [[Merges.scd2]].
+    *    batch are expired (the reference's remove path).
     *  - `batchIsSnapshot=false` (default) — the micro-batch is
     *    INCREMENTAL (the usual streaming shape): keys absent from the
     *    batch pass through untouched, nothing is expired by absence.
-    *    History is split by a semi/anti join on the batch's key set
-    *    (broadcast — a micro-batch's distinct keys are small) and only
-    *    the touched slice enters the merge join.
+    *
+    * Both are one [[Merges.scd2]] pass with `expireAbsent =
+    * batchIsSnapshot`: a single full-outer join of the batch against
+    * the current history, after which the whole table is rewritten.
+    * The join shuffles the current history once per trigger, the same
+    * order of cost as the rewrite; [[scd2MergeBatchBucketed]] is the
+    * path for tables too large to rewrite. The batch is evaluated once
+    * ([[evaluatedOnce]]).
     *
     * Idempotence under foreachBatch retries: `batchTs` MUST be derived
     * deterministically from the batch id (see [[scd2Sink]]), and the
@@ -810,27 +873,13 @@ object StreamingIngest {
       compareCols: Seq[String], batchTs: java.sql.Timestamp,
       batchIsSnapshot: Boolean = false,
       notesCol: Option[String] = Some("notes"),
-      carryNotes: Boolean = true): Unit = {
-    import graft.model.{Schemas => S}
-    import org.apache.spark.sql.types._
+      carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
     val spark = batch.sparkSession
-    val scd2Schema = StructType(batch.schema.fields ++ Seq(
-      StructField(S.EffectiveStart, TimestampType),
-      StructField(S.EffectiveEnd, TimestampType),
-      StructField(S.CurrentFlag, IntegerType)))
     val hist = readTable(spark, tablePath).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema))
-    val merged =
-      if (batchIsSnapshot)
-        Merges.scd2(hist, batch, key, compareCols, batchTs, notesCol, carryNotes)
-      else {
-        val keys = broadcast(batch.select(key).distinct())
-        val touched = hist.join(keys, Seq(key), "left_semi")
-        val untouched = hist.join(keys, Seq(key), "left_anti")
-        Merges.scd2(touched, batch, key, compareCols, batchTs, notesCol, carryNotes)
-          .unionByName(untouched)
-      }
-    merged.write.mode("overwrite").parquet(tablePath + "_tmp")
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema(batch)))
+    Merges.scd2(hist, batch, key, compareCols, batchTs, notesCol, carryNotes,
+        expireAbsent = batchIsSnapshot)
+      .write.mode("overwrite").parquet(tablePath + "_tmp")
     swapTable(spark, tablePath)
   }
 
@@ -842,54 +891,42 @@ object StreamingIngest {
     * versions of a key share its bucket (the hash is on the key, not
     * the version timestamp), so a bucket rewrite is self-contained:
     * expiring a current row and inserting its successor touch the same
-    * partition. Incremental semantics only (absent keys pass through
-    * by never having their buckets read); snapshot-expiry with bucketed
-    * IO is [[scd2MergeBatchBucketedSnapshot]]. Retry idempotence is
-    * inherited: same deterministic `batchTs`, same fixed-point merge,
-    * and a replayed batch rewrites its buckets with identical content.
-    * Crash guarantee is weaker than the flat sink's — see
-    * [[scd1SinkBucketed]]'s note on dynamic partition overwrite.
+    * partition. Incremental semantics only: within the touched buckets
+    * the batch meets the history in one [[Merges.scd2]] join with
+    * `expireAbsent = false`, so keys absent from the batch pass through
+    * unchanged; snapshot-expiry with bucketed IO is
+    * [[scd2MergeBatchBucketedSnapshot]]. An empty batch touches no
+    * bucket and writes nothing. Retry idempotence is inherited: same
+    * deterministic `batchTs`, same fixed-point merge, and a replayed
+    * batch rewrites its buckets with identical content. The batch is
+    * evaluated once ([[evaluatedOnce]]). Crash guarantee is weaker than
+    * the flat sink's — see [[scd1SinkBucketed]]'s note on dynamic
+    * partition overwrite.
     */
   def scd2MergeBatchBucketed(tablePath: String, batch: DataFrame, key: String,
       compareCols: Seq[String], batchTs: java.sql.Timestamp,
       numBuckets: Int = 64, notesCol: Option[String] = Some("notes"),
-      carryNotes: Boolean = true): Unit = {
-    import graft.model.{Schemas => S}
-    import org.apache.spark.sql.types._
+      carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
     val spark = batch.sparkSession
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(xxhash64(c), lit(numBuckets.toLong))
-    val scd2Schema = StructType(batch.schema.fields ++ Seq(
-      StructField(S.EffectiveStart, TimestampType),
-      StructField(S.EffectiveEnd, TimestampType),
-      StructField(S.CurrentFlag, IntegerType)))
+    def bucketOf(c: Column) = pmod(xxhash64(c), lit(numBuckets.toLong))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
     // ≤ numBuckets longs — a bounded driver-side collect
     val touched = batch.select(bucketOf(col(key)).as("_bucket"))
       .distinct().collect().map(_.getLong(0))
-    val hist =
-      if (exists)
-        spark.read.parquet(tablePath)
-          .filter(col("_bucket").isin(touched: _*)) // partition-pruned
-          .drop("_bucket")
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema)
-    // within the touched buckets, keys absent from the batch still
-    // pass through untouched — same semi/anti split as the flat sink
-    val keys = broadcast(batch.select(key).distinct())
-    val merged = Merges.scd2(hist.join(keys, Seq(key), "left_semi"), batch,
-        key, compareCols, batchTs, notesCol, carryNotes)
-      .unionByName(hist.join(keys, Seq(key), "left_anti"))
-      .withColumn("_bucket", bucketOf(col(key)))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    if (touched.nonEmpty) {
+      val hist =
+        if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
+          spark.read.parquet(tablePath)
+            .filter(col("_bucket").isin(touched: _*)) // partition-pruned
+            .drop("_bucket")
+        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema(batch))
+      overwriteBuckets(
+        Merges.scd2(hist, batch, key, compareCols, batchTs, notesCol, carryNotes,
+            expireAbsent = false)
+          .withColumn("_bucket", bucketOf(col(key))),
+        tablePath)
     }
-    ()
   }
 
   /** St6 snapshot-mode bucketed SCD2: the micro-batch is a FULL feed
@@ -912,7 +949,9 @@ object StreamingIngest {
     * dynamic partition overwrite rewrites only those buckets. A
     * replayed (retried) batch finds zero dirty keys and returns
     * without writing at all — byte-identical table, stronger than the
-    * flat sink's rewrite-identical-content idempotence.
+    * flat sink's rewrite-identical-content idempotence. The batch feeds
+    * both the classification and the merge, so it is evaluated once
+    * ([[evaluatedOnce]]).
     *
     * Per-trigger cost on a 100 TB table: one pruned scan of current
     * rows (~entity count, not history volume) + full IO only for
@@ -922,61 +961,49 @@ object StreamingIngest {
   def scd2MergeBatchBucketedSnapshot(tablePath: String, batch: DataFrame,
       key: String, compareCols: Seq[String], batchTs: java.sql.Timestamp,
       numBuckets: Int = 64, notesCol: Option[String] = Some("notes"),
-      carryNotes: Boolean = true): Unit = {
+      carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
     import graft.model.{Schemas => S}
     val spark = batch.sparkSession
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(xxhash64(c), lit(numBuckets.toLong))
+    def bucketOf(c: Column) = pmod(xxhash64(c), lit(numBuckets.toLong))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(tablePath))) {
       // first snapshot: every key inserts — write all buckets directly
       val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(batch.schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField(S.EffectiveStart,
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField(S.EffectiveEnd,
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField(S.CurrentFlag,
-            org.apache.spark.sql.types.IntegerType))))
+        spark.sparkContext.emptyRDD[Row], scd2Schema(batch))
       Merges.scd2(empty, batch, key, compareCols, batchTs, notesCol, carryNotes)
         .withColumn("_bucket", bucketOf(col(key)))
         .write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-      return
+    } else {
+      // key + compare columns of current rows only — column-pruned,
+      // current_flag pushed to the parquet scan
+      val currentKC = spark.read.parquet(tablePath)
+        .filter(col(S.CurrentFlag) === 1)
+        .select((key +: compareCols).map(c =>
+          if (c == key) col(c) else col(c).as(c + "_hist")): _*)
+        .withColumn("_in_hist", lit(1))
+      val batchKC = batch.select((key +: compareCols).map(col): _*)
+        .withColumn("_in_new", lit(1))
+      val ch = Merges.changed(compareCols, c => col(c), c => col(c + "_hist"))
+      val dirtyKeys = batchKC.join(currentKC, Seq(key), "full_outer")
+        .filter(col("_in_new").isNull || col("_in_hist").isNull || ch)
+        .select(col(key))
+      // ≤ numBuckets longs — a bounded driver-side collect
+      val dirty = dirtyKeys.select(bucketOf(col(key)).as("_bucket"))
+        .distinct().collect().map(_.getLong(0))
+      // a replayed/no-op snapshot has no dirty bucket: table untouched
+      if (dirty.nonEmpty) {
+        val hist = spark.read.parquet(tablePath)
+          .filter(col("_bucket").isin(dirty: _*)) // partition-pruned
+          .drop("_bucket")
+        val batchDirty = batch.filter(bucketOf(col(key)).isin(dirty: _*))
+        overwriteBuckets(
+          Merges.scd2(hist, batchDirty, key, compareCols, batchTs,
+              notesCol, carryNotes)
+            .withColumn("_bucket", bucketOf(col(key))),
+          tablePath)
+      }
     }
-    // key + compare columns of current rows only — column-pruned,
-    // current_flag pushed to the parquet scan
-    val currentKC = spark.read.parquet(tablePath)
-      .filter(col(S.CurrentFlag) === 1)
-      .select((key +: compareCols).map(c =>
-        if (c == key) col(c) else col(c).as(c + "_hist")): _*)
-      .withColumn("_in_hist", lit(1))
-    val batchKC = batch.select((key +: compareCols).map(col): _*)
-      .withColumn("_in_new", lit(1))
-    val ch = Merges.changed(compareCols, c => col(c), c => col(c + "_hist"))
-    val dirtyKeys = batchKC.join(currentKC, Seq(key), "full_outer")
-      .filter(col("_in_new").isNull || col("_in_hist").isNull || ch)
-      .select(col(key))
-    // ≤ numBuckets longs — a bounded driver-side collect
-    val dirty = dirtyKeys.select(bucketOf(col(key)).as("_bucket"))
-      .distinct().collect().map(_.getLong(0))
-    if (dirty.isEmpty) return // replayed/no-op snapshot: table untouched
-    val hist = spark.read.parquet(tablePath)
-      .filter(col("_bucket").isin(dirty: _*)) // partition-pruned
-      .drop("_bucket")
-    val batchDirty = batch.filter(bucketOf(col(key)).isin(dirty: _*))
-    val merged = Merges.scd2(hist, batchDirty, key, compareCols, batchTs,
-        notesCol, carryNotes)
-      .withColumn("_bucket", bucketOf(col(key)))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    ()
   }
 
   /** [[scd2Sink]]'s bucketed form — see [[scd2MergeBatchBucketed]] and,

@@ -95,6 +95,44 @@ class CacheLifecycleSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
+  test("scd2 sinks release each trigger's materialized micro-batch") {
+    import graft.streaming.StreamingIngest
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val cmp = Seq("entry_title", "summary")
+    val ts = (id: Long) => new java.sql.Timestamp(86400000L * (id + 1))
+    val sinks = Seq[(org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]](
+      (s, tmp) => StreamingIngest.scd2Sink(s, s"$tmp/table", s"$tmp/ckpt", "link",
+        cmp, ts, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)),
+      (s, tmp) => StreamingIngest.scd2SinkBucketed(s, s"$tmp/table", s"$tmp/ckpt",
+        "link", cmp, ts, numBuckets = 4,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)),
+      (s, tmp) => StreamingIngest.scd2SinkBucketed(s, s"$tmp/table", s"$tmp/ckpt",
+        "link", cmp, ts, numBuckets = 4, batchIsSnapshot = true,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)))
+    for (sink <- sinks) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-scd2cache").toString
+      spark.sharedState.cacheManager.clearCache()
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+      val mem = MemoryStream[(String, String, String)]
+      val q = sink(mem.toDF.toDF("link", "entry_title", "summary"), tmp).start()
+      try {
+        // three triggers of a long-running query
+        for (round <- 1 to 3) {
+          mem.addData(("l1", s"T1-$round", "S1"), (s"k$round", "T", "S"))
+          q.processAllAvailable()
+          assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+            s"trigger $round left its micro-batch persisted")
+          assert(cacheEmpty, s"trigger $round left a cached plan")
+        }
+      } finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      assert(spark.read.parquet(s"$tmp/table")
+        .filter(col("link") === "l1").count() == 3)
+    }
+  }
+
   test("Caches.own intermediates are caller-released, results unchanged") {
     spark.sharedState.cacheManager.clearCache()
     val before = Dedup.minhashDedupPairs(docs, "doc_id", "text", n = 3,

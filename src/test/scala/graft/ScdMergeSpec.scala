@@ -108,6 +108,26 @@ class ScdMergeSpec extends SparkSpec {
     assert(currents == Set("link1", "link2", "link3"))
   }
 
+  test("scd2 keys whose compare columns are all null still expire and insert") {
+    // the presence flags are null on the unmatched side of the join; a
+    // negated null flag must not drop the row
+    val hist = Seq(("k1", None: Option[String]), ("k2", Some("v2"))).toDF("link", "payload")
+      .withColumn(Schemas.EffectiveStart, lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .withColumn(Schemas.EffectiveEnd, lit(null).cast("timestamp"))
+      .withColumn(Schemas.CurrentFlag, lit(1))
+    val nw = Seq(("k2", Some("v2")), ("k3", None: Option[String])).toDF("link", "payload")
+    def byKey(df: DataFrame) = df.select($"link", $"_status").as[(String, String)]
+      .collect().sorted.toSeq
+    // snapshot (default): absent k1 expires, null-payload k3 inserts
+    assert(byKey(Merges.scd2(hist, nw, "link", Seq("payload"), batchTs,
+      dropStatus = false)) ==
+      Seq(("k1", "expire"), ("k2", "unchanged"), ("k3", "insert")))
+    // incremental: absent k1 passes through
+    assert(byKey(Merges.scd2(hist, nw, "link", Seq("payload"), batchTs,
+      dropStatus = false, expireAbsent = false)) ==
+      Seq(("k1", "preserve"), ("k2", "unchanged"), ("k3", "insert")))
+  }
+
   test("dedupKeepLatest keeps the most recent row per key") {
     val df = Seq(
       ("k1", "2024-01-01 00:00:00", "old"),

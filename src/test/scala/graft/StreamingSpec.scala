@@ -493,6 +493,193 @@ class StreamingSpec extends SparkSpec {
     assert(perKey.length == 3 && perKey.forall(_ == 1))
   }
 
+  /** Rows the stream's dedup operator dropped, summed over every
+    * trigger of `q` (duplicates plus late rows).
+    */
+  private def dedupDropped(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.recentProgress.flatMap(_.stateOperators.headOption).map { o =>
+      Option(o.customMetrics.get("numDroppedDuplicateRows")).fold(0L)(_.longValue) +
+        o.numRowsDroppedByWatermark
+    }.sum
+
+  /** Runs `body` and returns the executed plans of the parquet writes
+    * into a path containing `pathPart` that it made.
+    */
+  private def writePlans(pathPart: String, expected: Int)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(pathPart))
+          plans.add(p)
+        ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 20000
+      while (plans.size < expected && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(l)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  test("scd2 sink evaluates each micro-batch once and merges it in one join") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-scd2once").toString
+    val mem = MemoryStream[(String, java.sql.Timestamp, String, String)]
+    val stream = StreamingIngest.dedupStreamByKey(
+      mem.toDF.toDF("link", "published", "entry_title", "summary"),
+      "link", "published", "1 hour")
+    val ts0 = t("2024-01-01 00:00:00")
+    val tsOf = (id: Long) => new java.sql.Timestamp(ts0.getTime + id * 86400000L)
+    def run(data: (String, java.sql.Timestamp, String, String)*): Long = {
+      mem.addData(data: _*)
+      val q = StreamingIngest.scd2Sink(stream, s"$tmp/table", s"$tmp/ckpt",
+          "link", Seq("entry_title", "summary"), tsOf,
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(60000) finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      dedupDropped(q)
+    }
+    val p = t("2024-01-01 10:00:00")
+    val plans = writePlans("table_tmp", expected = 2) {
+      // round 1: two in-round duplicates (l1, l3) reach the dedup
+      val d1 = run(("l1", p, "T1", "S1"), ("l1", p, "T1", "S1"),
+        ("l2", p, "T2", "S2"), ("l3", p, "T3", "S3"), ("l3", p, "T3", "S3"))
+      // round 2: one in-round duplicate (l4) and one re-polled key (l1)
+      val d2 = run(("l4", p, "T4", "S4"), ("l4", p, "T4", "S4"),
+        ("l1", p, "T1", "S1"))
+      // one evaluation per trigger: the counters read the true drops, not
+      // a multiple of them
+      assert((d1, d2) == ((2L, 2L)), "dedup ran more than once per trigger")
+    }
+    val table = spark.read.parquet(s"$tmp/table")
+    assert(table.count() == 4 && table.filter($"current_flag" === 1).count() == 4)
+    assert(plans.nonEmpty, "no merge write was observed")
+    plans.foreach { plan =>
+      assert(plan.contains("FullOuter"), plan)
+      Seq("LeftSemi", "LeftAnti", "BroadcastExchange", "Deduplicate").foreach(n =>
+        assert(!plan.contains(n), s"merge write plan contains $n:\n$plan"))
+    }
+  }
+
+  test("dedup-on-ingest sinks evaluate each micro-batch once") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-once").toString
+    val table = "graft_test_ingest_once_postings"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    locally {
+      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+      val dir = new java.io.File(wh, table)
+      if (dir.exists()) { dir.listFiles().foreach(_.delete()); dir.delete(); () }
+    }
+    val p = t("2024-01-01 10:00:00")
+    def start(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Long = {
+      val q = w.start()
+      try q.awaitTermination(60000) finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      dedupDropped(q)
+    }
+    val texts = MemoryStream[(Long, java.sql.Timestamp, String)]
+    texts.addData((1L, p, "alpha beta gamma delta epsilon"),
+      (1L, p, "alpha beta gamma delta epsilon"),
+      (2L, p, "an entirely different document body"))
+    val textDropped = start(StreamingIngest.dedupIngestSink(
+      StreamingIngest.dedupStreamByKey(texts.toDF.toDF("doc_id", "ts", "text"),
+        "doc_id", "ts", "1 hour").drop("ts"),
+      s"$tmp/docs", table, s"$tmp/ckpt", "doc_id", "text", n = 2,
+      threshold = 0.6, buckets = 4,
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    assert(textDropped == 1L, "text dedup-on-ingest re-ran its upstream")
+    assert(spark.read.parquet(s"$tmp/docs").count() == 2)
+    val vecs = MemoryStream[(Long, java.sql.Timestamp, Seq[Double])]
+    vecs.addData((1L, p, Seq(1.0, 0.0)), (1L, p, Seq(1.0, 0.0)),
+      (2L, p, Seq(0.0, 1.0)))
+    val centroids = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "vec")
+    val vecDropped = start(StreamingIngest.semanticDedupIngestSink(
+      StreamingIngest.dedupStreamByKey(vecs.toDF.toDF("vec_id", "ts", "vec"),
+        "vec_id", "ts", "1 hour").drop("ts"),
+      s"$tmp/vdocs", s"$tmp/cells", centroids, s"$tmp/vckpt", "vec_id", "vec",
+      threshold = 0.95,
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    assert(vecDropped == 1L, "semantic dedup-on-ingest re-ran its upstream")
+    assert(spark.read.parquet(s"$tmp/vdocs").count() == 2)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("incremental scd2 sinks: pass-through edges, flat and bucketed") {
+    val cmp = Seq("entry_title", "summary")
+    val ts1 = t("2024-01-01 00:00:00"); val ts2 = t("2024-01-02 00:00:00")
+    val ts3 = t("2024-01-03 00:00:00")
+    // numBuckets = 1 puts every key in the touched bucket, so the
+    // bucketed sink's history-only rows go through the merge join too
+    val sinks: Seq[(String, (String, org.apache.spark.sql.DataFrame,
+        java.sql.Timestamp) => Unit, String => org.apache.spark.sql.DataFrame)] = Seq(
+      ("flat", (path, b, ts) => StreamingIngest.scd2MergeBatch(path, b, "link", cmp, ts),
+        path => spark.read.parquet(path)),
+      ("bucketed", (path, b, ts) => StreamingIngest.scd2MergeBatchBucketed(path, b,
+          "link", cmp, ts, numBuckets = 1),
+        path => StreamingIngest.readBucketedTable(spark, path)))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+    for ((name, merge, read) <- sinks) {
+      val path = java.nio.file.Files.createTempDirectory(s"graft-scd2edge-$name")
+        .toString + "/table"
+      def mb(rs: (String, Option[String], Option[String], Option[String])*) =
+        rs.toDF("link", "entry_title", "summary", "notes")
+      merge(path, mb(("l1", Some("T1"), Some("S1"), Some("n1")),
+        ("l2", None, None, None)), ts1)
+      val first = rows(read(path))
+      // history-only current rows pass through unchanged, including l2,
+      // whose compare and notes columns are all null
+      merge(path, mb(("l1", Some("T1-updated"), Some("S1"), Some(""))), ts2)
+      val l2 = read(path).filter($"link" === "l2").collect()
+      assert(l2.length == 1 && l2(0).getAs[Int]("current_flag") == 1 &&
+        l2(0).getAs[java.sql.Timestamp]("effective_start") == ts1 &&
+        l2(0).isNullAt(l2(0).fieldIndex("entry_title")) &&
+        l2(0).isNullAt(l2(0).fieldIndex("notes")), s"$name: ${l2.toSeq}")
+      val l1 = read(path).filter($"link" === "l1")
+      assert(l1.count() == 2, name)
+      assert(l1.filter($"current_flag" === 1).collect()(0)
+        .getAs[String]("notes") == "n1", s"$name: notes not carried")
+      val second = rows(read(path))
+      assert(second.length == first.length + 1, name)
+      // an empty batch changes nothing
+      merge(path, mb(), ts3)
+      assert(rows(read(path)) == second, s"$name: empty batch changed the table")
+      // a batch disjoint from the history inserts and expires nothing
+      merge(path, mb(("l3", Some("T3"), Some("S3"), None)), ts3)
+      val third = rows(read(path))
+      assert(third.length == second.length + 1, name)
+      assert(read(path).filter($"current_flag" === 0).count() == 1, name)
+      assert(third.filterNot(_.contains("l3")) == second, name)
+      // a replayed batch leaves the table identical
+      merge(path, mb(("l3", Some("T3"), Some("S3"), None)), ts3)
+      assert(rows(read(path)) == third, s"$name: replay changed the table")
+    }
+    // a LongType key takes the same single-join path
+    for ((name, merge, read) <- sinks) {
+      val path = java.nio.file.Files.createTempDirectory(s"graft-scd2long-$name")
+        .toString + "/table"
+      def mb(rs: (Long, String, String)*) = rs.toDF("link", "entry_title", "summary")
+      merge(path, mb((1L, "T1", "S1"), (2L, "T2", "S2")), ts1)
+      merge(path, mb((2L, "T2-updated", "S2"), (3L, "T3", "S3")), ts2)
+      val table = read(path)
+      assert(table.schema("link").dataType == org.apache.spark.sql.types.LongType)
+      val current = table.filter($"current_flag" === 1)
+        .select($"link", $"entry_title").as[(Long, String)].collect().sorted.toSeq
+      assert(current == Seq((1L, "T1"), (2L, "T2-updated"), (3L, "T3")), name)
+      assert(table.count() == 4, name)
+    }
+  }
+
   test("sink table swap recovers from a crash between backup and promote") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-swap").toString
     val path = s"$tmp/table"
