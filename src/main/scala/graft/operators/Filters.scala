@@ -173,6 +173,9 @@ object Filters {
     else df.orderBy(col(publishedCol).desc, col(linkCol).asc)
   }
 
+  /** F6's invalid primary key: null or blank. */
+  def invalidKey(key: String): Column = col(key).isNull || trim(col(key)) === ""
+
   /** F6: primary-key validation — null/blank keys are invalid; returns
     * (validRows, invalidCount, duplicateKeyCount). The reference rejects
     * the frame on invalid keys and warns on duplicates
@@ -180,7 +183,7 @@ object Filters {
     * never collects keys to the driver.
     */
   def validatePk(df: DataFrame, key: String): (DataFrame, Long, Long) = {
-    val invalidPred = col(key).isNull || trim(col(key)) === ""
+    val invalidPred = invalidKey(key)
     val stats = df
       .groupBy()
       .agg(

@@ -3,8 +3,14 @@ package graft.pipeline
 import graft.functions.{HtmlToText, Normalize}
 import graft.model.Schemas
 import graft.operators.{Filters, Merges}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.Tables
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** The reference's pipeline wiring (SURVEY.md §3) as one lazy plan per
   * stage, parameterized by config — the Spark shape of
@@ -57,19 +63,35 @@ object JobPipeline {
 
   /** ETL stage (reference: core/etl.py:228-287): new batch → dedup
     * keep-latest within batch → strategy merge into the stage table.
+    *
+    * Lazy, like every other stage: nothing runs until the caller writes
+    * the merged frame. The deduped batch is observed in that same pass
+    * as `etl_stage` (`rows_in`, `invalid_pk`: null or blank `key`,
+    * `rows_out`), and invalid rows are left out of the merge. The
+    * reference rejects a frame with invalid keys
+    * (src/etl/scd1_manager.py:179-215), so the caller must check
+    * `invalid_pk` after the write and before committing it —
+    * [[runRegion]] writes to `_tmp` and swaps only a clean merge in.
+    * Returns (merged, its `etl_stage` observation).
     */
   def etlStage(history: DataFrame, batch: DataFrame, strategy: Strategy,
       batchTs: java.sql.Timestamp, key: String = Schemas.PrimaryKey,
-      compareCols: Seq[String] = Schemas.CompareCols): DataFrame = {
-    val deduped = Merges.dedupKeepLatest(batch, key,
-      Seq(Normalize.tsParse(col("published"))))
-    val (valid, invalid, _) = Filters.validatePk(deduped, key)
-    require(invalid == 0, s"$invalid rows with null/blank primary key '$key'")
-    strategy match {
+      compareCols: Seq[String] = Schemas.CompareCols): (DataFrame, Observation) = {
+    val invalid = Filters.invalidKey(key)
+    val stats = Observation("etl_stage")
+    val valid = Merges.dedupKeepLatest(batch, key,
+        Seq(Normalize.tsParse(col("published"))))
+      .observe(stats,
+        count(lit(1)).as("rows_in"),
+        count_if(invalid).as("invalid_pk"),
+        count_if(!invalid).as("rows_out"))
+      .filter(!invalid)
+    val merged = strategy match {
       case Scd1        => Merges.scd1(history, valid, key, compareCols)
       case Scd2        => Merges.scd2(history, valid, key, compareCols, batchTs)
       case MergeUpsert => Merges.mergeUpsert(history, valid, key, compareCols)
     }
+    (merged, stats)
   }
 
   /** Filter stage (reference: run_job_filter.py:257-410): one fused
@@ -109,26 +131,62 @@ object JobPipeline {
   /** One regional pipeline end-to-end over parquet tables (the Spark
     * analogue of run_job_pipelines.py:64-109). Returns the filtered
     * result; writes both stage + result tables.
+    *
+    * One scan of `rawBatch` and two writes. The merged stage goes to
+    * `<stagePath>_tmp`; when its `etl_stage` observation counts an
+    * invalid key the `_tmp` is deleted and the region fails with the
+    * reference's rejection, leaving the live stage untouched. Otherwise
+    * the `_tmp` replaces the stage through the crash-safe
+    * [[Tables.swapTable]]. The result goes to `<resultPath>_next`. Both
+    * re-reads take the schema of the frame just written, so neither
+    * runs a footer-inference job.
     */
   def runRegion(spark: SparkSession, rawBatch: DataFrame, stagePath: String,
       resultPath: String, strategy: Strategy, cfg: FilterConfig,
-      batchTs: java.sql.Timestamp, displayTz: String = "UTC"): DataFrame = {
-    val history = readOrEmpty(spark, stagePath, Schemas.FeedEntrySchema)
-    val normalized = normalizeEntries(rawBatch, batchTs, displayTz)
-    val merged = etlStage(history, normalized, strategy, batchTs)
-    merged.write.mode(SaveMode.Overwrite).parquet(stagePath)
+      batchTs: java.sql.Timestamp, displayTz: String = "UTC"): DataFrame =
+    region(spark, rawBatch, stagePath, resultPath, strategy, cfg, batchTs,
+      displayTz)._1
 
-    val staged = spark.read.parquet(stagePath)
+  /** [[runRegion]] plus the result's row count, observed on its write. */
+  private def region(spark: SparkSession, rawBatch: DataFrame,
+      stagePath: String, resultPath: String, strategy: Strategy,
+      cfg: FilterConfig, batchTs: java.sql.Timestamp,
+      displayTz: String): (DataFrame, Long) = {
+    val history = Tables.readCommitted(spark, stagePath, Schemas.FeedEntrySchema)
+    val (merged, stats) = etlStage(history,
+      normalizeEntries(rawBatch, batchTs, displayTz), strategy, batchTs)
+    val tmp = stagePath + "_tmp"
+    try {
+      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+      val invalid = observed(stats).getAs[Long]("invalid_pk")
+      require(invalid == 0,
+        s"$invalid rows with null/blank primary key '${Schemas.PrimaryKey}'")
+    } catch {
+      case NonFatal(e) =>
+        FileSystem.get(spark.sparkContext.hadoopConfiguration)
+          .delete(new Path(tmp), true)
+        throw e
+    }
+    Tables.swapTable(spark, stagePath)
+
+    val staged = spark.read.schema(merged.schema).parquet(stagePath)
     val filtered = filterStage(staged, cfg, batchTs)
-    val existing = readOrEmpty(spark, resultPath,
-      org.apache.spark.sql.types.StructType(
-        Schemas.FeedEntrySchema.fields :+
-          org.apache.spark.sql.types.StructField("AS_OF_DT",
-            org.apache.spark.sql.types.StringType)))
+    val existing = Tables.readCommitted(spark, resultPath,
+      StructType(Schemas.FeedEntrySchema.fields :+
+        StructField("AS_OF_DT", StringType)))
     val result = loadResult(existing, filtered, cfg)
-    result.write.mode(SaveMode.Overwrite).parquet(resultPath + "_next")
-    spark.read.parquet(resultPath + "_next")
+    val written = Observation("region_result")
+    result.observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(resultPath + "_next")
+    (spark.read.schema(result.schema).parquet(resultPath + "_next"),
+      observed(written).getAs[Long]("rows"))
   }
+
+  /** `obs`'s metrics once the action it observes has run. They arrive
+    * through the listener bus, so the wait is bounded.
+    */
+  private def observed(obs: Observation): Row =
+    Await.result(obs.future, 5.minutes)
 
   /** One region's configuration for the multi-region orchestrator. */
   final case class RegionConfig(
@@ -155,23 +213,14 @@ object JobPipeline {
       batchTs: java.sql.Timestamp): (Seq[RegionResult], Boolean) = {
     val results = regions.map { r =>
       try {
-        val out = runRegion(spark, r.rawBatch, r.stagePath, r.resultPath,
+        val (_, rows) = region(spark, r.rawBatch, r.stagePath, r.resultPath,
           r.strategy, r.filter, batchTs, r.displayTz)
-        RegionResult(r.name, success = true, out.count(), None)
+        RegionResult(r.name, success = true, rows, None)
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           RegionResult(r.name, success = false, 0L, Option(e.getMessage))
       }
     }
     (results, results.nonEmpty && results.forall(_.success))
-  }
-
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path))) spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

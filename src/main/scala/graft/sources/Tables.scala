@@ -1,7 +1,8 @@
 package graft.sources
 
 import graft.functions.Normalize
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,6 +20,54 @@ object Tables {
     */
   def readTable(spark: SparkSession, path: String, expectedCols: Seq[String]): DataFrame =
     Normalize.canonicalSelect(spark.read.parquet(path), expectedCols)
+
+  /** Crash-recoverable table swap for read-merge-overwrite writers: the
+    * freshly-written `<tablePath>_tmp` replaces the table via
+    * `table → _bak`, `_tmp → table`, `delete _bak` — at every
+    * intermediate crash point either the table or its `_bak` exists
+    * with complete pre- or post-merge contents, and [[readCommitted]]
+    * falls back to `_bak` when the main directory is missing. (A real
+    * deployment would use a transactional table format; this keeps
+    * plain parquet safe enough for the offline harness without losing
+    * the table to a crash between delete and rename, which the naive
+    * delete-then-rename swap could.)
+    */
+  private[graft] def swapTable(spark: SparkSession, tablePath: String): Unit = {
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dst = new Path(tablePath)
+    val tmp = new Path(tablePath + "_tmp")
+    val bak = new Path(tablePath + "_bak")
+    def renameOrThrow(src: Path, to: Path): Unit =
+      // Hadoop FileSystems report rename failure via `false`, not an
+      // exception — swallowing it would commit the batch with the
+      // table missing
+      if (!fs.rename(src, to))
+        throw new java.io.IOException(s"swapTable: rename $src -> $to failed")
+    // `_bak` is only cleared/repopulated while `dst` exists: on a
+    // crash-recovery replay where a previous run died between
+    // `rename(dst, bak)` and `rename(tmp, dst)`, `_bak` holds the only
+    // surviving copy and must not be deleted before `dst` is restored
+    if (fs.exists(dst)) {
+      fs.delete(bak, true)
+      renameOrThrow(dst, bak)
+    }
+    renameOrThrow(tmp, dst)
+    fs.delete(bak, true)
+    ()
+  }
+
+  /** The table [[swapTable]] last committed at `tablePath`: the table,
+    * else the `_bak` an interrupted swap left, else an empty frame of
+    * `ifAbsent`.
+    */
+  private[graft] def readCommitted(spark: SparkSession, tablePath: String,
+      ifAbsent: StructType): DataFrame = {
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(tablePath))) spark.read.parquet(tablePath)
+    else if (fs.exists(new Path(tablePath + "_bak")))
+      spark.read.parquet(tablePath + "_bak")
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ifAbsent)
+  }
 
   /** S8+S6: overwrite sink; creates the table if absent. */
   def writeTable(df: DataFrame, path: String): Unit =

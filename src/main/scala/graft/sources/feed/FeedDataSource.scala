@@ -66,6 +66,17 @@ object FeedDataSource {
       .sorted
   }
 
+  /** The JDK parser's default error handler prints `[Fatal Error] …` to
+    * stderr before it throws; a malformed poll response is skipped
+    * anyway, so this one only throws. Recoverable errors and warnings
+    * are ignored, as the default handler does after printing them.
+    */
+  private object QuietErrors extends org.xml.sax.ErrorHandler {
+    override def warning(e: org.xml.sax.SAXParseException): Unit = ()
+    override def error(e: org.xml.sax.SAXParseException): Unit = ()
+    override def fatalError(e: org.xml.sax.SAXParseException): Unit = throw e
+  }
+
   /** Parse one RSS document into entry rows (JDK DOM; tolerant of
     * missing elements — absent fields become null like feedparser).
     * Real-world feeds carry HTML entities (&nbsp; etc.) that are
@@ -81,7 +92,9 @@ object FeedDataSource {
       val sanitized = raw.replaceAll("&(?!amp;|lt;|gt;|quot;|apos;|#\\d+;|#x[0-9a-fA-F]+;)", "&amp;")
       val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
       dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-      val doc = dbf.newDocumentBuilder().parse(
+      val db = dbf.newDocumentBuilder()
+      db.setErrorHandler(QuietErrors)
+      val doc = db.parse(
         new org.xml.sax.InputSource(new java.io.StringReader(sanitized)))
       doc.getDocumentElement.normalize()
       def text(parent: org.w3c.dom.Element, tag: String): String = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Merges
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -51,56 +52,6 @@ object StreamingIngest {
     stream
       .withWatermark(eventTimeCol, watermark)
       .dropDuplicatesWithinWatermark(key)
-
-  /** Crash-recoverable table swap for the read-merge-overwrite sinks:
-    * the freshly-written `_tmp` replaces the table via
-    * `table → _bak`, `_tmp → table`, `delete _bak` — at every
-    * intermediate crash point either the table or its `_bak` exists
-    * with complete pre- or post-merge contents, and [[readTable]]
-    * falls back to `_bak` when the main directory is missing. (A real
-    * deployment would use a transactional table format; this keeps
-    * plain parquet safe enough for the offline harness without losing
-    * the table to a crash between delete and rename, which the naive
-    * delete-then-rename swap could.)
-    */
-  private[graft] def swapTable(spark: SparkSession, tablePath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(tablePath)
-    val tmp = new org.apache.hadoop.fs.Path(tablePath + "_tmp")
-    val bak = new org.apache.hadoop.fs.Path(tablePath + "_bak")
-    def renameOrThrow(src: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path): Unit =
-      // Hadoop FileSystems report rename failure via `false`, not an
-      // exception — swallowing it would commit the batch with the
-      // table missing
-      if (!fs.rename(src, to))
-        throw new java.io.IOException(s"swapTable: rename $src -> $to failed")
-    // `_bak` is only cleared/repopulated while `dst` exists: on a
-    // crash-recovery replay where a previous run died between
-    // `rename(dst, bak)` and `rename(tmp, dst)`, `_bak` holds the only
-    // surviving copy and must not be deleted before `dst` is restored
-    if (fs.exists(dst)) {
-      fs.delete(bak, true)
-      renameOrThrow(dst, bak)
-    }
-    renameOrThrow(tmp, dst)
-    fs.delete(bak, true)
-    ()
-  }
-
-  /** Read `tablePath`, falling back to the `_bak` left by an
-    * interrupted [[swapTable]]; None when neither exists.
-    */
-  private def readTable(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
-      Some(spark.read.parquet(tablePath))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(tablePath + "_bak")))
-      Some(spark.read.parquet(tablePath + "_bak"))
-    else None
-  }
 
   /** Runs `f` over `batch` evaluated exactly once, then releases it.
     *
@@ -154,7 +105,7 @@ object StreamingIngest {
 
   /** Wire a deduped stream into an SCD1-merged parquet table via
     * foreachBatch. Each micro-batch: read current table state, merge,
-    * overwrite (crash-recoverable via [[swapTable]]).
+    * overwrite (crash-recoverable via [[Tables.swapTable]]).
     */
   def scd1Sink(stream: DataFrame, tablePath: String, checkpoint: String,
       key: String, compareCols: Seq[String],
@@ -165,11 +116,10 @@ object StreamingIngest {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val hist = readTable(spark, tablePath).getOrElse(
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], batch.schema))
+        val hist = Tables.readCommitted(spark, tablePath, batch.schema)
         val merged = Merges.scd1(hist, batch, key, compareCols, notesCol = None)
         merged.write.mode("overwrite").parquet(tablePath + "_tmp")
-        swapTable(spark, tablePath)
+        Tables.swapTable(spark, tablePath)
       }
 
   /** Incremental SCD1 sink: the table is laid out in `numBuckets`
@@ -180,7 +130,7 @@ object StreamingIngest {
     * plain-parquet sink. History for untouched buckets is never read
     * either: the scan prunes to the touched partitions.
     *
-    * Crash guarantee is WEAKER than the flat sink's [[swapTable]]:
+    * Crash guarantee is WEAKER than the flat sink's [[Tables.swapTable]]:
     * dynamic partition overwrite deletes and replaces each touched
     * bucket directly, so a crash mid-commit can leave a touched bucket
     * deleted-but-not-rewritten (untouched buckets are never at risk).
@@ -692,8 +642,8 @@ object StreamingIngest {
   }
 
   /** Write the Bloom sidecar via tmp+rename (same crash discipline as
-    * [[swapTable]]: readers see the old filter or the new one, never a
-    * torn write).
+    * [[Tables.swapTable]]: readers see the old filter or the new one,
+    * never a torn write).
     */
   private[graft] def writeBloomSidecar(spark: SparkSession, path: String,
       bf: org.apache.spark.util.sketch.BloomFilter): Unit = {
@@ -875,12 +825,11 @@ object StreamingIngest {
       notesCol: Option[String] = Some("notes"),
       carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
     val spark = batch.sparkSession
-    val hist = readTable(spark, tablePath).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema(batch)))
+    val hist = Tables.readCommitted(spark, tablePath, scd2Schema(batch))
     Merges.scd2(hist, batch, key, compareCols, batchTs, notesCol, carryNotes,
         expireAbsent = batchIsSnapshot)
       .write.mode("overwrite").parquet(tablePath + "_tmp")
-    swapTable(spark, tablePath)
+    Tables.swapTable(spark, tablePath)
   }
 
   /** St6 incremental-IO variant: SCD2 history laid out in `numBuckets`

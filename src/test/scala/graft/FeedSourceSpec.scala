@@ -37,6 +37,26 @@ class FeedSourceSpec extends SparkSpec {
     assert(r.getAs[String]("published") == "Wed, 10 Jan 2024 12:00:00 +0000")
   }
 
+  test("a truncated poll file is skipped without printing to stderr") {
+    val dir = Files.createTempDirectory("feeds-truncated").toString
+    val whole = rss("F",
+      ("A", "http://t/1", "Wed, 10 Jan 2024 12:00:00 +0000", "d"),
+      ("B", "http://t/2", "Wed, 10 Jan 2024 13:00:00 +0000", "d"))
+    writeFeed(dir, "poll-001.xml", whole)
+    writeFeed(dir, "poll-002.xml", whole.take(whole.length / 2))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val rows =
+      try spark.read.format("graft.sources.feed.FeedDataSource")
+        .option("path", dir).load().collect()
+      finally System.setErr(stderr)
+    assert(err.toString("UTF-8") == "")
+    assert(rows.map(_.getAs[String]("source_file")).toSet ==
+      Set(Paths.get(dir, "poll-001.xml").toString))
+    assert(rows.length == 2)
+  }
+
   test("micro-batch stream picks up only newly arrived poll files") {
     val dir = Files.createTempDirectory("feeds-stream").toString
     writeFeed(dir, "poll-001.xml",

@@ -658,6 +658,140 @@ class PipelineSpec extends SparkSpec {
     assert(results2.exists(r => r.name == "texas" && !r.success && r.error.nonEmpty))
   }
 
+  private def rss(items: (String, String)*): String =
+    items.map { case (title, link) =>
+      s"<item><title>$title</title><link>$link</link>" +
+        "<pubDate>Sun, 28 Jan 2024 10:00:00 +0000</pubDate>" +
+        "<description>fine role</description></item>"
+    }.mkString("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
+      "<title>Feed</title>", "\n", "</channel></rss>")
+
+  private def feedDir(polls: String*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-polls")
+    polls.zipWithIndex.foreach { case (xml, i) =>
+      java.nio.file.Files.writeString(dir.resolve(f"poll-$i%03d.xml"), xml)
+    }
+    dir.toString
+  }
+
+  private def feed(dir: String) =
+    spark.read.format("graft.sources.feed.FeedDataSource").option("path", dir).load()
+
+  private def exists(path: String): Boolean =
+    new java.io.File(path).exists()
+
+  test("a null or blank key fails the region and leaves the stage as it was") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-badkey").toString
+    def raw(rows: (String, String)*) = rows.map { case (link, title) =>
+      ("DE", link, title, "2024-01-28 10:00:00", "Feed", "rss", "15min", "s")
+    }.toDF("job_title", "link", "entry_title", "published", "feed_title",
+      "reader", "time_window", "summary")
+    val cfg = FilterConfig(daysBack = 30)
+    JobPipeline.runRegion(spark, raw("l1" -> "A", "l2" -> "B"),
+      s"$tmp/stage", s"$tmp/result", Scd1, cfg, batchTs)
+    def stageRows() = spark.read.parquet(s"$tmp/stage")
+      .orderBy("link").collect().toSeq
+    val before = stageRows()
+    for (bad <- Seq(" ", null)) {
+      val e = intercept[IllegalArgumentException](JobPipeline.runRegion(spark,
+        raw("l1" -> "A2", bad -> "C", "l3" -> "D"), s"$tmp/stage",
+        s"$tmp/result", Scd1, cfg, batchTs))
+      assert(e.getMessage ==
+        "requirement failed: 1 rows with null/blank primary key 'link'")
+      assert(stageRows() == before)
+      assert(!exists(s"$tmp/stage_tmp") && !exists(s"$tmp/stage_bak"))
+    }
+  }
+
+  test("a region of only truncated poll files succeeds with zero rows") {
+    import graft.pipeline.JobPipeline.RegionConfig
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val whole = rss("A" -> "http://x/1", "B" -> "http://x/2")
+    val dir = feedDir(whole.take(whole.length / 2), whole.take(whole.length - 9))
+    val (merged, stats) = JobPipeline.etlStage(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Schemas.FeedEntrySchema),
+      JobPipeline.normalizeEntries(feed(dir), batchTs), Scd1, batchTs)
+    merged.write.parquet(s"$tmp/direct")
+    // count_if, not a bare sum: zero rows still observe 0, not null
+    val m = Await.result(stats.future, 60.seconds)
+    assert((m.getAs[Long]("rows_in"), m.getAs[Long]("invalid_pk"),
+      m.getAs[Long]("rows_out")) == ((0L, 0L, 0L)))
+
+    val (results, ok) = JobPipeline.runRegions(spark, Seq(RegionConfig("empty",
+      feed(dir), s"$tmp/stage", s"$tmp/result", Scd1, FilterConfig())), batchTs)
+    assert(ok && results.map(_.rows) == Seq(0L))
+    assert(spark.read.parquet(s"$tmp/stage").count() == 0)
+  }
+
+  test("append mode: the region's rows are the rows of result_next") {
+    import graft.pipeline.JobPipeline.RegionConfig
+    val tmp = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val cfg = FilterConfig(daysBack = 30)
+    val old = feedDir(rss("Old" -> "http://o/1"))
+    JobPipeline.runRegion(spark, feed(old), s"$tmp/a/stage", s"$tmp/a/result",
+      Scd1, cfg, batchTs)
+    // the earlier run's output is this region's existing result
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$tmp/a/result_next"),
+      java.nio.file.Paths.get(s"$tmp/result"))
+    val polls = feedDir(rss("A" -> "http://n/1", "B" -> "http://n/2"))
+    val (results, ok) = JobPipeline.runRegions(spark, Seq(RegionConfig("r",
+      feed(polls), s"$tmp/stage", s"$tmp/result", Scd1, cfg)), batchTs)
+    assert(ok)
+    assert(results.map(_.rows) ==
+      Seq(spark.read.parquet(s"$tmp/result_next").count()))
+    assert(results.head.rows == 3L)
+  }
+
+  test("runRegion parses each poll file once and observes the etl stage") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-onepass").toString
+    // four poll files, one key re-polled across two of them
+    val polls = feedDir(rss("A" -> "http://p/1", "B" -> "http://p/2"),
+      rss("A2" -> "http://p/1", "C" -> "http://p/3"), rss("D" -> "http://p/4"),
+      rss("E" -> "http://p/5"))
+    val marker = "graft-onepass-drained"
+    @volatile var scanTasks = 0
+    @volatile var drained = false
+    @volatile var etl = Seq.empty[org.apache.spark.sql.Row]
+    val stages = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val names = e.stageInfo.rddInfos.map(_.name)
+        if (names.contains("DataSourceRDD")) scanTasks += e.stageInfo.numTasks
+        if (names.contains(marker)) drained = true
+      }
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.get("etl_stage").foreach(r => etl :+= r)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(stages)
+    spark.listenerManager.register(queries)
+    try {
+      JobPipeline.runRegion(spark, feed(polls), s"$tmp/stage", s"$tmp/result",
+        Scd1, FilterConfig(daysBack = 30), batchTs)
+      // the listener bus delivers in order: once this job's stage is
+      // seen, every event of the run before it has been delivered
+      spark.sparkContext.parallelize(Seq(1), 1).setName(marker).count()
+      eventually(timeout(60.seconds))(assert(drained && etl.nonEmpty))
+    } finally {
+      spark.sparkContext.removeSparkListener(stages)
+      spark.listenerManager.unregister(queries)
+    }
+    assert(scanTasks == 4)
+    val stageRows = spark.read.parquet(s"$tmp/stage").count()
+    assert(stageRows == 5L)
+    assert(etl.map(r => (r.getAs[Long]("rows_in"), r.getAs[Long]("invalid_pk"),
+      r.getAs[Long]("rows_out"))) == Seq((stageRows, 0L, stageRows)))
+  }
+
   test("display timezone converts the published string at ingest") {
     val raw = Seq(
       ("DE", "l1", "T", "2024-01-15 12:00:00", "Feed", "rss", "15min", "s")

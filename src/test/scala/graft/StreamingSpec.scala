@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Tables
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -718,7 +719,7 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("link", "entry_title", "summary")
     mb(("l1", "T-bak", "S1")).write.parquet(path + "_bak")
     mb(("l1", "T-new", "S1")).write.parquet(path + "_tmp")
-    StreamingIngest.swapTable(spark, path)
+    Tables.swapTable(spark, path)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(path)))
@@ -735,7 +736,7 @@ class StreamingSpec extends SparkSpec {
     val path = s"$tmp/table"
     // no _tmp exists → rename(tmp, dst) returns false
     intercept[java.io.IOException] {
-      StreamingIngest.swapTable(spark, path)
+      Tables.swapTable(spark, path)
     }
   }
 
