@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Same-JVM config A/B (not part of the library surface) — the
-  * generalized form of [[ABBench]]'s hardwired knob sweep, so a new
-  * conf-guarded code variant no longer needs a bespoke harness file.
+/** Same-JVM config A/B (not part of the library surface), the one
+  * harness for timing a conf-guarded code variant against another.
   * Two config values alternate round-robin inside ONE JVM: every
   * variant sees the same host-drift windows, and per-variant min over
   * rounds isolates the config effect from the host (repo bench
@@ -14,11 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exclusion list — those are read lazily at optimization time).
   *
   * Usage: ABConf <sfDir> <rounds> <confKey> <valA> <valB> <q[,q...]>
-  *   ("" as a value means unset)
+  *   ("" as a value means unset). With a key no query reads and both
+  *   values "", the two variants are identical and the run measures
+  *   host drift alone across the named queries.
   */
 object ABConf {
-  private def forceAll(df: DataFrame): Long = ABq123.forceAll(df)
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 6,
       "usage: ABConf <sfDir> <rounds> <confKey> <valA> <valB> <queries>")
@@ -46,7 +45,7 @@ object ABConf {
       val df = SparkEntry.queries(name)(spark, sfDir)
       v.foreach(set) // re-apply: Graft.tune re-pins some session confs
       val t0 = System.nanoTime()
-      val n = try forceAll(df)
+      val n = try Bench.forceAll(df)
         catch { case e: Throwable => System.err.println(s"ERR $name: $e"); -1L }
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"  $name%-24s $dt%7.2fs rows=$n")

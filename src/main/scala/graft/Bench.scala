@@ -10,8 +10,10 @@ object Bench {
     * measured as parquet scans. Hashing each row across all columns
     * forces the full projection while still reducing to one driver row.
     * Maps aren't hashable (Spark disallows it) — serialize them first.
+    * The one forcing action of the dev mains (ABConf, Scratch,
+    * StageProf, ScaleShakeout) too.
     */
-  private def forceAll(df: DataFrame): Long = {
+  private[graft] def forceAll(df: DataFrame): Long = {
     val cols = df.schema.fields.map { f =>
       f.dataType match {
         case _: MapType => to_json(col(f.name))

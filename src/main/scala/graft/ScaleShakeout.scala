@@ -117,17 +117,7 @@ object ScaleShakeout {
       // "measured" 0.5 s at 50x that way (the whole rebuild pipeline
       // was skipped). Hashing every output column forces full
       // evaluation while still reducing to one driver row.
-      val df = op
-      val n = {
-        val cols = df.schema.fields.map { f =>
-          f.dataType match {
-            case _: org.apache.spark.sql.types.MapType => to_json(col(f.name))
-            case _ => col(f.name)
-          }
-        }
-        df.agg(count(lit(1)).as("_n"),
-          sum(xxhash64(cols.toIndexedSeq: _*)).as("_h")).head().getLong(0)
-      }
+      val n = Bench.forceAll(op)
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"$name%-22s ${dt}%8.1fs rows=$n%-10d " +
         f"spill=${spill.get / 1e6}%.0fMB peakTaskMem=${peakTaskMem.get / 1e6}%.0fMB " +

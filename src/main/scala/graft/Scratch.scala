@@ -44,17 +44,7 @@ object Scratch {
       println(s"===== $q =====")
       df.explain("formatted")
       val t0 = System.nanoTime()
-      val n = {
-        import org.apache.spark.sql.functions._
-        val cols = df.schema.fields.map { f =>
-          f.dataType match {
-            case _: org.apache.spark.sql.types.MapType => to_json(col(f.name))
-            case _ => col(f.name)
-          }
-        }
-        // same projection-forcing reduction as Bench.forceAll
-        df.agg(count(lit(1)), sum(xxhash64(cols.toIndexedSeq: _*))).head().getLong(0)
-      }
+      val n = Bench.forceAll(df)
       println(f"[time] $q ${(System.nanoTime()-t0)/1e9}%.2f s rows=$n")
       }
     }

@@ -1416,24 +1416,14 @@ object SparkEntry {
       // TWICE in each of the two corpus Filters — decontaminate plans
       // the gated corpus on both sides of its anti-join). Behind the
       // barrier each subtree tokenizes once; rows kept are identical.
-      val gated0 = docs.filter(col("source") =!= "src0")
+      // Not repartitioned after the gate either: that measured WORSE
+      // r17 (same-JVM min 0.93 vs 0.75, med 1.02 vs 0.91), the exchange
+      // + AQE boundary costing more than the warm single-task chain.
+      val gated = docs.filter(col("source") =!= "src0")
         .select(col("doc_id"), col("text"),
           explode(array(TextAnalysis.tokenCount(col("text")))).as("_tc"))
         .filter(col("_tc").between(5, 10000))
         .select(col("doc_id"), col("text"))
-      // A/B knob (graft.ABConf): repartition the GATED corpus (after
-      // the token gate, unlike the r16 tp A/B which repartitioned the
-      // raw table below it) so the anti-join + fingerprint + window
-      // chain runs wide instead of single-task. MEASURED WORSE r17
-      // (same-JVM min 0.93 vs 0.75, med 1.02 vs 0.91): the exchange +
-      // AQE boundary costs more than the warm single-task chain at
-      // this scale — same verdict as the r16 tp A/B. Default off; a
-      // production corpus scan has thousands of splits and never
-      // needs it (see Graft.tableParallel).
-      val gated =
-        if (s.conf.getOption("spark.graft.q71.par").contains("1"))
-          gated0.repartition(s.sparkContext.defaultParallelism)
-        else gated0
       val clean = Corpus.decontaminate(gated,
         docs.filter(col("source") === "src0"), "doc_id", "text", n = 3)
       val deduped = Dedup.exactDedup(clean, "doc_id", "text")

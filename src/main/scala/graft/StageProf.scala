@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Per-stage attribution of a single query's wall time (dev tool for
@@ -57,15 +56,8 @@ object StageProf {
       stages.synchronized(stages.clear())
       spark.sparkContext.addSparkListener(listener)
       val df = SparkEntry.queries(q)(spark, dir)
-      val cols = df.schema.fields.map { f =>
-        f.dataType match {
-          case _: org.apache.spark.sql.types.MapType => to_json(col(f.name))
-          case _ => col(f.name)
-        }
-      }
       val t0 = System.nanoTime()
-      val n = df.agg(count(lit(1)), sum(xxhash64(cols.toIndexedSeq: _*)))
-        .head().getLong(0)
+      val n = Bench.forceAll(df)
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(listener)
       Caches.release(spark)

@@ -235,17 +235,11 @@ object Corpus {
     // the log-prob join exchange on the SAME (a, b) key from the same
     // child, so the exchange is reused rather than the corpus being
     // re-extracted.
-    // A/B knob (graft.ABConf): persist the hashed instance stream so
-    // its two consumers (bigram histogram + log-prob join probe) read
-    // one materialization instead of re-extracting — 3 longs/row, the
-    // favorable case for the columnar cache (vs the token arrays and
-    // decimal postings that measured slower cached)
+    // Caching this instance stream for its two consumers lost its
+    // same-JVM A/B to the shared exchange below (min 1.13 cached vs
+    // 1.03 s recompute, OPTIMIZATION_r17.md).
     val inst0 = bigramsFromToks(bigramToks(df, idCol, textCol))
       .select(col("_id"), xxhash64(col("_a")).as("_a"), xxhash64(col("_b")).as("_b"))
-    val inst1 =
-      if (df.sparkSession.conf.getOption("spark.graft.lm.cacheInst").contains("1"))
-        inst0.transform(graft.Caches.own)
-      else inst0
     // ONE instance exchange for both consumers: the log-prob join
     // already shuffles the raw instances on (_a,_b); repartitioning
     // them there explicitly lets the bigram histogram aggregate run
@@ -265,7 +259,7 @@ object Corpus {
     // restores the two-subtree form.
     val shared = !df.sparkSession.conf
       .getOption("spark.graft.lm.sharedExchange").contains("0")
-    val inst = if (shared) inst1.repartition(col("_a"), col("_b")) else inst1
+    val inst = if (shared) inst0.repartition(col("_a"), col("_b")) else inst0
     // token strings hash to 64-bit keys before any exchange (the
     // dedup-posting treatment): histograms and both log-prob joins
     // shuffle 8-byte keys, never strings — same accepted ~V²/2⁶⁵

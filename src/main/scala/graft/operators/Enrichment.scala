@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Normalize, Skills}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,8 +25,6 @@ object Enrichment {
   /** Pluggable match scorer: (jobText, resumeText) → 0-100 score. */
   trait Scorer extends Serializable {
     def score(jobText: String, resumeText: String): Double
-    /** token-budget estimate, chars/4 (run_ats_enrichment.py:674-676). */
-    def tokenEstimate(s: String): Long = (s.length.toLong + 3) / 4
   }
 
   /** Deterministic stub: dictionary-skills overlap percentage — exactly
@@ -249,20 +247,27 @@ object Enrichment {
     * scorer), per partition.
     */
   def withLlmScoreBatched(df: DataFrame, textCol: String, resumeText: String,
-      scorer: RetryingScorer, batchSize: Int = 5): DataFrame = {
-    val spark = df.sparkSession
+      scorer: RetryingScorer, batchSize: Int = 5): DataFrame =
+    scoreBatches(df, textCol, batchSize)(scorer.scoreBatch(_, resumeText))
+
+  /** Appends `llm_score` to every row: each partition is cut into
+    * `batchSize`-row batches and `scoreBatch` maps a batch's texts (null
+    * as "") to one score per row, in order.
+    */
+  private def scoreBatches(df: DataFrame, textCol: String, batchSize: Int)(
+      scoreBatch: Seq[String] => Seq[Double]): DataFrame = {
     val outSchema = StructType(df.schema.fields :+
       StructField("llm_score", DoubleType, nullable = false))
     val textIdx = df.schema.fieldIndex(textCol)
     val scored = df.rdd.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         val texts = batch.map(r => Option(r.get(textIdx)).fold("")(_.toString))
-        batch.lazyZip(scorer.scoreBatch(texts, resumeText)).map {
+        batch.lazyZip(scoreBatch(texts)).map {
           (row, s) => Row.fromSeq(row.toSeq :+ s)
         }
       }
     }
-    spark.createDataFrame(scored, outSchema)
+    df.sparkSession.createDataFrame(scored, outSchema)
   }
 
   /** Declarative part of the enrichment: skills columns + match pct via
@@ -324,21 +329,6 @@ object Enrichment {
     * path; everything before/after remains Catalyst-optimizable.
     */
   def withLlmScore(df: DataFrame, textCol: String, resumeText: String,
-      scorer: Scorer, batchSize: Int = 5): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(df.schema.fields :+
-      StructField("llm_score", DoubleType, nullable = false))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val scored = df.rdd.mapPartitions { it =>
-      // grouped(batchSize) is where a production scorer would issue one
-      // API call per batch (with recursive halving on token overflow).
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val text = Option(row.get(textIdx)).fold("")(_.toString)
-          Row.fromSeq(row.toSeq :+ scorer.score(text, resumeText))
-        }
-      }
-    }
-    spark.createDataFrame(scored, outSchema)
-  }
+      scorer: Scorer, batchSize: Int = 5): DataFrame =
+    scoreBatches(df, textCol, batchSize)(_.map(scorer.score(_, resumeText)))
 }

@@ -66,26 +66,8 @@ object Merges {
     */
   def scd1(hist: DataFrame, nw: DataFrame, key: String,
       compareCols: Seq[String], notesCol: Option[String] = Some("notes"),
-      dropStatus: Boolean = true): DataFrame = {
-    val dataCols = nw.columns.filterNot(_ == key).toSeq
-    val j = joinFrames(hist, nw, key)
-    val ch = changed(compareCols, c => col(c), c => col(c + "_hist"))
-    val out = dataCols.map { c =>
-      val merged =
-        if (notesCol.contains(c))
-          when(inNew && inHist, preferNonBlank(col(c), col(c + "_hist")))
-            .when(inNew, col(c))
-            .otherwise(col(c + "_hist"))
-        else when(inNew, col(c)).otherwise(col(c + "_hist"))
-      merged.as(c)
-    }
-    val status = when(inNew && inHist && ch, lit("update"))
-      .when(inNew && inHist, lit("unchanged"))
-      .when(inNew, lit("insert"))
-      .otherwise(lit("preserve"))
-    val res = j.select((col(key) +: out) :+ status.as(StatusCol): _*)
-    if (dropStatus) res.drop(StatusCol) else res
-  }
+      dropStatus: Boolean = true): DataFrame =
+    upsert(hist, nw, key, compareCols, notesCol, _ => inHist, dropStatus)
 
   /** M2: merge_upsert (reference: src/etl/rss_feed_etl.py:194-312;
     * core/data_loader.py:115-207). Same shape as SCD1 but the
@@ -96,19 +78,30 @@ object Merges {
   def mergeUpsert(hist: DataFrame, nw: DataFrame, key: String,
       compareCols: Seq[String], notesCol: Option[String] = Some("notes"),
       preserveNotesOnlyWhenChanged: Boolean = false,
-      dropStatus: Boolean = true): DataFrame = {
+      dropStatus: Boolean = true): DataFrame =
+    upsert(hist, nw, key, compareCols, notesCol,
+      ch => if (preserveNotesOnlyWhenChanged) inHist && ch else inHist,
+      dropStatus)
+
+  /** The one body of [[scd1]] and [[mergeUpsert]]: one full-outer join,
+    * new values win, history-only keys pass through. A matched row
+    * merges its notes (new unless blank) where `mergeNotes(changed)`
+    * holds and keeps the history notes otherwise.
+    */
+  private def upsert(hist: DataFrame, nw: DataFrame, key: String,
+      compareCols: Seq[String], notesCol: Option[String],
+      mergeNotes: Column => Column, dropStatus: Boolean): DataFrame = {
     val dataCols = nw.columns.filterNot(_ == key).toSeq
     val j = joinFrames(hist, nw, key)
     val ch = changed(compareCols, c => col(c), c => col(c + "_hist"))
     val out = dataCols.map { c =>
       val merged =
-        if (notesCol.contains(c)) {
-          val preserveWhen = if (preserveNotesOnlyWhenChanged) inHist && ch else inHist
-          when(inNew && preserveWhen, preferNonBlank(col(c), col(c + "_hist")))
+        if (notesCol.contains(c))
+          when(inNew && mergeNotes(ch), preferNonBlank(col(c), col(c + "_hist")))
             .when(inNew && inHist, col(c + "_hist"))
             .when(inNew, col(c))
             .otherwise(col(c + "_hist"))
-        } else when(inNew, col(c)).otherwise(col(c + "_hist"))
+        else when(inNew, col(c)).otherwise(col(c + "_hist"))
       merged.as(c)
     }
     val status = when(inNew && inHist && ch, lit("update"))

@@ -156,7 +156,7 @@ object TfIdf {
     if (terms.isEmpty)
       return docs.select(col(idCol), lit(0.0).as("bm25"))
     val ts = graft.functions.TextAnalysis.tokens(coalesce(col(textCol), lit("")))
-    val base0 = docs.select(col(idCol), ts.as("_ts"))
+    val base = docs.select(col(idCol), ts.as("_ts"))
       .select(Seq(col(idCol), size(col("_ts")).cast(LongType).as("_dl")) ++
         terms.indices.map(i =>
           size(filter(col("_ts"), x => x === lit(terms(i))))
@@ -171,13 +171,8 @@ object TfIdf {
     // idle cores) AND the pin sits between a caller's filter and the
     // parquet scan, killing scan pushdown for filtered consumers (the
     // ScaleSpec TVF-pushdown gate: a `doc_id < 3` retrieval must prune
-    // at the scan, not decode the corpus into a cache first). Default
-    // recompute; opt in with spark.graft.bm25.cacheBase=1 for
-    // unfiltered corpus-wide scoring on a busy cluster.
-    val base =
-      if (docs.sparkSession.conf.getOption("spark.graft.bm25.cacheBase")
-          .contains("1")) base0.transform(graft.Caches.own)
-      else base0
+    // at the scan, not decode the corpus into a cache first). So it
+    // recomputes.
     val statAggs =
       Seq(sum(col("_dl")).cast(DoubleType).as("_ttok")) ++
         terms.indices.map(i =>
@@ -270,15 +265,9 @@ object TfIdf {
     // it is actually tiny, and otherwise swaps the sort-merge join for
     // a shuffled hash join by real build size (Graft.tune enables the
     // conversion) — the corpus-sized postings are never fully sorted,
-    // and no strategy is pinned by hint (SCALE.md)
-    // A/B knob (graft.ABBench): pin SHUFFLE_HASH on the df side to
-    // measure the hint-free form against the r4 hinted form in one
-    // session; production default is the plain join
-    val dfSide =
-      if (tf.sparkSession.conf.getOption("spark.graft.tfidf.dfHint")
-          .contains("shuffle_hash")) dfreq.hint("shuffle_hash")
-      else dfreq
-    val weights = tf.crossJoin(broadcast(nDocsRow)).join(dfSide, "_t")
+    // and no strategy is pinned by hint (the hinted r4 form measured no
+    // faster in a same-JVM A/B, SCALE.md round 6)
+    val weights = tf.crossJoin(broadcast(nDocsRow)).join(dfreq, "_t")
       .select(col("_id"), col("_t"),
         round(col("_tf") * smoothIdf(col("_df")), 6).as("_w"))
     val w = org.apache.spark.sql.expressions.Window

@@ -103,6 +103,17 @@ object StreamingIngest {
     }
   }
 
+  /** The skeleton every sink below shares: update mode, the checkpoint
+    * and the trigger, with `perBatch` run on each micro-batch and its id.
+    */
+  private def sink(stream: DataFrame, checkpoint: String, trigger: Trigger)(
+      perBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(perBatch)
+
   /** Wire a deduped stream into an SCD1-merged parquet table via
     * foreachBatch. Each micro-batch: read current table state, merge,
     * overwrite (crash-recoverable via [[Tables.swapTable]]).
@@ -110,17 +121,13 @@ object StreamingIngest {
   def scd1Sink(stream: DataFrame, tablePath: String, checkpoint: String,
       key: String, compareCols: Seq[String],
       trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hist = Tables.readCommitted(spark, tablePath, batch.schema)
-        val merged = Merges.scd1(hist, batch, key, compareCols, notesCol = None)
-        merged.write.mode("overwrite").parquet(tablePath + "_tmp")
-        Tables.swapTable(spark, tablePath)
-      }
+    sink(stream, checkpoint, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      val hist = Tables.readCommitted(spark, tablePath, batch.schema)
+      val merged = Merges.scd1(hist, batch, key, compareCols, notesCol = None)
+      merged.write.mode("overwrite").parquet(tablePath + "_tmp")
+      Tables.swapTable(spark, tablePath)
+    }
 
   /** Incremental SCD1 sink: the table is laid out in `numBuckets`
     * key-hash partitions, and each micro-batch rewrites ONLY the
@@ -143,32 +150,28 @@ object StreamingIngest {
   def scd1SinkBucketed(stream: DataFrame, tablePath: String, checkpoint: String,
       key: String, compareCols: Seq[String], numBuckets: Int = 64,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) => evaluatedOnce(batch) { batch =>
-        val spark = batch.sparkSession
-        def bucketOf(c: org.apache.spark.sql.Column) =
-          pmod(xxhash64(c), lit(numBuckets.toLong))
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
-        // ≤ numBuckets longs — a bounded driver-side collect
-        val touched = batch.select(bucketOf(col(key)).as("_bucket"))
-          .distinct().collect().map(_.getLong(0))
-        val hist =
-          if (exists)
-            spark.read.parquet(tablePath)
-              .filter(col("_bucket").isin(touched: _*)) // partition-pruned
-              .drop("_bucket")
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], batch.schema)
-        overwriteBuckets(
-          Merges.scd1(hist, batch, key, compareCols, notesCol = None)
-            .withColumn("_bucket", bucketOf(col(key))),
-          tablePath)
-      }}
+    sink(stream, checkpoint, trigger) { (batch, _) => evaluatedOnce(batch) { batch =>
+      val spark = batch.sparkSession
+      def bucketOf(c: org.apache.spark.sql.Column) =
+        pmod(xxhash64(c), lit(numBuckets.toLong))
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
+      // ≤ numBuckets longs — a bounded driver-side collect
+      val touched = batch.select(bucketOf(col(key)).as("_bucket"))
+        .distinct().collect().map(_.getLong(0))
+      val hist =
+        if (exists)
+          spark.read.parquet(tablePath)
+            .filter(col("_bucket").isin(touched: _*)) // partition-pruned
+            .drop("_bucket")
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], batch.schema)
+      overwriteBuckets(
+        Merges.scd1(hist, batch, key, compareCols, notesCol = None)
+          .withColumn("_bucket", bucketOf(col(key))),
+        tablePath)
+    }}
 
   /** Read a bucketed SCD1 table back without its layout column. */
   def readBucketedTable(spark: SparkSession, tablePath: String): DataFrame =
@@ -213,14 +216,10 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime("15 minutes"),
       useBloom: Boolean = true,
       bloomCapacity: Long = 8L << 20): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        dedupIngestBatch(batch, docsPath, postingsTable, idCol, textCol,
-          n, threshold, maxDocFreq, buckets, useBloom, bloomCapacity)
-      }
+    sink(stream, checkpoint, trigger) { (batch, _) =>
+      dedupIngestBatch(batch, docsPath, postingsTable, idCol, textCol,
+        n, threshold, maxDocFreq, buckets, useBloom, bloomCapacity)
+    }
 
   /** One [[dedupIngestSink]] micro-batch — public so retry behavior is
     * directly testable.
@@ -584,14 +583,10 @@ object StreamingIngest {
       buckets: Int = 32,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes"))
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mediaDedupIngestBatch(batch, mediaPath, sigTable, idCol,
-          contentCol, gx, gy, buckets, batchId = id)
-      }
+    sink(stream, checkpoint, trigger) { (batch, id) =>
+      mediaDedupIngestBatch(batch, mediaPath, sigTable, idCol,
+        contentCol, gx, gy, buckets, batchId = id)
+    }
 
   /** Streaming wrapper over [[audioDedupIngestBatch]]. */
   def audioDedupIngestSink(stream: DataFrame, mediaPath: String,
@@ -600,14 +595,10 @@ object StreamingIngest {
       buckets: Int = 32,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes"))
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        audioDedupIngestBatch(batch, mediaPath, sigTable, idCol,
-          contentCol, nFrames, buckets, batchId = id)
-      }
+    sink(stream, checkpoint, trigger) { (batch, id) =>
+      audioDedupIngestBatch(batch, mediaPath, sigTable, idCol,
+        contentCol, nFrames, buckets, batchId = id)
+    }
 
 
   /** `df.stat.bloomFilter` that survives an empty frame (Spark's
@@ -697,14 +688,10 @@ object StreamingIngest {
       cellsPath: String, centroids: DataFrame, checkpoint: String,
       idCol: String, vecCol: String, threshold: Double,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        semanticDedupIngestBatch(batch, docsPath, cellsPath, centroids,
-          idCol, vecCol, threshold)
-      }
+    sink(stream, checkpoint, trigger) { (batch, _) =>
+      semanticDedupIngestBatch(batch, docsPath, cellsPath, centroids,
+        idCol, vecCol, threshold)
+    }
 
   /** One [[semanticDedupIngestSink]] micro-batch — public so replay
     * and pruning behavior are directly testable.
@@ -963,18 +950,14 @@ object StreamingIngest {
       batchIsSnapshot: Boolean = false,
       notesCol: Option[String] = Some("notes"), carryNotes: Boolean = true,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (batchIsSnapshot)
-          scd2MergeBatchBucketedSnapshot(tablePath, batch, key, compareCols,
-            batchTs(id), numBuckets, notesCol, carryNotes)
-        else
-          scd2MergeBatchBucketed(tablePath, batch, key, compareCols, batchTs(id),
-            numBuckets, notesCol, carryNotes)
-      }
+    sink(stream, checkpoint, trigger) { (batch, id) =>
+      if (batchIsSnapshot)
+        scd2MergeBatchBucketedSnapshot(tablePath, batch, key, compareCols,
+          batchTs(id), numBuckets, notesCol, carryNotes)
+      else
+        scd2MergeBatchBucketed(tablePath, batch, key, compareCols, batchTs(id),
+          numBuckets, notesCol, carryNotes)
+    }
 
   /** St6: wire a deduped stream into an SCD2-versioned parquet table via
     * foreachBatch — the streaming form of batch M3 ([[Merges.scd2]]),
@@ -994,14 +977,10 @@ object StreamingIngest {
       notesCol: Option[String] = Some("notes"),
       carryNotes: Boolean = true,
       trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        scd2MergeBatch(tablePath, batch, key, compareCols, batchTs(id),
-          batchIsSnapshot, notesCol, carryNotes)
-      }
+    sink(stream, checkpoint, trigger) { (batch, id) =>
+      scd2MergeBatch(tablePath, batch, key, compareCols, batchTs(id),
+        batchIsSnapshot, notesCol, carryNotes)
+    }
 
   /** Custom keyed state via flatMapGroupsWithState: emit a row only
     * when a key's latest version CHANGES (the streaming form of the

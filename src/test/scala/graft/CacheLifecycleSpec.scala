@@ -161,11 +161,7 @@ class CacheLifecycleSpec extends SparkSpec {
       .collect()
     Corpus.contaminationReportBloom(docs, docs.limit(2), "doc_id", "text", 3)
       .collect()
-    // r17: bm25's OPT-IN base pin (terms+2 longs per doc; default off
-    // to keep scan pushdown for filtered consumers) must sweep clean
-    spark.conf.set("spark.graft.bm25.cacheBase", "1")
     graft.operators.TfIdf.bm25(docs, "doc_id", "text", "alpha beta").collect()
-    spark.conf.unset("spark.graft.bm25.cacheBase")
     Caches.release(spark)
     assert(cacheEmpty, "a Corpus operator's pinned intermediate survived release")
   }

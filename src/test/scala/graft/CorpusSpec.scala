@@ -692,4 +692,24 @@ class CorpusSpec extends SparkSpec {
       assert(shared.nonEmpty)
     }
   }
+
+  test("LM scorers: the executed plan reuses the one instance exchange") {
+    // equal rows alone would not notice a regression that re-derives
+    // the corpus (scan+tokenize+explode) for the histogram instead of
+    // reading the join probe's instance exchange: pin the reuse in the
+    // executed adaptive plan, as EnrichmentBoundarySpec does for
+    // topTerms' tf exchange
+    val docs = (1L to 30L).map(i =>
+      (i, s"alpha beta gamma delta tok$i alpha beta")).toDF("doc_id", "text")
+    for ((op, q) <- Seq(
+        "uni" -> Corpus.unigramLmScore(docs, "doc_id", "text"),
+        "bi" -> Corpus.bigramLmScore(docs, "doc_id", "text"))) {
+      q.collect()
+      val plan = q.queryExecution.executedPlan.toString
+      graft.Caches.release(spark)
+      assert(plan.contains("ShuffleQueryStage") &&
+        plan.contains("ReusedExchange"),
+        s"$op: instance exchange not reused:\n$plan")
+    }
+  }
 }
