@@ -500,6 +500,16 @@ object TextAnalysis {
     * readable reference form the oracle generator mirrors and the
     * spec cross-checks against the native kernel. Do not use on a hot
     * path (see [[langIdWideFromTokens]]).
+    *
+    * The refinement tier is first-match over the script winner: one
+    * flat CASE with a branch per [[ScriptRefinements]] prior, as in
+    * the kernel's loop (refine by the first matching prior, then
+    * break) and the oracle's `CASE WHEN sl = '<prior>' … ELSE sl END`.
+    * The script argmax is referenced once per branch. A fold that
+    * wraps its accumulator as `when(acc === prior, …).otherwise(acc)`
+    * references it twice and doubles the tree with every group —
+    * 2^8 copies of the 37-way argmax, enough to exhaust the driver
+    * heap while Catalyst coerces and names the unaliased column.
     */
   def langIdWideComposed(text: Column): Column =
     langIdWideComposedFromTokens(text, tokens(coalesce(text, lit(""))))
@@ -520,19 +530,23 @@ object TextAnalysis {
     val nToks = size(toks)
     // within-script refinement: when the script argmax lands on a
     // refined prior, distinctive-letter counts pick the language
-    // inside that script (all-zero → the prior); see ScriptRefinements
-    val scriptLang = ScriptRefinements.foldLeft(argmaxLang(scriptHits, sMax)) {
-      case (acc, (prior, cands)) =>
-        val counts = cands.map { case (l, chars) =>
-          l -> length(regexp_replace(t, s"[^$chars]", ""))
-        }
-        // reduceLeft, not greatest(...): single-candidate groups
-        // (hi → mr) would fail greatest's 2-arg minimum
-        val rMax = counts.map(_._2).reduceLeft((a, b) => greatest(a, b))
-        when(acc === prior,
-          when(rMax === 0, lit(prior)).otherwise(argmaxLang(counts, rMax)))
-          .otherwise(acc)
+    // inside that script (all-zero → the prior); see ScriptRefinements.
+    // One flat CASE, first match wins: scriptArg is referenced once per
+    // branch (see langIdWideComposed)
+    val scriptArg = argmaxLang(scriptHits, sMax)
+    val refined = ScriptRefinements.map { case (prior, cands) =>
+      val counts = cands.map { case (l, chars) =>
+        l -> length(regexp_replace(t, s"[^$chars]", ""))
+      }
+      // reduceLeft, not greatest(...): single-candidate groups
+      // (hi → mr) would fail greatest's 2-arg minimum
+      val rMax = counts.map(_._2).reduceLeft((a, b) => greatest(a, b))
+      (scriptArg === prior) ->
+        when(rMax === 0, lit(prior)).otherwise(argmaxLang(counts, rMax))
     }
+    val scriptLang = refined.tail.foldLeft(when(refined.head._1, refined.head._2)) {
+      case (acc, (isPrior, lang)) => acc.when(isPrior, lang)
+    }.otherwise(scriptArg)
     val lang = when(useScript, scriptLang)
       .otherwise(when(hMax === 0, lit("und"))
         .otherwise(argmaxLang(stopHits, hMax)))
