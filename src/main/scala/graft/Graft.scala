@@ -83,74 +83,10 @@ object Graft {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-    graft.expr.CosineSimilarity.register(spark)
-    graft.expr.VecDistance.register(spark)
-    graft.expr.VecArgmin.register(spark)
-    graft.expr.WordGramHashes.register(spark)
-    graft.expr.MinHashSignature.register(spark)
-    graft.expr.WordShingles.register(spark)
-    graft.expr.SimHash60.register(spark)
-    graft.expr.WinnowFingerprints.register(spark)
-    graft.expr.BloomMightContain.register(spark)
-    graft.expr.KmvSketchAgg.register(spark)
-    graft.expr.OrderedPairs.register(spark)
-    graft.expr.OrderedPairsGen.register(spark)
-    graft.expr.PackBytes.register(spark)
-    graft.expr.PostingPairsAgg.register(spark)
-    graft.expr.NfcNormalize.register(spark)
-    graft.expr.ImageMeta.register(spark)
-    graft.expr.PixelStats.register(spark)
-    graft.expr.PixelGridSig.register(spark)
-    graft.expr.LangIdWide.register(spark)
-    graft.expr.AudioMeta.register(spark)
-    graft.expr.AudioStats.register(spark)
-    graft.expr.AudioEnvSig.register(spark)
-    graft.expr.SigL1.register(spark)
-    graft.expr.AviFrames.register(spark)
-    graft.expr.Mp4Frames.register(spark)
-    graft.expr.GifFrames.register(spark)
-    graft.expr.H264Frames.register(spark)
-    graft.expr.VideoMeta.register(spark)
-    graft.expr.WarcRecords.register(spark)
-    graft.expr.RtfToText.register(spark)
-    graft.expr.HttpText.register(spark)
-    graft.expr.HttpBody.register(spark)
-    graft.expr.EpubText.register(spark)
-    graft.expr.PdfText.register(spark)
-    graft.expr.DocxText.register(spark)
-    graft.expr.DocText.register(spark)
-    graft.expr.BpeEncode.register(spark)
-    graft.expr.ExifOrientation.register(spark)
-    graft.expr.OrientPixels.register(spark)
-    graft.expr.ResizePixels.register(spark)
-    graft.expr.ResamplePcm.register(spark)
-    graft.expr.AudioDecodeExpr.register(spark)
-    graft.expr.AudioTags.register(spark)
-    graft.expr.ImageTags.register(spark)
-    graft.expr.VideoTags.register(spark)
-    graft.expr.TarEntries.register(spark)
-    graft.expr.ZipEntries.register(spark)
-    graft.expr.ArEntries.register(spark)
-    graft.expr.CpioEntries.register(spark)
-    graft.expr.Bunzip2Expr.register(spark)
-    graft.expr.UnxzExpr.register(spark)
-    graft.expr.UnzstdExpr.register(spark)
-    graft.expr.UnLz4Expr.register(spark)
-    graft.expr.UnSnappyExpr.register(spark)
-    graft.expr.SevenZip.register(spark)
-    graft.expr.Decompress.register(spark)
-    graft.expr.DocumentText.register(spark)
-    graft.expr.OfficeText.register(spark)
-    graft.expr.LegacyOffice.register(spark)
-    graft.expr.OdfText.register(spark)
-    graft.expr.EmlText.register(spark)
-    graft.expr.MsgText.register(spark)
-    graft.expr.Tnef.register(spark)
-    graft.expr.VcardText.register(spark)
-    graft.expr.LatexText.register(spark)
-    graft.expr.CmsSketchAgg.register(spark)
-    graft.expr.KmvQuantileAgg.register(spark)
-    graft.plans.TableFunctions.register(spark)
+    // the native functions and TVFs this session's registries lack: all
+    // of them on a session built without spark.sql.extensions, none on
+    // one built with GraftExtensions (or already tuned)
+    graft.plans.GraftExtensions.registerMissing(spark)
     // per-session injection of the opt-in AQP rewrite (a no-op unless
     // spark.graft.approxCountDistinct is set) — works on sessions
     // built without spark.sql.extensions, e.g. the driver's own.

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,8 +85,4 @@ object AudioDecodeExpr {
       return Mp3Decode.decode(b)
     null
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => AudioDecodeExpr(exprs(0)), "built-in")
 }

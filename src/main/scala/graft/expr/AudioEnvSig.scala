@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -149,12 +148,4 @@ object AudioEnvSig {
     new GenericInternalRow(Array[Any](nFrames.toLong,
       new GenericArrayData(env), ehash))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => AudioEnvSig(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "nFrames", exprs(1))
-        else 64),
-      "built-in")
 }

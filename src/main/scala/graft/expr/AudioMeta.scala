@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -317,9 +316,4 @@ object AudioMeta {
       ((b(o + 5) & 0xffL) << 16) | ((b(o + 6) & 0xffL) << 8) | (b(o + 7) & 0xffL)
     row("flac", ch, rate, bits, frames)
   }
-
-  /** Register in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => AudioMeta(exprs(0)), "built-in")
 }

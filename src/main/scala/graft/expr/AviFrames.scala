@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -139,12 +138,4 @@ object AviFrames {
     while (i < out.size) { arr(i) = out.get(i); i += 1 }
     new GenericArrayData(arr)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => AviFrames(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxFrames", exprs(1))
-        else 64),
-      "built-in")
 }

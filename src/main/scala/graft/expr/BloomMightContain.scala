@@ -76,12 +76,6 @@ case class BloomMightContain(left: Expression, right: Expression)
 object BloomMightContain {
   val FunctionName = "graft_bloom_contains"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => BloomMightContain(exprs(0), exprs(1)),
-      "built-in")
-
   /** Serialize a built filter for embedding as a binary literal. */
   def toBytes(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -43,8 +42,4 @@ case class Bunzip2Expr(child: Expression) extends UnaryExpression {
 
 object Bunzip2Expr {
   val FunctionName = "graft_bunzip2"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => Bunzip2Expr(exprs(0)), "built-in")
 }

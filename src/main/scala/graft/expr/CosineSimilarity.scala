@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -96,13 +95,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   val FunctionName = "graft_cosine_sim"
-
-  /** Register in the session's function registry (idempotent) so both
-    * `call_function` and `spark.sql` can resolve it.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,11 +182,4 @@ object CpioEntries {
     while (i < out.size) { arr(i) = out.get(i); i += 1 }
     new GenericArrayData(arr)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => CpioEntries(exprs(0),
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxEntries", exprs(1))
-        else 4096), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,11 +87,4 @@ object DocxText {
   }
 
   def parse(b: Array[Byte]): UTF8String = parse(b, includeTables = false)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => DocxText(exprs.head,
-        exprs.length > 1 &&
-          ExprArgs.intLit(FunctionName, "includeTables", exprs(1)) != 0),
-      "built-in")
 }

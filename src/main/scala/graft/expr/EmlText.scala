@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -664,20 +663,5 @@ object EmlText {
     var i = 0
     while (i < out.size) { arr(i) = out.get(i); i += 1 }
     new GenericArrayData(arr)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => EmlTextExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MboxName, exprs => MboxMessages(exprs(0),
-        if (exprs.length > 1)
-          ExprArgs.intLit(MboxName, "max", exprs(1))
-        else 4096), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AttachmentsName, exprs => EmlAttachments(exprs(0),
-        if (exprs.length > 1)
-          ExprArgs.intLit(AttachmentsName, "max", exprs(1))
-        else 256), "built-in")
   }
 }

@@ -2,7 +2,6 @@ package graft.expr
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -186,8 +185,4 @@ object EpubText {
     }
     if (sb.isEmpty) null else UTF8String.fromString(sb.toString)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => EpubText(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -357,12 +356,4 @@ object GifFrames {
       x += 1
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => GifFrames(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxFrames", exprs(1))
-        else 64),
-      "built-in")
 }

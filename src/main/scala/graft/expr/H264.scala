@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -421,11 +420,4 @@ object H264Frames {
     val fs = H264.frames(b, maxFrames)
     if (fs == null) null else new GenericArrayData(fs.asInstanceOf[Array[Any]])
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => H264Frames(exprs(0),
-        ExprArgs.intLit(FunctionName, "maxFrames", exprs(1))),
-      "built-in")
 }

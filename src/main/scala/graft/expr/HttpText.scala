@@ -2,7 +2,6 @@ package graft.expr
 
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -276,8 +275,4 @@ object HttpText {
       UTF8String.fromString(csName),
       UTF8String.fromString(text)))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => HttpText(exprs.head), "built-in")
 }

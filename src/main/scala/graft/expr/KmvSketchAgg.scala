@@ -2,7 +2,6 @@ package graft.expr
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -145,11 +144,4 @@ object KmvSketchAgg {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => KmvSketchAgg(exprs(0),
-        ExprArgs.intLit(FunctionName, "k", exprs(1))),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -239,8 +238,4 @@ object LangIdWide {
         UTF8String.fromString(stopLangs(hArg)),
         round4(hMax.toDouble / math.max(n, 1))))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => LangIdWide(exprs(0), exprs(1)), "built-in")
 }

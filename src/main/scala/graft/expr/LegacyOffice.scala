@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -558,12 +557,5 @@ object LegacyOffice {
         emitParagraphs(new String(b, ds, de - ds, Cp1252), out)
       o = de
     }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      XlsName, exprs => XlsTextExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PptName, exprs => PptTextExpr(exprs(0)), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -82,14 +81,4 @@ object MinHashSignature {
     val b = Array.fill(k)(next())
     (a, b)
   }
-
-  /** Register so `call_function`/SQL can build it; second argument must
-    * be an integer literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => MinHashSignature(exprs(0),
-        ExprArgs.intLit(FunctionName, "numHashes", exprs(1))),
-      "built-in")
 }

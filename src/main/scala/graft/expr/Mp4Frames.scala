@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -237,12 +236,4 @@ object Mp4Frames {
     while (i < out.size) { arr(i) = out.get(i); i += 1 }
     new GenericArrayData(arr)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => Mp4Frames(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxFrames", exprs(1))
-        else 64),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -217,15 +216,5 @@ object MsgText {
     var i = 0
     while (i < rows.size) { arr(i) = rows.get(i); i += 1 }
     new GenericArrayData(arr)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => MsgTextExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AttachmentsName, exprs => MsgAttachments(exprs(0),
-        if (exprs.length > 1)
-          ExprArgs.intLit(AttachmentsName, "max", exprs(1))
-        else 256), "built-in")
   }
 }

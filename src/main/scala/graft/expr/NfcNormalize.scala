@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,8 +61,4 @@ object NfcNormalize {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => NfcNormalize(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow, UnaryExpression}
@@ -85,8 +84,4 @@ case class OrderedPairsGen(child: Expression)
 
 object OrderedPairsGen {
   val FunctionName = "graft_pairs_gen"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => OrderedPairsGen(exprs.head), "built-in")
 }

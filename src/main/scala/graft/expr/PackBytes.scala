@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -73,13 +72,4 @@ case class PackBytes(child: Expression, width: Int, bigEndian: Boolean)
 
 object PackBytes {
   val FunctionName = "graft_pack_bytes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => PackBytes(exprs(0),
-        ExprArgs.intLit(FunctionName, "width", exprs(1)),
-        exprs.length > 2 && ExprArgs.intLit(FunctionName, "bigEndian",
-          exprs(2)) != 0),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -145,12 +144,4 @@ object PixelGridSig {
     InternalRow(UTF8String.fromString(d.fmt), d.w, d.h,
       new GenericArrayData(sigArr), hash, dhash)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => PixelGridSig(exprs(0),
-        ExprArgs.intLit(FunctionName, "gx", exprs(1)),
-        ExprArgs.intLit(FunctionName, "gy", exprs(2))),
-      "built-in")
 }

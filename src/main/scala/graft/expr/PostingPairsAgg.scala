@@ -2,7 +2,6 @@ package graft.expr
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -192,11 +191,4 @@ object PostingPairsAgg {
       if (ids.length > 64) { ids = new Array[Long](8); ns = new Array[Int](8) }
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => PostingPairsAgg(exprs(0), exprs(1),
-        ExprArgs.longLit(FunctionName, "maxDocFreq", exprs(2))),
-      "built-in")
 }

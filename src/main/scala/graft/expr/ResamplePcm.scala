@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -143,8 +142,4 @@ object ResamplePcm {
     }
     out.array()
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => ResamplePcm(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -85,13 +84,6 @@ object SevenZip {
     StructField("size", LongType, nullable = false),
     StructField("content", BinaryType, nullable = false)))
   val Schema: DataType = ArrayType(EntrySchema, containsNull = false)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => SevenZipEntries(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxEntries", exprs(1))
-        else 4096), "built-in")
 
   private object Bad extends RuntimeException {
     override def fillInStackTrace(): Throwable = this

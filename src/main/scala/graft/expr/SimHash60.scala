@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -73,8 +72,4 @@ object SimHash60 {
   val Bits = 60
   private val SeedSuffix = "#0".getBytes(java.nio.charset.StandardCharsets.UTF_8)
   val FunctionName = "graft_simhash"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => SimHash60(exprs.head), "built-in")
 }

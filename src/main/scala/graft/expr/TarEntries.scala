@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -294,12 +293,4 @@ object TarEntries {
     val stored = octal(b, o + 148, 8)
     stored > 0 && stored == sum
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => TarEntries(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxEntries", exprs(1))
-        else 4096),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -43,8 +42,4 @@ case class UnSnappyExpr(child: Expression) extends UnaryExpression {
 
 object UnSnappyExpr {
   val FunctionName = "graft_unsnappy"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => UnSnappyExpr(exprs(0)), "built-in")
 }

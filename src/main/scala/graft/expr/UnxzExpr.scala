@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -42,8 +41,4 @@ case class UnxzExpr(child: Expression) extends UnaryExpression {
 
 object UnxzExpr {
   val FunctionName = "graft_unxz"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => UnxzExpr(exprs(0)), "built-in")
 }

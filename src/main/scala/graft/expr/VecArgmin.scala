@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -185,13 +184,5 @@ object VecArgmin {
     }
     if (!any) null
     else new GenericInternalRow(Array[Any](bestId, bestScore))
-  }
-
-  /** Register both forms in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ArgmaxCosName, exprs => VecArgmaxCos(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ArgminL2Name, exprs => VecArgminL2(exprs(0), exprs(1)), "built-in")
   }
 }

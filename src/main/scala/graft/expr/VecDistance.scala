@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -107,12 +106,4 @@ case class DotProduct(left: Expression, right: Expression) extends VecKernel {
 object VecDistance {
   val L2SqName = "graft_l2sq"
   val DotName = "graft_dot"
-
-  /** Register both kernels in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      L2SqName, exprs => L2SqDistance(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-  }
 }

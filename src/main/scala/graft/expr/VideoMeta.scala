@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -253,9 +252,4 @@ object VideoMeta {
     InternalRow(UTF8String.fromString("mp4"), w, h,
       duration * 1000L / timescale, timescale.toInt)
   }
-
-  /** Register in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => VideoMeta(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -223,12 +222,4 @@ object WarcRecords {
     if (i >= 0 && i < b.length && b(i) == '\r') i -= 1
     i + 1
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => WarcRecords(exprs.head,
-        if (exprs.length > 1)
-          ExprArgs.intLit(FunctionName, "maxRecords", exprs(1))
-        else 4096),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -96,12 +95,4 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
 
 object WinnowFingerprints {
   val FunctionName = "graft_winnow"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => WinnowFingerprints(exprs(0),
-        ExprArgs.intLit(FunctionName, "k", exprs(1)),
-        ExprArgs.intLit(FunctionName, "w", exprs(2))),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -78,14 +77,4 @@ case class WordGramHashes(child: Expression, k: Int)
 
 object WordGramHashes {
   val FunctionName = "graft_word_gram_hashes"
-
-  /** Register in the session registry (idempotent). k comes in as a
-    * literal int argument.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => WordGramHashes(exprs(0),
-        ExprArgs.intLit(FunctionName, "k", exprs(1))),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -67,11 +66,4 @@ case class WordShingles(child: Expression, n: Int)
 
 object WordShingles {
   val FunctionName = "graft_shingles"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => WordShingles(exprs(0),
-        ExprArgs.intLit(FunctionName, "n", exprs(1))),
-      "built-in")
 }

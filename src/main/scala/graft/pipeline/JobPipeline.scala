@@ -8,8 +8,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** The reference's pipeline wiring (SURVEY.md §3) as one lazy plan per
@@ -208,19 +211,70 @@ object JobPipeline {
     * aggregates statuses), and fold per-region success + result rows
     * into one summary. Returns (per-region results, all-succeeded) —
     * the boolean is the reference's exit code.
+    *
+    * Regions run concurrently: their jobs are small and mostly
+    * coalesced to a task or two, so one region alone leaves most cores
+    * idle. Regions that share a stage or result path form one lane and
+    * run in config order, so a later one merges over the earlier one as
+    * in a serial loop; lanes run on a pool of
+    * `min(lanes, defaultParallelism)` threads. Results come back in
+    * config order. A region's non-fatal failure is its own
+    * `success = false` and leaves the other regions alone; any other
+    * throwable reaches the caller once every lane has stopped.
+    *
+    * The pool is created on the calling thread for this call only, so
+    * its threads inherit the caller's Spark local properties (job
+    * group, scheduler pool, job tags) and active session.
     */
   def runRegions(spark: SparkSession, regions: Seq[RegionConfig],
       batchTs: java.sql.Timestamp): (Seq[RegionResult], Boolean) = {
-    val results = regions.map { r =>
-      try {
+    def run(i: Int): (Int, RegionResult) = {
+      val r = regions(i)
+      i -> (try {
         val (_, rows) = region(spark, r.rawBatch, r.stagePath, r.resultPath,
           r.strategy, r.filter, batchTs, r.displayTz)
         RegionResult(r.name, success = true, rows, None)
       } catch {
         case NonFatal(e) =>
           RegionResult(r.name, success = false, 0L, Option(e.getMessage))
-      }
+      })
     }
+    val ls = lanes(spark, regions)
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(ls.size, spark.sparkContext.defaultParallelism)))
+    val outcomes = try {
+      // invokeAll returns once every lane is done; a FutureTask completes
+      // on any throwable, so a fatal error cannot leave it waiting
+      pool.invokeAll(ls.map { lane =>
+        (() => lane.map(run)): Callable[Seq[(Int, RegionResult)]]
+      }.asJava).asScala.toSeq
+    } finally pool.shutdownNow()
+    val results = outcomes.flatMap { f =>
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
+    }.sortBy(_._1).map(_._2)
     (results, results.nonEmpty && results.forall(_.success))
+  }
+
+  /** `regions`' indices grouped into lanes: regions that share a stage or
+    * result path, directly or through another region, are one lane, in
+    * config order; lanes are ordered by their first region. Paths are
+    * compared fully qualified, so `/x` and `file:/x` are one table; a
+    * path that cannot be qualified is compared as written (its region
+    * fails on its own).
+    */
+  private def lanes(spark: SparkSession,
+      regions: Seq[RegionConfig]): Seq[Seq[Int]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def table(p: String): String = Try {
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path).toString
+    }.getOrElse(p)
+    regions.indices.foldLeft(Vector.empty[(Set[String], Vector[Int])]) {
+      (lanes, i) =>
+        val tables = Set(regions(i).stagePath, regions(i).resultPath).map(table)
+        val (shared, apart) = lanes.partition(_._1.exists(tables))
+        apart :+ ((tables ++ shared.flatMap(_._1),
+          shared.flatMap(_._2).sorted :+ i))
+    }.map(_._2).sortBy(_.head)
   }
 }

@@ -1,9 +1,10 @@
 package graft.plans
 
 import graft.expr.{AudioDecodeExpr, AudioEnvSig, AudioMeta, AudioStats, AudioTags, ImageTags, VideoTags, TarEntries, ZipEntries, ArEntries, CpioEntries, SevenZip, SevenZipEntries, Bunzip2Expr, UnxzExpr, UnzstdExpr, UnLz4Expr, UnSnappyExpr, DecompressExpr, Decompress, DocText, DocTextExpr, DocumentText, DocumentTextExpr, OfficeText, PptxText, XlsxText, LegacyOffice, XlsTextExpr, PptTextExpr, OdfText, OdfTextExpr, EmlText, EmlTextExpr, MboxMessages, EmlAttachments, MsgText, MsgTextExpr, MsgAttachments, Tnef, TnefTextExpr, TnefAttachments, VcardText, VcardTextExpr, IcsTextExpr, LatexText, LatexTextExpr, AviFrames, BpeEncode, DocxText, ExifOrientation, OrientPixels, EpubText, HttpBody, HttpText, Mp4Frames, H264Frames, PdfText, ResamplePcm, ResizePixels, RtfToText, SigL1, VideoMeta, WarcRecords, GifFrames, BloomMightContain, CmsSketchAgg, CosineSimilarity, DotProduct, ExprArgs, ImageMeta, KmvQuantileAgg, KmvSketchAgg, L2SqDistance, LangIdWide, MinHashSignature, NfcNormalize, OrderedPairs, OrderedPairsGen, PackBytes, PixelGridSig, PixelStats, PostingPairsAgg, SimHash60, VecArgmaxCos, VecArgmin, VecArgminL2, VecDistance, WinnowFingerprints, WordGramHashes, WordShingles}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-extension entry point: registers the engine's native
   * expressions in the session's base function registry at
@@ -13,18 +14,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
   *
-  * `Graft.tune` remains the imperative per-session equivalent (and
-  * additionally pins the coerce-semantics confs, which an extension
-  * cannot set).
+  * `Graft.tune` installs the same lists in sessions built without the
+  * extension ([[GraftExtensions.registerMissing]]) and additionally
+  * pins the coerce-semantics confs, which an extension cannot set.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // whole-operator SQL surfaces (asof/range join, BM25) as TVFs
-    TableFunctions.functions.foreach { case (name, builder) =>
-      ext.injectTableFunction((FunctionIdentifier(name),
-        new ExpressionInfo(TableFunctions.getClass.getName, name), builder))
-    }
+    GraftExtensions.tableFunctions.foreach(ext.injectTableFunction)
     // opt-in AQP: COUNT(DISTINCT) → KMV sketch estimate when
     // spark.graft.approxCountDistinct=true (no-op otherwise)
     ext.injectOptimizerRule(_ => ApproxCountDistinctRewrite)
@@ -167,7 +164,9 @@ object GraftExtensions {
         exprs => PdfText(exprs.head)),
       (FunctionIdentifier(DocxText.FunctionName),
         info(DocxText.FunctionName, classOf[DocxText]),
-        exprs => DocxText(exprs.head)),
+        exprs => DocxText(exprs.head,
+          exprs.length > 1 &&
+            ExprArgs.intLit(DocxText.FunctionName, "includeTables", exprs(1)) != 0)),
       (FunctionIdentifier(BpeEncode.FunctionName),
         info(BpeEncode.FunctionName, classOf[BpeEncode]),
         exprs => BpeEncode(exprs(0), exprs(1))),
@@ -325,4 +324,29 @@ object GraftExtensions {
         exprs => KmvQuantileAgg(exprs(0), exprs(1),
           ExprArgs.intLit(KmvQuantileAgg.FunctionName, "k", exprs(2))))
     )
+
+  /** Whole-operator SQL surfaces (asof/range join, BM25, semantic
+    * dedup) as table-valued functions.
+    */
+  val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] =
+    TableFunctions.functions.map { case (name, builder) =>
+      (FunctionIdentifier(name),
+        new ExpressionInfo(TableFunctions.getClass.getName, name), builder)
+    }
+
+  /** Registers in `spark`'s own registries each of [[functions]] and
+    * [[tableFunctions]] they lack. Names already there (injected at
+    * session build, or by an earlier call) are left as they are, so a
+    * repeat call registers and logs nothing.
+    */
+  def registerMissing(spark: SparkSession): Unit = {
+    val fns = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!fns.functionExists(id)) fns.registerFunction(id, info, builder)
+    }
+    val tvfs = spark.sessionState.tableFunctionRegistry
+    tableFunctions.foreach { case (id, info, builder) =>
+      if (!tvfs.functionExists(id)) tvfs.registerFunction(id, info, builder)
+    }
+  }
 }

@@ -43,13 +43,6 @@ object TableFunctions {
     ("graft_bm25", bm25 _),
     ("graft_semantic_dedup", semanticDedup _))
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.tableFunctionRegistry
-    functions.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
   private def table(view: String): DataFrame = SparkSession.active.table(view)
 
   private def strArg(fn: String, args: Seq[Expression], pos: Int): String = {

@@ -2813,9 +2813,9 @@ class ExprConfigSpec extends SparkSpec {
     // The extension (plans.GraftExtensions) must make EVERY native
     // expression resolvable in pure-SQL sessions. A fresh session
     // state starts with exactly the extension-injected registry;
-    // tune() then re-registers the full temp-function list. Any
-    // graft_* name that APPEARS after tune is one the extension
-    // missed — the exact drift class this guards against.
+    // tune() then registers whatever it finds missing. Any graft_*
+    // name that APPEARS after tune is one the extension missed — the
+    // exact drift class this guards against.
     val fresh = spark.newSession()
     def graftNames(s: org.apache.spark.sql.SparkSession): Set[String] =
       s.sessionState.functionRegistry.listFunction()
@@ -2825,6 +2825,44 @@ class ExprConfigSpec extends SparkSpec {
     val missed = graftNames(fresh) -- fromExtension
     assert(missed.isEmpty,
       s"registered by Graft.tune but missing from GraftExtensions.functions: $missed")
+  }
+
+  test("a second tune leaves every registered graft function as it was") {
+    // spark is a Graft.session(): GraftExtensions registered the
+    // functions at session build, so tune has nothing to register
+    import graft.plans.GraftExtensions
+    def infos() =
+      GraftExtensions.functions.map { case (id, _, _) =>
+        id -> spark.sessionState.functionRegistry.lookupFunction(id)
+      } ++ GraftExtensions.tableFunctions.map { case (id, _, _) =>
+        id -> spark.sessionState.tableFunctionRegistry.lookupFunction(id)
+      }
+    val before = infos()
+    assert(before.nonEmpty && before.forall(_._2.isDefined))
+    Graft.tune(spark)
+    infos().zip(before).foreach { case ((id, now), (_, was)) =>
+      assert(now.get eq was.get, s"$id was registered again")
+    }
+  }
+
+  test("tune registers every graft function a session's registries lack") {
+    import graft.plans.GraftExtensions
+    val bare = spark.newSession()
+    val fns = bare.sessionState.functionRegistry
+    val tvfs = bare.sessionState.tableFunctionRegistry
+    GraftExtensions.functions.foreach(f => fns.dropFunction(f._1))
+    GraftExtensions.tableFunctions.foreach(f => tvfs.dropFunction(f._1))
+    assert(!fns.functionExists(GraftExtensions.functions.head._1))
+    Graft.tune(bare)
+    GraftExtensions.functions.foreach(f => assert(fns.functionExists(f._1), f._1))
+    GraftExtensions.tableFunctions.foreach(f =>
+      assert(tvfs.functionExists(f._1), f._1))
+    assert(bare.sql(
+      "SELECT graft_cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D))")
+      .collect()(0).getDouble(0) == 1.0)
+    // the optional second argument of graft_docx_text (q187) resolves
+    assert(bare.sql("SELECT graft_docx_text(cast(null as binary), 1)")
+      .collect()(0).isNullAt(0))
   }
 
   test("TVF SQL surfaces match their operators and validate arguments") {

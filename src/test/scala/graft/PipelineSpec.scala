@@ -632,19 +632,22 @@ class PipelineSpec extends SparkSpec {
   test("multi-region orchestrator runs all regions and aggregates outcomes") {
     import graft.pipeline.JobPipeline.{RegionConfig, RegionResult}
     val tmp = java.nio.file.Files.createTempDirectory("graft-regions").toString
-    def raw(link: String) = Seq(
+    def raw(links: String*) = links.map(link =>
       ("DE", link, "Data Engineer", "2024-01-28 10:00:00", "Feed", "rss",
         "15min", "fine role")
     ).toDF("job_title", "link", "entry_title", "published", "feed_title",
       "reader", "time_window", "summary")
     val cfg = FilterConfig(daysBack = 30, requiredCols = Seq("entry_title"))
+    // different row counts: the regions run at once, so each region's
+    // count must come from its own region_result observation
     val regions = Seq(
       RegionConfig("texas", raw("tx1"), s"$tmp/tx/stage", s"$tmp/tx/result", Scd1, cfg),
-      RegionConfig("us", raw("us1"), s"$tmp/us/stage", s"$tmp/us/result", Scd1, cfg))
+      RegionConfig("us", raw("us1", "us2", "us3"), s"$tmp/us/stage",
+        s"$tmp/us/result", Scd1, cfg))
     val (results, ok) = JobPipeline.runRegions(spark, regions, batchTs)
     assert(ok)
     assert(results.map(r => (r.name, r.success, r.rows)) ==
-      Seq(("texas", true, 1L), ("us", true, 1L)))
+      Seq(("texas", true, 1L), ("us", true, 3L)))
 
     // one region failing (blank primary key) doesn't stop the other,
     // and flips the aggregate status — the reference's exit-code fold
@@ -656,6 +659,104 @@ class PipelineSpec extends SparkSpec {
     assert(!ok2)
     assert(results2.collect { case RegionResult("us", true, n, None) => n } == Seq(1L))
     assert(results2.exists(r => r.name == "texas" && !r.success && r.error.nonEmpty))
+  }
+
+  private def rawRows(rows: (String, String)*) = rows.map { case (link, title) =>
+    ("DE", link, title, "2024-01-28 10:00:00", "Feed", "rss", "15min", "s")
+  }.toDF("job_title", "link", "entry_title", "published", "feed_title",
+    "reader", "time_window", "summary")
+
+  test("runRegions runs independent regions at the same time") {
+    import graft.pipeline.JobPipeline.RegionConfig
+    assume(spark.sparkContext.defaultParallelism >= 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-overlap").toString
+    val run = java.util.UUID.randomUUID().toString
+    val names = Seq("texas", "us")
+    // each region's batch waits until the other region's batch is being
+    // read too: run one after the other, the first waits alone and fails
+    def raw(region: String) = {
+      val meet = udf { (s: String) =>
+        RegionRendezvous.meet(s"$run/$region", names.map(n => s"$run/$n")); s
+      }.asNondeterministic()
+      rawRows(s"http://$region/1" -> "T")
+        .withColumn("summary", meet(col("summary")))
+    }
+    val (results, ok) = JobPipeline.runRegions(spark, names.map(n =>
+      RegionConfig(n, raw(n), s"$tmp/$n/stage", s"$tmp/$n/result", Scd1,
+        FilterConfig(daysBack = 30))), batchTs)
+    assert(ok, results)
+    assert(results.map(r => (r.name, r.rows)) == Seq(("texas", 1L), ("us", 1L)))
+  }
+
+  test("regions that share a stage path run in config order") {
+    import graft.pipeline.JobPipeline.RegionConfig
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lane").toString
+    val cfg = FilterConfig(daysBack = 30)
+    // the first region is slow: run beside the second, it would write
+    // and swap its stage last, over the second region's merge
+    val slow = udf { (s: String) => Thread.sleep(500); s }.asNondeterministic()
+    def regions(dir: String) = Seq(
+      RegionConfig("a", rawRows("l1" -> "A", "l2" -> "B")
+        .withColumn("summary", slow(col("summary"))),
+        s"$dir/stage", s"$dir/result-a", Scd1, cfg),
+      RegionConfig("b", rawRows("l1" -> "A2", "l3" -> "C"), s"$dir/stage",
+        s"$dir/result-b", Scd1, cfg))
+    regions(s"$tmp/serial").foreach(r => JobPipeline.runRegion(spark,
+      r.rawBatch, r.stagePath, r.resultPath, r.strategy, r.filter, batchTs))
+    val (results, ok) = JobPipeline.runRegions(spark, regions(s"$tmp/lanes"),
+      batchTs)
+    assert(ok, results)
+    assert(results.map(r => (r.name, r.rows)) == Seq(("a", 2L), ("b", 3L)))
+    def rows(path: String) = spark.read.parquet(path).orderBy("link")
+      .collect().toSeq
+    for (t <- Seq("stage", "result-a_next", "result-b_next"))
+      assert(rows(s"$tmp/lanes/$t") == rows(s"$tmp/serial/$t"), t)
+    assert(rows(s"$tmp/lanes/stage").map(_.getAs[String]("entry_title")) ==
+      Seq("A2", "B", "C"))
+  }
+
+  test("runRegions' jobs carry the caller's job group") {
+    import graft.pipeline.JobPipeline.RegionConfig
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobgroup").toString
+    val group = "graft-regions-" + java.util.UUID.randomUUID()
+    val marker = "graft-jobgroup-drained"
+    @volatile var groups = Vector.empty[String]
+    @volatile var drained = 0
+    def isMarker(names: Seq[String]) = names.exists(_.startsWith(marker))
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!isMarker(e.stageInfos.flatMap(_.rddInfos.map(_.name))))
+          groups :+= String.valueOf(
+            Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (isMarker(e.stageInfo.rddInfos.map(_.name))) drained += 1
+    }
+    // the listener bus delivers in order: once a marker job's stage is
+    // seen, every event posted before it has been delivered
+    def drain(): Unit = {
+      val seen = drained
+      spark.sparkContext.parallelize(Seq(1), 1).setName(marker).count()
+      eventually(timeout(60.seconds))(assert(drained > seen))
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      drain()
+      groups = Vector.empty
+      spark.sparkContext.setJobGroup(group, "runRegions job group test")
+      val (results, ok) =
+        try JobPipeline.runRegions(spark, Seq("texas", "us").map(n =>
+          RegionConfig(n, rawRows(s"http://$n/1" -> "T"), s"$tmp/$n/stage",
+            s"$tmp/$n/result", Scd1, FilterConfig(daysBack = 30))), batchTs)
+        finally spark.sparkContext.clearJobGroup()
+      assert(ok, results)
+      drain()
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    assert(groups.nonEmpty)
+    assert(groups.forall(_ == group), groups)
   }
 
   private def rss(items: (String, String)*): String =
@@ -682,19 +783,15 @@ class PipelineSpec extends SparkSpec {
 
   test("a null or blank key fails the region and leaves the stage as it was") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-badkey").toString
-    def raw(rows: (String, String)*) = rows.map { case (link, title) =>
-      ("DE", link, title, "2024-01-28 10:00:00", "Feed", "rss", "15min", "s")
-    }.toDF("job_title", "link", "entry_title", "published", "feed_title",
-      "reader", "time_window", "summary")
     val cfg = FilterConfig(daysBack = 30)
-    JobPipeline.runRegion(spark, raw("l1" -> "A", "l2" -> "B"),
+    JobPipeline.runRegion(spark, rawRows("l1" -> "A", "l2" -> "B"),
       s"$tmp/stage", s"$tmp/result", Scd1, cfg, batchTs)
     def stageRows() = spark.read.parquet(s"$tmp/stage")
       .orderBy("link").collect().toSeq
     val before = stageRows()
     for (bad <- Seq(" ", null)) {
       val e = intercept[IllegalArgumentException](JobPipeline.runRegion(spark,
-        raw("l1" -> "A2", bad -> "C", "l3" -> "D"), s"$tmp/stage",
+        rawRows("l1" -> "A2", bad -> "C", "l3" -> "D"), s"$tmp/stage",
         s"$tmp/result", Scd1, cfg, batchTs))
       assert(e.getMessage ==
         "requirement failed: 1 rows with null/blank primary key 'link'")
@@ -861,5 +958,25 @@ class PipelineSpec extends SparkSpec {
     val out = graft.functions.Normalize.canonicalSelect(df, Schemas.FeedEntryCols)
     assert(out.columns.toSeq == Schemas.FeedEntryCols)
     assert(out.collect()(0).getAs[String]("notes") == "")
+  }
+}
+
+/** Where the batches of PipelineSpec's overlap test wait for each other
+  * (one JVM in local mode, so tasks and test share this object).
+  */
+object RegionRendezvous {
+  private val arrived = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Marks `me` as arrived, then waits up to 60 s until every one of
+    * `all` has; throws if they have not.
+    */
+  def meet(me: String, all: Seq[String]): Unit = {
+    arrived.add(me)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!all.forall(arrived.contains)) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException(s"$me waited 60 s for $all")
+      Thread.sleep(10)
+    }
   }
 }
