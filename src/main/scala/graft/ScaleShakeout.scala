@@ -24,6 +24,7 @@ import org.apache.spark.sql.functions._
   * Results are recorded in SCALE.md.
   */
 object ScaleShakeout {
+  import graft.fixtures.FixtureBytes._
 
   private val Boilerplate =
     "terms of service apply all rights reserved contact us for more information today "
@@ -487,9 +488,6 @@ object ScaleShakeout {
           data(2 * k + 1) = (v >> 8).toByte
           k += 1
         }
-        def le16(x: Int) = Array[Byte](x.toByte, (x >> 8).toByte)
-        def le32(x: Int) = Array[Byte](x.toByte, (x >> 8).toByte,
-          (x >> 16).toByte, (x >> 24).toByte)
         "RIFF".getBytes("ISO-8859-1") ++ le32(36 + data.length) ++
           "WAVE".getBytes("ISO-8859-1") ++
           "fmt ".getBytes("ISO-8859-1") ++ le32(16) ++ le16(1) ++
@@ -551,8 +549,6 @@ object ScaleShakeout {
       val header = "P6\n2 2\n255\n".getBytes("ISO-8859-1")
       val frameSize = header.length + 12 // 23, odd: pad every AVI chunk
       def aviBytes(vs: Array[Int]): Array[Byte] = {
-        def le32(x: Int) = Array[Byte](x.toByte, (x >> 8).toByte,
-          (x >> 16).toByte, (x >> 24).toByte)
         val out = new java.io.ByteArrayOutputStream()
         out.write("RIFF".getBytes("ISO-8859-1"))
         val moviSize = 4 + vs.length * (8 + frameSize + 1)
@@ -574,9 +570,6 @@ object ScaleShakeout {
       // raw PPM samples + moov/trak/mdia/hdlr(vide)/minf/stbl with
       // fixed-size stsz, single-run stsc, absolute stco into mdat
       def mp4Bytes(vs: Array[Int]): Array[Byte] = {
-        def be32(x: Int) = Array[Byte]((x >> 24).toByte, (x >> 16).toByte,
-          (x >> 8).toByte, x.toByte)
-        def ascii(sParam: String) = sParam.getBytes("ISO-8859-1")
         def box(name: String, payload: Array[Byte]): Array[Byte] =
           be32(payload.length + 8) ++ ascii(name) ++ payload
         val n = vs.length
@@ -1023,25 +1016,6 @@ object ScaleShakeout {
       val genArc = udf { (id: Long) =>
         if (id % 50 == 17) "not an archive at all".getBytes("UTF-8")
         else {
-          def hdr(name: String, size: Long): Array[Byte] = {
-            val h = new Array[Byte](512)
-            def putStr(o: Int, len: Int, str: String): Unit = {
-              val bb = str.getBytes("UTF-8")
-              System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-            }
-            def putOctal(o: Int, len: Int, v: Long): Unit =
-              putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-            putStr(0, 100, name)
-            putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-            putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-            java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-            h(156) = '0'.toByte
-            putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-            var sum = 0L
-            (0 until 512).foreach(i => sum += h(i) & 0xff)
-            putStr(148, 7, "%06o".format(sum) + " ")
-            h
-          }
           val rnd = new java.util.Random(id * 2654435761L + 17L)
           val k = 3 + rnd.nextInt(8)
           def contentOf(j: Int): Array[Byte] = {
@@ -1072,7 +1046,7 @@ object ScaleShakeout {
             while (j < k) {
               val c = contentOf(j)
               val pad = (512 - c.length % 512) % 512
-              out.write(hdr(s"src/f$j.txt", c.length))
+              out.write(tarHeader(s"src/f$j.txt", c.length))
               out.write(c); out.write(new Array[Byte](pad))
               j += 1
             }
@@ -1369,9 +1343,6 @@ object ScaleShakeout {
             Array.tabulate[Byte](w * h * 3)(i => v(i / 3 % w, i / 3 / w).toByte)
         } else {
           val stride = (w * 3 + 3) / 4 * 4
-          def le32(x: Int) = Array[Byte](x.toByte, (x >> 8).toByte,
-            (x >> 16).toByte, (x >> 24).toByte)
-          def le16(x: Int) = Array[Byte](x.toByte, (x >> 8).toByte)
           val body = new Array[Byte](stride * h)
           for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
             body((h - 1 - y) * stride + x * 3 + c) = v(x, y).toByte
@@ -1484,28 +1455,8 @@ object ScaleShakeout {
               z.close()
               out.toByteArray
             } else {
-              def hdr(name: String, size: Long): Array[Byte] = {
-                val h = new Array[Byte](512)
-                def putStr(o: Int, len: Int, str: String): Unit = {
-                  val bb = str.getBytes("UTF-8")
-                  System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-                }
-                def putOctal(o: Int, len: Int, v: Long): Unit =
-                  putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-                putStr(0, 100, name)
-                putOctal(100, 8, 420); putOctal(108, 8, 0)
-                putOctal(116, 8, 0); putOctal(124, 12, size)
-                putOctal(136, 12, 1700000000L)
-                java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-                h(156) = '0'.toByte
-                putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-                var sum = 0L
-                (0 until 512).foreach(i => sum += h(i) & 0xff)
-                putStr(148, 7, "%06o".format(sum) + " ")
-                h
-              }
               entries.foreach { case (n, c) =>
-                out.write(hdr(n, c.length))
+                out.write(tarHeader(n, c.length))
                 out.write(c)
                 out.write(new Array[Byte]((512 - c.length % 512) % 512))
               }
@@ -1672,28 +1623,8 @@ object ScaleShakeout {
         }
         if (((id + armShift) & 1L) == 0L) {
           val out = new java.io.ByteArrayOutputStream()
-          def hdr(name: String, size: Long): Array[Byte] = {
-            val h = new Array[Byte](512)
-            def putStr(o: Int, len: Int, str: String): Unit = {
-              val bb = str.getBytes("UTF-8")
-              System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-            }
-            def putOctal(o: Int, len: Int, v: Long): Unit =
-              putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-            putStr(0, 100, name)
-            putOctal(100, 8, 420); putOctal(108, 8, 0)
-            putOctal(116, 8, 0); putOctal(124, 12, size)
-            putOctal(136, 12, 1700000000L)
-            java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-            h(156) = '0'.toByte
-            putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-            var sum = 0L
-            (0 until 512).foreach(i => sum += h(i) & 0xff)
-            putStr(148, 7, "%06o".format(sum) + " ")
-            h
-          }
           entries.foreach { case (n, c) =>
-            out.write(hdr(n, c.length))
+            out.write(tarHeader(n, c.length))
             out.write(c)
             out.write(new Array[Byte]((512 - c.length % 512) % 512))
           }

@@ -24,6 +24,7 @@ import org.apache.spark.sql.types._
   *    strings.
   */
 object SparkEntry {
+  import graft.fixtures.FixtureBytes._
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Graft.table(s, dir, n)
@@ -982,7 +983,6 @@ object SparkEntry {
     "q55_thumbnails_operator" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val m = id % 2
       def pix(x: Column, y: Column, c: Column): Column = {
@@ -1976,12 +1976,6 @@ object SparkEntry {
     "q127_image_meta" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def be(c: Column, hexDigits: Int): Column =
-        unhex(lpad(hex(c), hexDigits, "0"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val pngHead = lit(Array[Byte](0x89.toByte, 'P', 'N', 'G',
         0x0D, 0x0A, 0x1A, 0x0A, 0, 0, 0, 13, 'I', 'H', 'D', 'R'))
       val pngTail = lit(Array[Byte](0, 0, 0, // compression/filter/interlace
@@ -2025,18 +2019,6 @@ object SparkEntry {
     "q148_audio_meta" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def be(c: Column, hexDigits: Int): Column =
-        unhex(lpad(hex(c), hexDigits, "0"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val id = col("doc_id")
       // WAV: ch = id%2+1, rate = (id%4+1)*11025, 16-bit PCM,
       // n_frames = id%1000+1
@@ -2045,10 +2027,10 @@ object SparkEntry {
       val blockAlign = ch * 2
       val nFrames = id % 1000 + 1
       val dataSize = blockAlign * nFrames
-      val wav = concat(ascii("RIFF"), le32(dataSize + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(ch), le32(rate),
+      val wav = concat(asciiLit("RIFF"), le32(dataSize + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(ch), le32(rate),
         le32(rate * blockAlign), le16(blockAlign), le16(lit(16)),
-        ascii("data"), le32(dataSize))
+        asciiLit("data"), le32(dataSize))
       // FLAC: STREAMINFO with rate = (id%5+1)*8000, same ch, 16-bit,
       // total samples = id%5000+1; 34-byte body = 10 fixed + 8 packed
       // (20-bit rate | 3-bit ch-1 | 5-bit bits-1 | 36-bit total) + 16
@@ -2058,7 +2040,7 @@ object SparkEntry {
       val packed = shiftleft(fRate.cast(LongType), 44) +
         shiftleft((ch - 1).cast(LongType), 41) +
         shiftleft(lit(15L), 36) + fTotal.cast(LongType)
-      val flac = concat(ascii("fLaC"),
+      val flac = concat(asciiLit("fLaC"),
         lit(Array[Byte](0x80.toByte, 0, 0, 34)),
         be(lit(4096), 4), be(lit(4096), 4), be(lit(0), 6), be(lit(0), 6),
         be(packed, 16), lit(Array.fill[Byte](16)(0)))
@@ -2087,22 +2069,7 @@ object SparkEntry {
     "q161_audio_meta_wide" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
       def byte1(c: Column): Column = unhex(lpad(hex(c), 2, "0"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le64(c: Column): Column = {
-        val h = lpad(hex(c), 16, "0")
-        unhex(concat((0 until 8).reverse.map(i =>
-          substring(h, 1 + 2 * i, 2)): _*))
-      }
       val id = col("doc_id")
       val grp = call_function("div", id, lit(4L))
       // ---- MP3, MPEG-1 Layer III: brIdx 1..14, srIdx 0..2, optional
@@ -2116,7 +2083,7 @@ object SparkEntry {
       val h3 = when(stereo, lit(Array[Byte](0x40)))
         .otherwise(lit(Array[Byte](0xC0.toByte)))
       val id3 = when(grp % 3 === 0,
-          concat(ascii("ID3"), lit(Array[Byte](4, 0, 0, 0, 0, 0)),
+          concat(asciiLit("ID3"), lit(Array[Byte](4, 0, 0, 0, 0, 0)),
             byte1(grp % 64), unhex(repeat(lit("00"),
               (grp % 64).cast(IntegerType)))))
         .otherwise(lit(Array.emptyByteArray))
@@ -2128,13 +2095,13 @@ object SparkEntry {
       // ---- OGG pages: 27-byte header + 1-entry segment table
       def page(typ: Int, granule: Column, payload: Column,
           plen: Column): Column =
-        concat(ascii("OggS"), lit(Array[Byte](0, typ.toByte)),
+        concat(asciiLit("OggS"), lit(Array[Byte](0, typ.toByte)),
           le64(granule), le32(lit(7777)), le32(lit(0)), le32(lit(0)),
           lit(Array[Byte](1)), byte1(plen), payload)
       val oggCh = (grp % 2 + 1).cast(IntegerType)
       val vRate = ((grp % 5 + 1) * 8000).cast(IntegerType)
       val vFrames = (grp % 100000 + 1).cast(LongType)
-      val vorbId = concat(lit(Array[Byte](1)), ascii("vorbis"),
+      val vorbId = concat(lit(Array[Byte](1)), asciiLit("vorbis"),
         le32(lit(0)), byte1(oggCh), le32(vRate),
         unhex(repeat(lit("00"), lit(14))))
       val dataPayload = unhex(repeat(lit("09"), lit(10)))
@@ -2142,7 +2109,7 @@ object SparkEntry {
         page(4, vFrames, dataPayload, lit(10)))
       val preskip = (grp % 1000).cast(IntegerType)
       val oFrames = (grp % 50000 + 1).cast(LongType)
-      val opusId = concat(ascii("OpusHead"), lit(Array[Byte](1)),
+      val opusId = concat(asciiLit("OpusHead"), lit(Array[Byte](1)),
         byte1(oggCh), le16(preskip), le32(lit(12345)),
         unhex(repeat(lit("00"), lit(5))))
       val oggOpus = concat(page(2, lit(-1L), opusId, lit(21)),
@@ -2170,13 +2137,6 @@ object SparkEntry {
     // frame tier extracts. id%3==2 docs are text (triage: NULL meta)
     "q165_video_meta_wide" -> ((s, dir) => {
       Graft.tune(s)
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
       val id = col("doc_id")
       // AVI: µs/frame (10–59 ms), frames 1–500, dims from id
       val usf = ((id % 50 + 10) * 1000).cast(IntegerType)
@@ -2254,18 +2214,11 @@ object SparkEntry {
     // the dims. id%9==5 docs are text (triage: NULL meta)
     "q163_image_meta_wide" -> ((s, dir) => {
       Graft.tune(s)
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
       def be16hex(c: Column): Column = lpad(hex(c), 4, "0")
       def be32hex(c: Column): Column = lpad(hex(c), 8, "0")
       def le16hex(c: Column): Column = {
         val h = lpad(hex(c), 4, "0")
         concat(substring(h, 3, 2), substring(h, 1, 2))
-      }
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
       }
       val id = col("doc_id")
       // TIFF little-endian: two inline-SHORT dim entries
@@ -2357,9 +2310,6 @@ object SparkEntry {
     "q149_video_meta" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def be(c: Column, hexDigits: Int): Column =
-        unhex(lpad(hex(c), hexDigits, "0"))
       def zeros(n: Int): Column = lit(Array.fill[Byte](n)(0))
       val id = col("doc_id")
       val ts = (id % 4 + 1) * 600
@@ -2368,14 +2318,14 @@ object SparkEntry {
       val h = id % 768 + 16
       // mvhd v0: 8 hdr + 100 payload (ver/flags, ctime, mtime,
       // timescale@12, duration@16, 80 trailing bytes the walk skips)
-      val mvhd = concat(be(lit(108), 8), ascii("mvhd"), zeros(12),
+      val mvhd = concat(be(lit(108), 8), asciiLit("mvhd"), zeros(12),
         be(ts, 8), be(durUnits, 8), zeros(80))
       // tkhd v0: 8 hdr + 84 payload (width@76, height@80 as 16.16)
-      val tkhd = concat(be(lit(92), 8), ascii("tkhd"), zeros(76),
+      val tkhd = concat(be(lit(92), 8), asciiLit("tkhd"), zeros(76),
         be(w * 65536L, 8), be(h * 65536L, 8))
-      val trak = concat(be(lit(100), 8), ascii("trak"), tkhd)
-      val moov = concat(be(lit(216), 8), ascii("moov"), mvhd, trak)
-      val ftyp = concat(be(lit(16), 8), ascii("ftyp"), ascii("isom"),
+      val trak = concat(be(lit(100), 8), asciiLit("trak"), tkhd)
+      val moov = concat(be(lit(216), 8), asciiLit("moov"), mvhd, trak)
+      val ftyp = concat(be(lit(16), 8), asciiLit("ftyp"), asciiLit("isom"),
         zeros(4))
       val content = when(id % 3 === 0, concat(ftyp, moov))
         .otherwise(encode(concat(lit("txt:"), coalesce(col("text"), lit(""))),
@@ -2400,12 +2350,6 @@ object SparkEntry {
     "q150_pixel_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def be(c: Column, hexDigits: Int): Column =
-        unhex(lpad(hex(c), hexDigits, "0"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val fakeCrc = Array[Byte](0x12, 0x34, 0x56, 0x78)
       val id = col("doc_id")
       val m = id % 4
@@ -2552,16 +2496,6 @@ object SparkEntry {
     "q156_audio_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val id = col("doc_id")
       val g = (id / 2).cast(LongType)
       val gain = when(pmod(id, lit(2L)) === 1, lit(2L)).otherwise(lit(1L))
@@ -2580,10 +2514,10 @@ object SparkEntry {
           pmod(v, lit(65536L)) // two's complement 16-bit
         }), lit(2), lit(0))
       val ds = (n * 2).cast(IntegerType)
-      val wav = concat(ascii("RIFF"), le32(ds + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wav = concat(asciiLit("RIFF"), le32(ds + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(16000)), le32(lit(32000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(ds), data)
+        asciiLit("data"), le32(ds), data)
       val media = tp(s, dir, "documents")
         .select(id.as("media_id"), lit("audio").as("kind"),
           wav.as("content"))
@@ -2604,13 +2538,6 @@ object SparkEntry {
     "q157_video_frame_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
       val id = col("doc_id")
       val w = (id % 5 + 6).cast(IntegerType)
       val h = (id % 4 + 5).cast(IntegerType)
@@ -2664,13 +2591,6 @@ object SparkEntry {
     "q160_video_decoder_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
       val id = col("doc_id")
       val w = (id % 5 + 6).cast(IntegerType)
       val h = (id % 4 + 5).cast(IntegerType)
@@ -2746,13 +2666,6 @@ object SparkEntry {
     "q159_video_mp4_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
       def be32hex(c: Column): Column = lpad(hex(c), 8, "0")
       val id = col("doc_id")
       val w = (id % 5 + 6).cast(IntegerType)
@@ -2833,13 +2746,6 @@ object SparkEntry {
     "q158_video_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def hexOf(sParam: String): String =
-        sParam.getBytes("ISO-8859-1").map(b => f"${b & 0xff}%02X").mkString
-      def le32hex(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2))
-      }
       val id = col("doc_id")
       val g = (id / 2).cast(LongType)
       val variant = pmod(id, lit(2L))
@@ -2885,16 +2791,6 @@ object SparkEntry {
     "q154_audio_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val id = col("doc_id")
       val m = id % 3
       // 16-bit PCM: ch = id%2+1, rate = (id%4+1)*8000, frames =
@@ -2911,10 +2807,10 @@ object SparkEntry {
           when(pmod(id, lit(11L)) === 0, lit(0L))
             .otherwise(pmod(id * 31 + k.cast(LongType) * 7919, lit(65536L)))),
         lit(2), lit(0))
-      val wav16 = concat(ascii("RIFF"), le32(ds16 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(ch16), le32(rate16),
+      val wav16 = concat(asciiLit("RIFF"), le32(ds16 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(ch16), le32(rate16),
         le32(rate16 * ba16), le16(ba16), le16(lit(16)),
-        ascii("data"), le32(ds16), data16)
+        asciiLit("data"), le32(ds16), data16)
       // 8-bit unsigned mono: rate = (id%3+1)*11025, frames = id%60+10;
       // byte k = (id*13 + k*101) % 256 (recentered by -128 at decode)
       val rate8 = (id % 3 + 1) * 11025
@@ -2923,10 +2819,10 @@ object SparkEntry {
         transform(sequence(lit(0), (n8 - 1).cast(IntegerType)), k =>
           pmod(id * 13 + k.cast(LongType) * 101, lit(256L))),
         lit(1), lit(0))
-      val wav8 = concat(ascii("RIFF"), le32(n8 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)), le32(rate8),
-        le32(rate8), le16(lit(1)), le16(lit(8)),
-        ascii("data"), le32(n8), data8)
+      val wav8 = concat(asciiLit("RIFF"), le32(n8 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+        le32(rate8), le32(rate8), le16(lit(1)), le16(lit(8)),
+        asciiLit("data"), le32(n8), data8)
       val content = when(m === 0, wav16)
         .when(m === 1, wav8)
         .otherwise(encode(concat(lit("txt:"), coalesce(col("text"), lit(""))),
@@ -2955,12 +2851,6 @@ object SparkEntry {
     "q178_audio_decoder_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val id = col("doc_id")
       val m = id % 3
       val rate = ((id % 4 + 1) * 8000).cast(IntegerType)
@@ -2970,8 +2860,8 @@ object SparkEntry {
           when(pmod(id, lit(11L)) === 0, lit(0L))
             .otherwise(pmod(id * 31 + k.cast(LongType) * 7919, lit(256L)))),
         lit(1), lit(0))
-      val gaud = concat(ascii("GAUD"), le32(rate), data)
-      val foreign = concat(ascii("MPGA"),
+      val gaud = concat(asciiLit("GAUD"), le32(rate), data)
+      val foreign = concat(asciiLit("MPGA"),
         encode(id.cast(StringType), "UTF-8").cast(BinaryType))
       val content = when(m === 0, gaud)
         .when(m === 1, foreign)
@@ -2997,7 +2887,6 @@ object SparkEntry {
     "q180_crawl_documents" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Warc
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       def bin(c: Column): Column = encode(c, "ISO-8859-1")
       val id = col("doc_id")
       val safe = substring(
@@ -3006,22 +2895,22 @@ object SparkEntry {
           "[^ -~]", " "), "[()\\\\]", " "), "stream|endobj|beginbf", " "),
         1, 80)
       val pdf = concat(
-        ascii("%PDF-1.4\n4 0 obj << /Length 0 >>\nstream\nBT (Doc "),
+        asciiLit("%PDF-1.4\n4 0 obj << /Length 0 >>\nstream\nBT (Doc "),
         bin(safe),
-        ascii(") Tj 0 -14 Td (page "), bin(id.cast(StringType)),
-        ascii(") Tj ET\nendstream\nendobj\n%%EOF\n"))
+        asciiLit(") Tj 0 -14 Td (page "), bin(id.cast(StringType)),
+        asciiLit(") Tj ET\nendstream\nendobj\n%%EOF\n"))
       val httpPdf = concat(
-        ascii("HTTP/1.1 200 OK\r\nContent-Type: application/pdf\r\n\r\n"),
+        asciiLit("HTTP/1.1 200 OK\r\nContent-Type: application/pdf\r\n\r\n"),
         pdf)
-      val httpHtml = ascii("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
+      val httpHtml = asciiLit("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
         "\r\n\r\n<p>markup the pdf route must drop</p>")
       def rec(uri: Column, http: Column): Column = concat(
-        ascii("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
+        asciiLit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
         bin(uri),
-        ascii("\r\nContent-Type: application/http; msgtype=response" +
+        asciiLit("\r\nContent-Type: application/http; msgtype=response" +
           "\r\nContent-Length: "),
-        bin(length(http).cast(StringType)), ascii("\r\n\r\n"),
-        http, ascii("\r\n\r\n"))
+        bin(length(http).cast(StringType)), asciiLit("\r\n\r\n"),
+        http, asciiLit("\r\n\r\n"))
       val warc = concat(
         rec(concat(lit("http://example.com/doc/"), id.cast(StringType)),
           httpPdf),
@@ -3092,7 +2981,6 @@ object SparkEntry {
       val entropyHex = array_join(
         transform(sequence(lit(0), n - 1), k =>
           lpad(hex(v4(k) * 4), 2, "0")), "")
-      def be16(c: Column): Column = lpad(hex(c), 4, "0")
       val jpegHex = concat(
         lit("FFD8"), // SOI
         lit("FFDB0043" + "00" + "10" * 64), // DQT: all-16 table 0
@@ -3125,17 +3013,6 @@ object SparkEntry {
     "q166_audio_codec_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val m = id % 5
       // μ-law mono: rate (id%4+1)*8000, n = id%50+8, byte k =
@@ -3145,20 +3022,20 @@ object SparkEntry {
       val dataU = array_join(
         transform(sequence(lit(0), (nU - 1).cast(IntegerType)), k =>
           byteHex(pmod(id * 17 + k.cast(LongType) * 131, lit(256L)))), "")
-      val wavU = concat(ascii("RIFF"), le32(nU + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(7)), le16(lit(1)), le32(rateU),
-        le32(rateU), le16(lit(1)), le16(lit(8)),
-        ascii("data"), le32(nU), unhex(dataU))
+      val wavU = concat(asciiLit("RIFF"), le32(nU + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(7)), le16(lit(1)),
+        le32(rateU), le32(rateU), le16(lit(1)), le16(lit(8)),
+        asciiLit("data"), le32(nU), unhex(dataU))
       // A-law stereo: rate 8000, frames n = id%40+6, byte k over 2n =
       // (id*23 + k*89) % 256
       val nA = id % 40 + 6
       val dataA = array_join(
         transform(sequence(lit(0), (nA * 2 - 1).cast(IntegerType)), k =>
           byteHex(pmod(id * 23 + k.cast(LongType) * 89, lit(256L)))), "")
-      val wavA = concat(ascii("RIFF"), le32(nA * 2 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(6)), le16(lit(2)),
+      val wavA = concat(asciiLit("RIFF"), le32(nA * 2 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(6)), le16(lit(2)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(8)),
-        ascii("data"), le32(nA * 2), unhex(dataA))
+        asciiLit("data"), le32(nA * 2), unhex(dataA))
       // IMA ADPCM mono: blockAlign 12 (8 data bytes = 16 nibbles,
       // spb 17), blocks = id%2+1; block b: pred = s16((id*47 +
       // b*1009) % 65536), index = (id + b*37) % 89, nibble j =
@@ -3180,11 +3057,11 @@ object SparkEntry {
         concat(predHex, idxHex, dataHex)
       })
       val imaBytes = nBlk * 12
-      val wavI = concat(ascii("RIFF"), le32(imaBytes + 40), ascii("WAVE"),
-        ascii("fmt "), le32(lit(20)), le16(lit(17)), le16(lit(1)),
+      val wavI = concat(asciiLit("RIFF"), le32(imaBytes + 40), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(20)), le16(lit(17)), le16(lit(1)),
         le32(lit(22050)), le32(lit(11025)), le16(lit(12)), le16(lit(4)),
         le16(lit(2)), le16(lit(17)),
-        ascii("data"), le32(imaBytes), unhex(array_join(blockHex, "")))
+        asciiLit("data"), le32(imaBytes), unhex(array_join(blockHex, "")))
       // 24-bit PCM mono: the stats read each sample's TOP TWO bytes,
       // so the oracle replays only t_k = (id*29 + k*4099) % 65536
       // (signed) — the low byte (id*5 + k*13) % 256 must not matter
@@ -3197,10 +3074,10 @@ object SparkEntry {
             byteHex(pmod(t, lit(256L))),
             byteHex(shiftright(t.cast(IntegerType), 8)))
         }), "")
-      val wav24 = concat(ascii("RIFF"), le32(n24 * 3 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wav24 = concat(asciiLit("RIFF"), le32(n24 * 3 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(16000)), le32(lit(48000)), le16(lit(3)), le16(lit(24)),
-        ascii("data"), le32(n24 * 3), unhex(data24))
+        asciiLit("data"), le32(n24 * 3), unhex(data24))
       // 32-bit PCM stereo: sample s over 2n, low half (id*3 + s*17)
       // % 65536 ignored, top half t_s = (id*41 + s*257) % 65536 signed
       val n32 = id % 20 + 3
@@ -3214,10 +3091,10 @@ object SparkEntry {
             byteHex(pmod(t, lit(256L))),
             byteHex(shiftright(t.cast(IntegerType), 8)))
         }), "")
-      val wav32 = concat(ascii("RIFF"), le32(n32 * 8 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(2)),
+      val wav32 = concat(asciiLit("RIFF"), le32(n32 * 8 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(2)),
         le32(lit(44100)), le32(lit(352800)), le16(lit(8)), le16(lit(32)),
-        ascii("data"), le32(n32 * 8), unhex(data32))
+        asciiLit("data"), le32(n32 * 8), unhex(data32))
       val content = when(m === 0, wavU).when(m === 1, wavA)
         .when(m === 2, wavI).when(m === 3, wav24).otherwise(wav32)
       val media = tp(s, dir, "documents").select(id.as("media_id"),
@@ -3241,17 +3118,6 @@ object SparkEntry {
     "q167_msadpcm_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       def le16Hex(c: Column): Column =
         concat(byteHex(pmod(c, lit(256L))),
           byteHex(shiftright(pmod(c, lit(65536L)).cast(IntegerType), 8)))
@@ -3276,11 +3142,12 @@ object SparkEntry {
           val tl = t.cast(LongType)
           byteHex(nib(lit(2L) * tl) * 16 + nib(lit(2L) * tl + 1))
         }), "")
-      val wavM = concat(ascii("RIFF"), le32(lit(16 + 20 + 50)), ascii("WAVE"),
-        ascii("fmt "), le32(lit(50)), le16(lit(2)), le16(lit(1)),
+      val wavM = concat(asciiLit("RIFF"), le32(lit(16 + 20 + 50)),
+        asciiLit("WAVE"), asciiLit("fmt "), le32(lit(50)), le16(lit(2)),
+        le16(lit(1)),
         le32(lit(11025)), le32(lit(11025)), le16(lit(16)), le16(lit(4)),
         fmtExt(20),
-        ascii("data"), le32(lit(16)), unhex(concat(hdrM, dataM)))
+        asciiLit("data"), le32(lit(16)), unhex(concat(hdrM, dataM)))
       // stereo: blockAlign 24 (10 data bytes, 20 nibbles, spb 12);
       // channel c header fields offset by c in the formulas
       def pi(c: Int): Column = pmod(id + c, lit(7L))
@@ -3296,11 +3163,12 @@ object SparkEntry {
           val tl = t.cast(LongType)
           byteHex(nib(lit(2L) * tl) * 16 + nib(lit(2L) * tl + 1))
         }), "")
-      val wavS = concat(ascii("RIFF"), le32(lit(24 + 20 + 50)), ascii("WAVE"),
-        ascii("fmt "), le32(lit(50)), le16(lit(2)), le16(lit(2)),
+      val wavS = concat(asciiLit("RIFF"), le32(lit(24 + 20 + 50)),
+        asciiLit("WAVE"), asciiLit("fmt "), le32(lit(50)), le16(lit(2)),
+        le16(lit(2)),
         le32(lit(11025)), le32(lit(22050)), le16(lit(24)), le16(lit(4)),
         fmtExt(12),
-        ascii("data"), le32(lit(24)), unhex(concat(hdrS, dataS)))
+        asciiLit("data"), le32(lit(24)), unhex(concat(hdrS, dataS)))
       val content = when(m === 0, wavM).otherwise(wavS)
       val media = tp(s, dir, "documents").select(id.as("media_id"),
         lit("audio").as("kind"), content.as("content"))
@@ -3323,17 +3191,6 @@ object SparkEntry {
     "q168_crosscodec_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val g = col("doc_id")
       val n = (g % 32 + 64).cast(IntegerType) // ≥ 64 frames for nFrames=64
       // quadratic (g,k) mixing: any LINEAR formula makes every doc's
@@ -3360,20 +3217,20 @@ object SparkEntry {
       }
       val dataU = array_join(
         transform(sequence(lit(0), n - 1), k => byteHex(code(k))), "")
-      val wavU = concat(ascii("RIFF"), le32(n + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(7)), le16(lit(1)),
+      val wavU = concat(asciiLit("RIFF"), le32(n + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(7)), le16(lit(1)),
         le32(lit(8000)), le32(lit(8000)), le16(lit(1)), le16(lit(8)),
-        ascii("data"), le32(n), unhex(dataU))
+        asciiLit("data"), le32(n), unhex(dataU))
       val dataP = array_join(
         transform(sequence(lit(0), n - 1), k => {
           val v = pmod(ulawLin(code(k)), lit(65536L)) // two's complement
           concat(byteHex(pmod(v, lit(256L))),
             byteHex(shiftright(v.cast(IntegerType), 8)))
         }), "")
-      val wavP = concat(ascii("RIFF"), le32(n * 2 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wavP = concat(asciiLit("RIFF"), le32(n * 2 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(n * 2), unhex(dataP))
+        asciiLit("data"), le32(n * 2), unhex(dataP))
       val media = tp(s, dir, "documents")
         .select(explode(array(
           struct((g * 2).as("media_id"), wavP.as("content")),
@@ -3394,17 +3251,6 @@ object SparkEntry {
     "q169_crossformat_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val g = col("doc_id")
       val wC = (g % 8 + 9).cast(IntegerType)
       val hC = (g % 6 + 7).cast(IntegerType)
@@ -3423,7 +3269,7 @@ object SparkEntry {
       val pad = pmod(lit(4) - pmod(stride, lit(4)), lit(4))
       val padHex = lit("000000").substr(lit(1), pad * 2)
       val rowSize = stride + pad
-      val bmp = concat(ascii("BM"), le32(rowSize * hC + 54),
+      val bmp = concat(asciiLit("BM"), le32(rowSize * hC + 54),
         le32(lit(0)), le32(lit(54)),
         le32(lit(40)), le32(wC), le32(hC), le16(lit(1)), le16(lit(24)),
         le32(lit(0)), le32(rowSize * hC), le32(lit(0)), le32(lit(0)),
@@ -3450,7 +3296,6 @@ object SparkEntry {
     "q183_orientation_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val g = col("doc_id")
       val wC = (g % 8 + 9).cast(IntegerType)
       val hC = (g % 6 + 7).cast(IntegerType)
@@ -3556,16 +3401,6 @@ object SparkEntry {
     "q185_mp3_crosscodec_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val g = col("doc_id")
       def loud(w: Column): Column = {
         val h = g * 64 + w.cast(LongType)
@@ -3589,10 +3424,10 @@ object SparkEntry {
         transform(sequence(lit(0), lit(255)), k =>
           when(loud(shiftright(k, 2)), lit("E803")).otherwise(lit("0000"))),
         "")
-      val wavP = concat(ascii("RIFF"), le32(lit(512 + 36)), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wavP = concat(asciiLit("RIFF"), le32(lit(512 + 36)), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(44100)), le32(lit(88200)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(lit(512)), unhex(dataHex))
+        asciiLit("data"), le32(lit(512)), unhex(dataHex))
       val media = tp(s, dir, "documents")
         .select(explode(array(
           struct((g * 2).as("media_id"), mp3.as("content")),
@@ -3629,7 +3464,6 @@ object SparkEntry {
         transform(sequence(lit(0), n - 1), k =>
           concat((0 until 4).map(c => lpad(hex(v4(c, k) * 4), 2, "0")): _*)),
         "")
-      def be16(c: Column): Column = lpad(hex(c), 4, "0")
       val jpegHex = concat(
         lit("FFD8"),
         lit("FFEE000E" + "41646F6265" + "0064" + "0000" + "0000"),
@@ -3713,7 +3547,6 @@ object SparkEntry {
     "q191_crawl_thumbnails" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Warc
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       def bin(c: Column): Column = encode(c, "ISO-8859-1")
       val id = col("doc_id")
       def v4(slot: Int): Column =
@@ -3727,16 +3560,16 @@ object SparkEntry {
         lpad(hex(v4(slot) * 4), 2, "0"),
         lit("FFD9"))
       def rec(uri: Column, http: Column): Column = concat(
-        ascii("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
+        asciiLit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
         bin(uri),
-        ascii("\r\nContent-Type: application/http; msgtype=response" +
+        asciiLit("\r\nContent-Type: application/http; msgtype=response" +
           "\r\nContent-Length: "),
-        bin(length(http).cast(StringType)), ascii("\r\n\r\n"),
-        http, ascii("\r\n\r\n"))
+        bin(length(http).cast(StringType)), asciiLit("\r\n\r\n"),
+        http, asciiLit("\r\n\r\n"))
       def httpJpeg(slot: Int): Column = concat(
-        ascii("HTTP/1.1 200 OK\r\nContent-Type: image/jpeg\r\n\r\n"),
+        asciiLit("HTTP/1.1 200 OK\r\nContent-Type: image/jpeg\r\n\r\n"),
         unhex(jpegHex(slot)))
-      val httpHtml = ascii("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
+      val httpHtml = asciiLit("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
         "\r\n\r\n<p>markup the image route must drop</p>")
       val warc = concat(
         rec(concat(lit("http://example.com/img/"), id.cast(StringType),
@@ -3768,17 +3601,6 @@ object SparkEntry {
     // replays boxes, truncating means and the stats relationally.
     "q190_resample_pcm" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val n = (id % 40 + 16).cast(IntegerType)
       val dataHex = array_join(
@@ -3787,10 +3609,10 @@ object SparkEntry {
           concat(byteHex(pmod(t, lit(256L))),
             byteHex(shiftright(t.cast(IntegerType), 8)))
         }), "")
-      val wav = concat(ascii("RIFF"), le32(n * 2 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wav = concat(asciiLit("RIFF"), le32(n * 2 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(n * 2), unhex(dataHex))
+        asciiLit("data"), le32(n * 2), unhex(dataHex))
       val res = call_function(graft.expr.ResamplePcm.FunctionName,
         wav, lit(3000))
       val m = call_function(graft.expr.AudioStats.FunctionName, res)
@@ -4087,17 +3909,6 @@ object SparkEntry {
     "q199_flac_crosscodec_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(sParam: String): Column = lit(sParam.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val g = col("doc_id")
       val n = (g % 32 + 64).cast(IntegerType) // ≥ 64 frames for nFrames=64
       def sval(k: Column): Column = {
@@ -4111,10 +3922,10 @@ object SparkEntry {
           concat(byteHex(pmod(v, lit(256L))),
             byteHex(shiftright(v.cast(IntegerType), 8)))
         }), "")
-      val wavP = concat(ascii("RIFF"), le32(n * 2 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wavP = concat(asciiLit("RIFF"), le32(n * 2 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(n * 2), unhex(dataP))
+        asciiLit("data"), le32(n * 2), unhex(dataP))
       val genFlac = udf { (gid: Long) =>
         val nS = (gid % 32 + 64).toInt
         def v(k: Int): Int = {
@@ -4195,16 +4006,6 @@ object SparkEntry {
     "q201_vorbis_crosscodec_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       val g = col("doc_id")
       def loud(w: Column): Column = {
         val h = g * 64 + w.cast(LongType)
@@ -4225,10 +4026,10 @@ object SparkEntry {
         transform(sequence(lit(0), lit(255)), k =>
           when(loud(shiftright(k, 2)), lit("E803")).otherwise(lit("0000"))),
         "")
-      val wavP = concat(ascii("RIFF"), le32(lit(512 + 36)), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wavP = concat(asciiLit("RIFF"), le32(lit(512 + 36)), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(lit(512)), unhex(dataHex))
+        asciiLit("data"), le32(lit(512)), unhex(dataHex))
       val media = tp(s, dir, "documents")
         .select(explode(array(
           struct((g * 2).as("media_id"), genOgg(g).as("content")),
@@ -4254,18 +4055,7 @@ object SparkEntry {
     "q202_crawl_audio_stats" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Warc
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       def bin(c: Column): Column = encode(c, "ISO-8859-1")
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val genOgg = udf { (g: Long) =>
         val ch = (g % 2 + 1).toInt
@@ -4287,24 +4077,24 @@ object SparkEntry {
           concat(byteHex(pmod(v, lit(256L))),
             byteHex(shiftright(v.cast(IntegerType), 8)))
         }), "")
-      val wavP = concat(ascii("RIFF"), le32(n * 2 + 36), ascii("WAVE"),
-        ascii("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
+      val wavP = concat(asciiLit("RIFF"), le32(n * 2 + 36), asciiLit("WAVE"),
+        asciiLit("fmt "), le32(lit(16)), le16(lit(1)), le16(lit(1)),
         le32(lit(8000)), le32(lit(16000)), le16(lit(2)), le16(lit(16)),
-        ascii("data"), le32(n * 2), unhex(dataHex))
+        asciiLit("data"), le32(n * 2), unhex(dataHex))
       def rec(uri: Column, http: Column): Column = concat(
-        ascii("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
+        asciiLit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
         bin(uri),
-        ascii("\r\nContent-Type: application/http; msgtype=response" +
+        asciiLit("\r\nContent-Type: application/http; msgtype=response" +
           "\r\nContent-Length: "),
-        bin(length(http).cast(StringType)), ascii("\r\n\r\n"),
-        http, ascii("\r\n\r\n"))
+        bin(length(http).cast(StringType)), asciiLit("\r\n\r\n"),
+        http, asciiLit("\r\n\r\n"))
       val httpOgg = concat(
-        ascii("HTTP/1.1 200 OK\r\nContent-Type: audio/ogg\r\n\r\n"),
+        asciiLit("HTTP/1.1 200 OK\r\nContent-Type: audio/ogg\r\n\r\n"),
         genOgg(id))
       val httpWav = concat(
-        ascii("HTTP/1.1 200 OK\r\nContent-Type: audio/wav\r\n\r\n"),
+        asciiLit("HTTP/1.1 200 OK\r\nContent-Type: audio/wav\r\n\r\n"),
         wavP)
-      val httpHtml = ascii("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
+      val httpHtml = asciiLit("HTTP/1.1 200 OK\r\nContent-Type: text/html" +
         "\r\n\r\n<p>markup the audio route must drop</p>")
       val warc = concat(
         rec(concat(lit("http://example.com/audio/"), id.cast(StringType),
@@ -4340,11 +4130,6 @@ object SparkEntry {
     "q203_audio_tags" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-          (v >> 16).toByte, (v >> 24).toByte)
-        def be32(v: Int) = Array[Byte]((v >>> 24).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          (v & 0xff).toByte)
         def syncsafe(v: Int) = Array[Byte](((v >> 21) & 0x7f).toByte,
           ((v >> 14) & 0x7f).toByte, ((v >> 7) & 0x7f).toByte,
           (v & 0x7f).toByte)
@@ -4417,12 +4202,6 @@ object SparkEntry {
     "q204_image_tags" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-          (v >> 16).toByte, (v >> 24).toByte)
-        def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-        def be32(v: Int) = Array[Byte]((v >>> 24).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          (v & 0xff).toByte)
         def a(x: String) = x.getBytes("ISO-8859-1")
         val make = s"M${g % 7}"
         val model = s"X$g"
@@ -4508,11 +4287,6 @@ object SparkEntry {
     "q205_video_tags" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def be32(v: Int) = Array[Byte]((v >>> 24).toByte,
-          ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-          (v & 0xff).toByte)
-        def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-          (v >> 16).toByte, (v >> 24).toByte)
         def a(x: String) = x.getBytes("ISO-8859-1")
         def boxB(typ: Array[Byte], payload: Array[Byte]) =
           be32(8 + payload.length) ++ typ ++ payload
@@ -4560,28 +4334,9 @@ object SparkEntry {
     "q206_tar_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def hdr(name: String, size: Long, typeflag: Char): Array[Byte] = {
-          val h = new Array[Byte](512)
-          def putStr(o: Int, len: Int, str: String): Unit = {
-            val bb = str.getBytes("UTF-8")
-            System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-          }
-          def putOctal(o: Int, len: Int, v: Long): Unit =
-            putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-          putStr(0, 100, name)
-          putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-          putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-          java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-          h(156) = typeflag.toByte
-          putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-          var sum = 0L
-          (0 until 512).foreach(i => sum += h(i) & 0xff)
-          putStr(148, 7, "%06o".format(sum) + " ")
-          h
-        }
         def file(name: String, c: Array[Byte]): Array[Byte] = {
           val pad = (512 - c.length % 512) % 512
-          hdr(name, c.length, '0') ++ c ++ new Array[Byte](pad)
+          tarHeader(name, c.length, '0') ++ c ++ new Array[Byte](pad)
         }
         val out = new java.io.ByteArrayOutputStream()
         val k = (g % 4 + 2).toInt
@@ -4590,11 +4345,11 @@ object SparkEntry {
           out.write(file(s"src/f$j.txt", s"c${g}_$j".getBytes("UTF-8")))
           j += 1
         }
-        out.write(hdr("src/sub/", 0, '5')) // directory: skipped
+        out.write(tarHeader("src/sub/", 0, '5')) // directory: skipped
         val longName = "long/" + ("p" * 120) + g
         val nb = longName.getBytes("UTF-8")
         val pad = (512 - nb.length % 512) % 512
-        out.write(hdr("././@LongLink", nb.length, 'L'))
+        out.write(tarHeader("././@LongLink", nb.length, 'L'))
         out.write(nb); out.write(new Array[Byte](pad))
         out.write(file("short", s"L$g".getBytes("UTF-8")))
         out.write(new Array[Byte](1024))
@@ -4654,32 +4409,13 @@ object SparkEntry {
     "q208_tar_bz2_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def hdr(name: String, size: Long, typeflag: Char): Array[Byte] = {
-          val h = new Array[Byte](512)
-          def putStr(o: Int, len: Int, str: String): Unit = {
-            val bb = str.getBytes("UTF-8")
-            System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-          }
-          def putOctal(o: Int, len: Int, v: Long): Unit =
-            putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-          putStr(0, 100, name)
-          putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-          putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-          java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-          h(156) = typeflag.toByte
-          putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-          var sum = 0L
-          (0 until 512).foreach(i => sum += h(i) & 0xff)
-          putStr(148, 7, "%06o".format(sum) + " ")
-          h
-        }
         val out = new java.io.ByteArrayOutputStream()
         val k = (g % 4 + 2).toInt
         var j = 0
         while (j < k) {
           val c = s"c${g}_$j".getBytes("UTF-8")
           val pad = (512 - c.length % 512) % 512
-          out.write(hdr(s"src/f$j.txt", c.length, '0'))
+          out.write(tarHeader(s"src/f$j.txt", c.length, '0'))
           out.write(c); out.write(new Array[Byte](pad))
           j += 1
         }
@@ -4723,32 +4459,13 @@ object SparkEntry {
     "q210_tar_xz_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def hdr(name: String, size: Long): Array[Byte] = {
-          val h = new Array[Byte](512)
-          def putStr(o: Int, len: Int, str: String): Unit = {
-            val bb = str.getBytes("UTF-8")
-            System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-          }
-          def putOctal(o: Int, len: Int, v: Long): Unit =
-            putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-          putStr(0, 100, name)
-          putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-          putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-          java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-          h(156) = '0'.toByte
-          putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-          var sum = 0L
-          (0 until 512).foreach(i => sum += h(i) & 0xff)
-          putStr(148, 7, "%06o".format(sum) + " ")
-          h
-        }
         val out = new java.io.ByteArrayOutputStream()
         val k = (g % 4 + 2).toInt
         var j = 0
         while (j < k) {
           val c = s"c${g}_$j".getBytes("UTF-8")
           val pad = (512 - c.length % 512) % 512
-          out.write(hdr(s"src/f$j.txt", c.length))
+          out.write(tarHeader(s"src/f$j.txt", c.length))
           out.write(c); out.write(new Array[Byte](pad))
           j += 1
         }
@@ -4775,32 +4492,13 @@ object SparkEntry {
     "q211_tar_zst_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long) =>
-        def hdr(name: String, size: Long): Array[Byte] = {
-          val h = new Array[Byte](512)
-          def putStr(o: Int, len: Int, str: String): Unit = {
-            val bb = str.getBytes("UTF-8")
-            System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-          }
-          def putOctal(o: Int, len: Int, v: Long): Unit =
-            putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-          putStr(0, 100, name)
-          putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-          putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-          java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-          h(156) = '0'.toByte
-          putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-          var sum = 0L
-          (0 until 512).foreach(i => sum += h(i) & 0xff)
-          putStr(148, 7, "%06o".format(sum) + " ")
-          h
-        }
         val out = new java.io.ByteArrayOutputStream()
         val k = (g % 4 + 2).toInt
         var j = 0
         while (j < k) {
           val c = s"c${g}_$j".getBytes("UTF-8")
           val pad = (512 - c.length % 512) % 512
-          out.write(hdr(s"src/f$j.txt", c.length))
+          out.write(tarHeader(s"src/f$j.txt", c.length))
           out.write(c); out.write(new Array[Byte](pad))
           j += 1
         }
@@ -4826,7 +4524,6 @@ object SparkEntry {
     "q218_documents_mixed" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
         def zipOf(entries: (String, String)*): Array[Byte] = {
           val bos = new java.io.ByteArrayOutputStream()
           val z = new java.util.zip.ZipOutputStream(bos)
@@ -4929,49 +4626,13 @@ object SparkEntry {
     "q219_archived_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def hdr(name: String, size: Long): Array[Byte] = {
-          val h = new Array[Byte](512)
-          def putStr(o: Int, len: Int, str: String): Unit = {
-            val bb = str.getBytes("UTF-8")
-            System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-          }
-          def putOctal(o: Int, len: Int, v: Long): Unit =
-            putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-          putStr(0, 100, name)
-          putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-          putOctal(124, 12, size); putOctal(136, 12, 1700000000L)
-          java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-          h(156) = '0'.toByte
-          putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-          var sum = 0L
-          (0 until 512).foreach(i => sum += h(i) & 0xff)
-          putStr(148, 7, "%06o".format(sum) + " ")
-          h
-        }
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
-        def docxDoc(line: String): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.ZipOutputStream(bos)
-          z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
-          z.write(("<w:document xmlns:w=\"http://schemas.openxmlformats" +
-            s".org/wordprocessingml/2006/main\"><w:body><w:p><w:r><w:t>" +
-            s"$line</w:t></w:r></w:p></w:body></w:document>")
-            .getBytes("UTF-8"))
-          z.closeEntry(); z.close(); bos.toByteArray
-        }
         def rtfDoc(line: String): Array[Byte] =
           ascii(s"{\\rtf1 $line\\par}")
         val out = new java.io.ByteArrayOutputStream()
         Seq("a.pdf" -> pdfDoc(s"$safe pdf $g"),
           "b.docx" -> docxDoc(s"$safe docx $g"),
           "c.rtf" -> rtfDoc(s"$safe rtf $g")).foreach { case (n, c) =>
-          out.write(hdr(s"docs/$n", c.length))
+          out.write(tarHeader(s"docs/$n", c.length))
           out.write(c)
           out.write(new Array[Byte]((512 - c.length % 512) % 512))
         }
@@ -5045,38 +4706,6 @@ object SparkEntry {
     "q235_arxiv_bundles" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def tarOf(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-          val out = new java.io.ByteArrayOutputStream()
-          entries.foreach { case (name, c) =>
-            val h = new Array[Byte](512)
-            def putStr(o: Int, len: Int, str: String): Unit = {
-              val bb = str.getBytes("UTF-8")
-              System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-            }
-            def putOctal(o: Int, len: Int, v: Long): Unit =
-              putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-            putStr(0, 100, name)
-            putOctal(100, 8, 420); putOctal(108, 8, 0)
-            putOctal(116, 8, 0); putOctal(124, 12, c.length)
-            putOctal(136, 12, 1700000000L)
-            java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-            h(156) = '0'.toByte
-            putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-            var sum = 0L
-            (0 until 512).foreach(i => sum += h(i) & 0xff)
-            putStr(148, 7, "%06o".format(sum) + " ")
-            out.write(h); out.write(c)
-            out.write(new Array[Byte]((512 - c.length % 512) % 512))
-          }
-          out.write(new Array[Byte](1024))
-          out.toByteArray
-        }
-        def gz(b: Array[Byte]): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.GZIPOutputStream(bos)
-          z.write(b); z.close(); bos.toByteArray
-        }
         val tex = "\\documentclass{article}\n" +
           "% generated fixture\n" +
           "\\usepackage{amsmath}\n" +
@@ -5111,33 +4740,6 @@ object SparkEntry {
     "q234_tar_z_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def tarOf(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-          val out = new java.io.ByteArrayOutputStream()
-          entries.foreach { case (name, c) =>
-            val h = new Array[Byte](512)
-            def putStr(o: Int, len: Int, str: String): Unit = {
-              val bb = str.getBytes("UTF-8")
-              System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-            }
-            def putOctal(o: Int, len: Int, v: Long): Unit =
-              putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-            putStr(0, 100, name)
-            putOctal(100, 8, 420); putOctal(108, 8, 0)
-            putOctal(116, 8, 0); putOctal(124, 12, c.length)
-            putOctal(136, 12, 1700000000L)
-            java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-            h(156) = '0'.toByte
-            putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-            var sum = 0L
-            (0 until 512).foreach(i => sum += h(i) & 0xff)
-            putStr(148, 7, "%06o".format(sum) + " ")
-            out.write(h); out.write(c)
-            out.write(new Array[Byte]((512 - c.length % 512) % 512))
-          }
-          out.write(new Array[Byte](1024))
-          out.toByteArray
-        }
         val tar = tarOf(Seq(
           "old/a.rtf" -> ascii(s"{\\rtf1 $safe rtf $g\\par}"),
           "old/b.rtf" -> ascii(s"{\\rtf1 second $g\\par}")))
@@ -5167,44 +4769,6 @@ object SparkEntry {
     "q232_deb_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def tarOf(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
-          val out = new java.io.ByteArrayOutputStream()
-          entries.foreach { case (name, c) =>
-            val h = new Array[Byte](512)
-            def putStr(o: Int, len: Int, str: String): Unit = {
-              val bb = str.getBytes("UTF-8")
-              System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-            }
-            def putOctal(o: Int, len: Int, v: Long): Unit =
-              putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-            putStr(0, 100, name)
-            putOctal(100, 8, 420); putOctal(108, 8, 0)
-            putOctal(116, 8, 0); putOctal(124, 12, c.length)
-            putOctal(136, 12, 1700000000L)
-            java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-            h(156) = '0'.toByte
-            putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-            var sum = 0L
-            (0 until 512).foreach(i => sum += h(i) & 0xff)
-            putStr(148, 7, "%06o".format(sum) + " ")
-            out.write(h); out.write(c)
-            out.write(new Array[Byte]((512 - c.length % 512) % 512))
-          }
-          out.write(new Array[Byte](1024))
-          out.toByteArray
-        }
-        def gz(b: Array[Byte]): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.GZIPOutputStream(bos)
-          z.write(b); z.close(); bos.toByteArray
-        }
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
         val control = tarOf(Seq("./control" ->
           ascii(s"Package: p$g\nVersion: 1.0\n")))
         val data = tarOf(Seq(
@@ -5241,12 +4805,6 @@ object SparkEntry {
     "q233_cpio_documents" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def gz(b: Array[Byte]): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.GZIPOutputStream(bos)
-          z.write(b); z.close(); bos.toByteArray
-        }
         val entries = Seq(
           "docs/a.rtf" -> ascii(s"{\\rtf1 $safe rtf $g\\par}"),
           "docs/b.docx" -> {
@@ -5285,7 +4843,6 @@ object SparkEntry {
     // between cards/components) directly.
     "q231_contact_calendar" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val idB = encode(id.cast("string"), "UTF-8").cast(BinaryType)
       val safe = substring(regexp_replace(
@@ -5294,18 +4851,18 @@ object SparkEntry {
       val m7 = encode((id % 7).cast("string"), "UTF-8").cast(BinaryType)
       val m5 = encode((id % 5).cast("string"), "UTF-8").cast(BinaryType)
       val vcardSingle = concat(
-        ascii("BEGIN:VCARD\nVERSION:3.0\nFN:user "), idB,
-        ascii("\nORG:o "), safeB, ascii(" e\nEMAIL:u"), idB,
-        ascii("@example.org\nPHOTO;ENCODING=b:AAAA\nEND:VCARD\n"))
+        asciiLit("BEGIN:VCARD\nVERSION:3.0\nFN:user "), idB,
+        asciiLit("\nORG:o "), safeB, asciiLit(" e\nEMAIL:u"), idB,
+        asciiLit("@example.org\nPHOTO;ENCODING=b:AAAA\nEND:VCARD\n"))
       val vcardMulti = concat(
-        ascii("BEGIN:VCARD\nFN:first "), idB,
-        ascii("\nEND:VCARD\nBEGIN:VCARD\nFN:second "), m7,
-        ascii("\nNOTE:n "), safeB, ascii(" e\nEND:VCARD\n"))
+        asciiLit("BEGIN:VCARD\nFN:first "), idB,
+        asciiLit("\nEND:VCARD\nBEGIN:VCARD\nFN:second "), m7,
+        asciiLit("\nNOTE:n "), safeB, asciiLit(" e\nEND:VCARD\n"))
       val ics = concat(
-        ascii("BEGIN:VCALENDAR\nVERSION:2.0\nBEGIN:VEVENT\nUID:u@x\n" +
+        asciiLit("BEGIN:VCALENDAR\nVERSION:2.0\nBEGIN:VEVENT\nUID:u@x\n" +
           "DTSTART:20260817T090000Z\nSUMMARY:ev "), m7,
-        ascii("\nDESCRIPTION:d "), safeB, ascii(" e\nLOCATION:room "),
-        m5, ascii("\nEND:VEVENT\nEND:VCALENDAR\n"))
+        asciiLit("\nDESCRIPTION:d "), safeB, asciiLit(" e\nLOCATION:room "),
+        m5, asciiLit("\nEND:VEVENT\nEND:VCALENDAR\n"))
       val blob = when(id % 3 === 0, vcardSingle)
         .when(id % 3 === 1, vcardMulti)
         .otherwise(ics)
@@ -5403,13 +4960,6 @@ object SparkEntry {
     "q228_tnef_mail" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
         val tnef = graft.expr.TnefBuild.tnef(s"tnef ${g % 7}",
           s"inner note $safe $g", viaMapi = g % 2 == 0,
           atts = Seq(
@@ -5464,23 +5014,6 @@ object SparkEntry {
     "q227_msg_corpus" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
-        def docxDoc(line: String): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.ZipOutputStream(bos)
-          z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
-          z.write(("<w:document xmlns:w=\"http://schemas.openxmlformats" +
-            s".org/wordprocessingml/2006/main\"><w:body><w:p><w:r><w:t>" +
-            s"$line</w:t></w:r></w:p></w:body></w:document>")
-            .getBytes("UTF-8"))
-          z.closeEntry(); z.close(); bos.toByteArray
-        }
         val inner = graft.expr.MsgBuild.msgEntries(s"fwd ${g % 5}",
           s"inner $g",
           atts = Seq(("deep.docx", "application/vnd.openxmlformats-" +
@@ -5516,22 +5049,21 @@ object SparkEntry {
     // construction relational; the transport layer is transparent.
     "q226_mboxcl_corpus" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val idB = encode(id.cast("string"), "UTF-8").cast(BinaryType)
-      val body1 = concat(ascii("quote follows\n\nFrom the archive of "),
-        idB, ascii("\nend quote\n"))
+      val body1 = concat(asciiLit("quote follows\n\nFrom the archive of "),
+        idB, asciiLit("\nend quote\n"))
       val msg1 = concat(
-        ascii("From: a@example.com\nSubject: cl "), idB,
-        ascii("\nContent-Length: "),
+        asciiLit("From: a@example.com\nSubject: cl "), idB,
+        asciiLit("\nContent-Length: "),
         encode(length(body1.cast("string")).cast("string"), "UTF-8")
           .cast(BinaryType),
-        ascii("\n\n"), body1)
-      val msg2 = concat(ascii("From: b@example.com\nSubject: plain "),
+        asciiLit("\n\n"), body1)
+      val msg2 = concat(asciiLit("From: b@example.com\nSubject: plain "),
         encode((id % 7).cast("string"), "UTF-8").cast(BinaryType),
-        ascii("\n\nclosing body "), idB, ascii("\n"))
-      val mbox = concat(ascii("From a Mon Jan  1 00:00:00 2026\n"), msg1,
-        ascii("From b Mon Jan  1 00:01:00 2026\n"), msg2)
+        asciiLit("\n\nclosing body "), idB, asciiLit("\n"))
+      val mbox = concat(asciiLit("From a Mon Jan  1 00:00:00 2026\n"), msg1,
+        asciiLit("From b Mon Jan  1 00:01:00 2026\n"), msg2)
       tp(s, dir, "documents")
         .select(id.as("file_id"), posexplode(call_function(
           graft.expr.EmlText.MboxName, mbox, lit(8))))
@@ -5551,23 +5083,6 @@ object SparkEntry {
     "q225_mail_attachments" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
-        def docxDoc(line: String): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.ZipOutputStream(bos)
-          z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
-          z.write(("<w:document xmlns:w=\"http://schemas.openxmlformats" +
-            s".org/wordprocessingml/2006/main\"><w:body><w:p><w:r><w:t>" +
-            s"$line</w:t></w:r></w:p></w:body></w:document>")
-            .getBytes("UTF-8"))
-          z.closeEntry(); z.close(); bos.toByteArray
-        }
         // fixture-side uuencoder (backtick variant), independent of
         // the decode direction
         def uuencode(name: String, data: Array[Byte]): String = {
@@ -5633,31 +5148,30 @@ object SparkEntry {
     // DECODED form, so the encoding layers are transparent).
     "q224_mail_corpus" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val safe = concat(lit("m "), substring(regexp_replace(
         lower(coalesce(col("text"), lit(""))), "[^a-z0-9 ]", " "), 1, 40))
       val idB = encode(id.cast("string"), "UTF-8").cast(BinaryType)
-      val subjWord = concat(ascii("=?UTF-8?B?"),
+      val subjWord = concat(asciiLit("=?UTF-8?B?"),
         encode(base64(encode(concat(lit("re "), safe), "UTF-8")), "UTF-8")
           .cast(BinaryType),
-        ascii("?="))
+        asciiLit("?="))
       val msg1 = concat(
-        ascii("From: alice@example.com\nSubject: "), subjWord,
-        ascii("\nContent-Type: text/plain; charset=utf-8\n" +
+        asciiLit("From: alice@example.com\nSubject: "), subjWord,
+        asciiLit("\nContent-Type: text/plain; charset=utf-8\n" +
           "Content-Transfer-Encoding: quoted-printable\n\n" +
-          "body =C3=A9 "), idB, ascii(" ok\n"))
+          "body =C3=A9 "), idB, asciiLit(" ok\n"))
       val msg2 = concat(
-        ascii("From: bob@example.com\nSubject: thread "),
+        asciiLit("From: bob@example.com\nSubject: thread "),
         encode((id % 7).cast("string"), "UTF-8").cast(BinaryType),
-        ascii("\nMIME-Version: 1.0\n" +
+        asciiLit("\nMIME-Version: 1.0\n" +
           "Content-Type: multipart/alternative; boundary=\"bq\"\n\n" +
           "--bq\nContent-Type: text/html\n\n<p>html ignored "), idB,
-        ascii("</p>\n--bq\nContent-Type: text/plain\n\nplain part "),
-        idB, ascii("\n--bq--\n"))
+        asciiLit("</p>\n--bq\nContent-Type: text/plain\n\nplain part "),
+        idB, asciiLit("\n--bq--\n"))
       val mbox = concat(
-        ascii("From alice Mon Jan  1 00:00:00 2026\n"), msg1,
-        ascii("\nFrom bob Mon Jan  1 00:01:00 2026\n"), msg2)
+        asciiLit("From alice Mon Jan  1 00:00:00 2026\n"), msg1,
+        asciiLit("\nFrom bob Mon Jan  1 00:01:00 2026\n"), msg2)
       tp(s, dir, "documents")
         .select(id.as("file_id"), posexplode(call_function(
           graft.expr.EmlText.MboxName, mbox, lit(8))))
@@ -5675,36 +5189,35 @@ object SparkEntry {
     // plan, all fixture construction RELATIONAL (no udf).
     "q223_warc_documents" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val safe = substring(regexp_replace(
         lower(coalesce(col("text"), lit(""))), "[^a-z0-9 ]", " "), 1, 40)
-      val htmlBody = concat(ascii("<p>crawl page "),
+      val htmlBody = concat(asciiLit("<p>crawl page "),
         encode(id.cast("string"), "UTF-8").cast(BinaryType),
-        ascii("</p>"))
+        asciiLit("</p>"))
       val pdfLine = concat(encode(concat(safe, lit(" pdf ")), "UTF-8")
         .cast(BinaryType),
         encode(id.cast("string"), "UTF-8").cast(BinaryType))
-      val pdfContent = concat(ascii("BT /F1 12 Tf ("), pdfLine,
-        ascii(") Tj ET"))
-      val pdfBody = concat(ascii("%PDF-1.4\n4 0 obj << /Length "),
+      val pdfContent = concat(asciiLit("BT /F1 12 Tf ("), pdfLine,
+        asciiLit(") Tj ET"))
+      val pdfBody = concat(asciiLit("%PDF-1.4\n4 0 obj << /Length "),
         encode(length(pdfContent.cast("string")).cast("string"), "UTF-8")
           .cast(BinaryType),
-        ascii(" >> stream\n"), pdfContent,
-        ascii("\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"))
+        asciiLit(" >> stream\n"), pdfContent,
+        asciiLit("\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n"))
       def http(ctype: String, body: Column): Column =
-        concat(ascii(s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n"),
+        concat(asciiLit(s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n\r\n"),
           body)
       def warcRec(uriTail: String, http0: Column): Column =
-        concat(ascii("WARC/1.0\r\nWARC-Type: response\r\n" +
+        concat(asciiLit("WARC/1.0\r\nWARC-Type: response\r\n" +
           "WARC-Target-URI: http://example.com/" + uriTail),
           encode(id.cast("string"), "UTF-8").cast(BinaryType),
-          ascii("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
+          asciiLit("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
             "Content-Type: application/http; msgtype=response\r\n" +
             "Content-Length: "),
           encode(length(http0.cast("string")).cast("string"), "UTF-8")
             .cast(BinaryType),
-          ascii("\r\n\r\n"), http0, ascii("\r\n\r\n"))
+          asciiLit("\r\n\r\n"), http0, asciiLit("\r\n\r\n"))
       val warc = concat(
         warcRec("page/", http("text/html; charset=utf-8", htmlBody)),
         warcRec("doc/", http("application/pdf", pdfBody)))
@@ -5738,13 +5251,6 @@ object SparkEntry {
     "q222_bcj2_archive" -> ((s, dir) => {
       Graft.tune(s)
       val gen = udf { (g: Long, safe: String) =>
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def pdfDoc(line: String): Array[Byte] = {
-          val content = s"BT /F1 12 Tf ($line) Tj ET"
-          ascii("%PDF-1.4\n" +
-            s"4 0 obj << /Length ${content.length} >> stream\n" +
-            content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-        }
         // branch-dense bytes: converted calls/jumps (rel32 high byte
         // 00/FF), non-address E8s, jcc — the full control-bit mix
         val bin = {
@@ -5877,12 +5383,6 @@ object SparkEntry {
       val gen = udf { (g: Long) =>
         val doc = s"<p>transport t${g % 83} body $g</p>"
         val raw = doc.getBytes("UTF-8")
-        def ascii(x: String) = x.getBytes("ISO-8859-1")
-        def gz(b: Array[Byte]): Array[Byte] = {
-          val bos = new java.io.ByteArrayOutputStream()
-          val z = new java.util.zip.GZIPOutputStream(bos)
-          z.write(b); z.close(); bos.toByteArray
-        }
         def chunk(b: Array[Byte]): Array[Byte] = {
           val cut = math.min(7, b.length)
           ascii(cut.toHexString + "\r\n") ++ b.take(cut) ++
@@ -6120,7 +5620,6 @@ object SparkEntry {
     // replays the box bounds (⌊x2·w/3⌋) and floor means relationally.
     "q188_thumbnails" -> ((s, dir) => {
       Graft.tune(s)
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val id = col("doc_id")
       val wC = (id % 5 + 6).cast(IntegerType)
       val hC = (id % 4 + 5).cast(IntegerType)
@@ -6161,7 +5660,6 @@ object SparkEntry {
     "q181_jpeg_crossformat_neardup" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.Multimodal
-      def byteHex(c: Column): Column = lpad(hex(c), 2, "0")
       val g = col("doc_id")
       val bw = (g % 3 + 2).cast(IntegerType)
       val bh = (g % 2 + 2).cast(IntegerType)
@@ -6205,7 +5703,6 @@ object SparkEntry {
       // JPEG arm: q179's one-byte-per-block construction
       val entropyHex = hex(call_function(graft.expr.PackBytes.FunctionName,
         transform(col("_a.v4s"), x => x * 4), lit(1), lit(0)))
-      def be16(c: Column): Column = lpad(hex(c), 4, "0")
       val jpeg = unhex(concat(
         lit("FFD8"),
         lit("FFDB0043" + "00" + "10" * 64),
@@ -6285,35 +5782,34 @@ object SparkEntry {
     "q172_warc_charsets" -> ((s, dir) => {
       Graft.tune(s)
       def B(bs: Array[Byte]): Column = lit(bs)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val m = id % 3
       val digit = unhex(lpad(hex(id % 7 + 48), 2, "0")) // ASCII digit byte
       val digit16 = concat(digit, B(Array[Byte](0)))    // UTF-16LE digit
       val bodyU8 = concat(
         B("<p>café omega ".getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-        digit, ascii("</p>"))
-      val bodyL1 = concat(ascii("<p>caf"), B(Array(0xE9.toByte)),
-        ascii(" omega "), digit, ascii("</p>"))
+        digit, asciiLit("</p>"))
+      val bodyL1 = concat(asciiLit("<p>caf"), B(Array(0xE9.toByte)),
+        asciiLit(" omega "), digit, asciiLit("</p>"))
       val bodyU16 = concat(B(Array(0xFF.toByte, 0xFE.toByte)),
         B("<p>omega ".getBytes(java.nio.charset.StandardCharsets.UTF_16LE)),
         digit16,
         B(" end</p>".getBytes(java.nio.charset.StandardCharsets.UTF_16LE)))
-      val ctype = when(m === 0, ascii("text/html; charset=utf-8"))
-        .when(m === 1, ascii("text/html; charset=iso-8859-1"))
-        .otherwise(ascii("text/html"))
+      val ctype = when(m === 0, asciiLit("text/html; charset=utf-8"))
+        .when(m === 1, asciiLit("text/html; charset=iso-8859-1"))
+        .otherwise(asciiLit("text/html"))
       val body = when(m === 0, bodyU8).when(m === 1, bodyL1)
         .otherwise(bodyU16)
-      val http = concat(ascii("HTTP/1.1 200 OK\r\nContent-Type: "), ctype,
-        ascii("\r\n\r\n"), body)
-      val resp = concat(ascii("WARC/1.0\r\n" +
+      val http = concat(asciiLit("HTTP/1.1 200 OK\r\nContent-Type: "), ctype,
+        asciiLit("\r\n\r\n"), body)
+      val resp = concat(asciiLit("WARC/1.0\r\n" +
           "WARC-Type: response\r\nWARC-Target-URI: http://example.com/cs/"),
         encode(id.cast(StringType), "UTF-8").cast(BinaryType),
-        ascii("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
+        asciiLit("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
           "Content-Type: application/http; msgtype=response\r\n" +
           "Content-Length: "),
         encode(length(http).cast(StringType), "UTF-8").cast(BinaryType),
-        ascii("\r\n\r\n"), http, ascii("\r\n\r\n"))
+        asciiLit("\r\n\r\n"), http, asciiLit("\r\n\r\n"))
       val files = tp(s, dir, "documents")
         .select(id.as("file_id"), resp.as("content"))
       graft.operators.Warc.htmlDocuments(files)
@@ -6348,35 +5844,34 @@ object SparkEntry {
     "q174_web_pipeline" -> ((s, dir) => {
       Graft.tune(s)
       import graft.operators.{Corpus, Warc}
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       val id = col("doc_id")
       val m = id % 3
       val prefix = when(m === 0,
           lit("café ".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        .when(m === 1, concat(ascii("caf"), lit(Array(0xE9.toByte)),
-          ascii(" ")))
-        .otherwise(concat(lit(Array(0x93.toByte)), ascii("q"),
-          lit(Array(0x94.toByte)), ascii(" ")))
+        .when(m === 1, concat(asciiLit("caf"), lit(Array(0xE9.toByte)),
+          asciiLit(" ")))
+        .otherwise(concat(lit(Array(0x93.toByte)), asciiLit("q"),
+          lit(Array(0x94.toByte)), asciiLit(" ")))
       val body = concat(
-        ascii("<div><a href=\"/\">Home</a> <a href=\"/a\">About</a> " +
+        asciiLit("<div><a href=\"/\">Home</a> <a href=\"/a\">About</a> " +
           "<a href=\"/c\">Contact us</a></div><p>"),
         prefix,
         encode(coalesce(col("text"), lit("")), "UTF-8").cast(BinaryType),
-        ascii("</p><p>Read on</p><div>meta <a href=\"/p\">Privacy</a> " +
+        asciiLit("</p><p>Read on</p><div>meta <a href=\"/p\">Privacy</a> " +
           "<a href=\"/t\">Terms of use</a></div>"))
-      val ctype = when(m === 0, ascii("text/html; charset=utf-8"))
-        .when(m === 1, ascii("text/html; charset=iso-8859-1"))
-        .otherwise(ascii("text/html"))
-      val http = concat(ascii("HTTP/1.1 200 OK\r\nContent-Type: "), ctype,
-        ascii("\r\n\r\n"), body)
-      val resp = concat(ascii("WARC/1.0\r\n" +
+      val ctype = when(m === 0, asciiLit("text/html; charset=utf-8"))
+        .when(m === 1, asciiLit("text/html; charset=iso-8859-1"))
+        .otherwise(asciiLit("text/html"))
+      val http = concat(asciiLit("HTTP/1.1 200 OK\r\nContent-Type: "), ctype,
+        asciiLit("\r\n\r\n"), body)
+      val resp = concat(asciiLit("WARC/1.0\r\n" +
           "WARC-Type: response\r\nWARC-Target-URI: http://example.com/page/"),
         encode(id.cast(StringType), "UTF-8").cast(BinaryType),
-        ascii("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
+        asciiLit("\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
           "Content-Type: application/http; msgtype=response\r\n" +
           "Content-Length: "),
         encode(length(http).cast(StringType), "UTF-8").cast(BinaryType),
-        ascii("\r\n\r\n"), http, ascii("\r\n\r\n"))
+        asciiLit("\r\n\r\n"), http, asciiLit("\r\n\r\n"))
       val files = tp(s, dir, "documents")
         .select(id.as("file_id"), resp.as("content"))
       val recs = Warc.records(files).filter(col("warc_type") === "response")
@@ -6407,22 +5902,12 @@ object SparkEntry {
     // oracle replays the construction through the shared HTML chain
     "q175_epub_text" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       def entry(name: String, data: Column): Column =
         concat(lit(Array[Byte]('P', 'K', 3, 4)), le16(lit(20)),
           le16(lit(0)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
           le32(lit(0)), le32(length(data)), le32(length(data)),
           le16(lit(name.length)), le16(lit(0)),
-          ascii(name), data)
+          asciiLit(name), data)
       val id = col("doc_id")
       val container =
         """<?xml version="1.0"?>
@@ -6444,9 +5929,9 @@ object SparkEntry {
       val ch2 = encode(concat(lit("<h1>Doc "), id, lit("</h1>")), "UTF-8")
         .cast(BinaryType)
       val book = concat(
-        entry("mimetype", ascii("application/epub+zip")),
-        entry("META-INF/container.xml", ascii(container)),
-        entry("OEBPS/content.opf", ascii(opf)),
+        entry("mimetype", asciiLit("application/epub+zip")),
+        entry("META-INF/container.xml", asciiLit(container)),
+        entry("OEBPS/content.opf", asciiLit(opf)),
         entry("OEBPS/ch1.xhtml", ch1),
         entry("OEBPS/ch2.xhtml", ch2))
       tp(s, dir, "documents").select(id.as("doc_id"),
@@ -6463,7 +5948,6 @@ object SparkEntry {
     // (Documents.pdfToText) end-to-end where the rows are.
     "q176_pdf_text" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
       def bin(c: Column): Column = encode(c, "ISO-8859-1")
       val id = col("doc_id")
       // ASCII-only, PDF-delimiter-free, keyword-free text; every step
@@ -6476,22 +5960,22 @@ object SparkEntry {
         1, 80)
       // obj 2: a ToUnicode CMap mapping byte 01 -> U+00E9 (é); pass 1
       // merges it so the \001 escape in obj 4's literal decodes
-      val cmapObj = ascii("2 0 obj << /Length 64 >>\nstream\n" +
+      val cmapObj = asciiLit("2 0 obj << /Length 64 >>\nstream\n" +
         "/CIDInit begincmap 1 beginbfchar <01> <00E9> endbfchar endcmap\n" +
         "endstream\nendobj\n")
       // obj 4: raw (unfiltered) content stream — literal strings,
       // octal escape, Tf font select, Td line break
       val stream1 = concat(
-        ascii("4 0 obj << /Length 0 >>\nstream\nBT /F1 12 Tf ("),
+        asciiLit("4 0 obj << /Length 0 >>\nstream\nBT /F1 12 Tf ("),
         bin(safe),
-        ascii("\\001) Tj 0 -14 Td (page "), bin(id.cast(StringType)),
-        ascii(") Tj ET\nendstream\nendobj\n"))
+        asciiLit("\\001) Tj 0 -14 Td (page "), bin(id.cast(StringType)),
+        asciiLit(") Tj ET\nendstream\nendobj\n"))
       // obj 5: /ASCIIHexDecode arm — TJ array form + a hex string
       val content2 = concat(lit("BT [(hex ) -5 (arm )] TJ (doc "),
         id.cast(StringType), lit(") Tj <2D6F6B> Tj ET"))
       val stream2 = concat(
-        ascii("5 0 obj << /Filter /ASCIIHexDecode >>\nstream\n"),
-        bin(hex(bin(content2))), ascii(">\nendstream\nendobj\n"))
+        asciiLit("5 0 obj << /Filter /ASCIIHexDecode >>\nstream\n"),
+        bin(hex(bin(content2))), asciiLit(">\nendstream\nendobj\n"))
       // obj 6: /FlateDecode arm — deflated ONCE at declaration time
       // (deterministic bytes; SQL cannot deflate, so the payload is a
       // constant and the oracle replays its known text)
@@ -6505,10 +5989,10 @@ object SparkEntry {
         java.util.Arrays.copyOf(buf, n)
       }
       val stream3 = concat(
-        ascii(s"6 0 obj << /Filter /FlateDecode /Length ${deflated.length} >>\nstream\n"),
-        lit(deflated), ascii("\nendstream\nendobj\n"))
-      val pdf = concat(ascii("%PDF-1.4\n"), cmapObj, stream1, stream2,
-        stream3, ascii("trailer << /Size 7 >>\n%%EOF\n"))
+        asciiLit(s"6 0 obj << /Filter /FlateDecode /Length ${deflated.length} >>\nstream\n"),
+        lit(deflated), asciiLit("\nendstream\nendobj\n"))
+      val pdf = concat(asciiLit("%PDF-1.4\n"), cmapObj, stream1, stream2,
+        stream3, asciiLit("trailer << /Size 7 >>\n%%EOF\n"))
       tp(s, dir, "documents").select(id.as("doc_id"),
         substring(call_function(graft.expr.PdfText.FunctionName, pdf),
           1, 220).as("pdf_text"))
@@ -6521,22 +6005,12 @@ object SparkEntry {
     // contract must EXCLUDE; the oracle replays the construction
     "q177_docx_text" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       def entry(name: String, data: Column): Column =
         concat(lit(Array[Byte]('P', 'K', 3, 4)), le16(lit(20)),
           le16(lit(0)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
           le32(lit(0)), le32(length(data)), le32(length(data)),
           le16(lit(name.length)), le16(lit(0)),
-          ascii(name), data)
+          asciiLit(name), data)
       val id = col("doc_id")
       // ASCII-only (XML 1.0 rejects most control chars) and
       // markup-free; both steps replay verbatim in the oracle
@@ -6552,7 +6026,7 @@ object SparkEntry {
         """<w:tbl><w:tr><w:tc><w:p><w:r><w:t>excluded</w:t></w:r></w:p></w:tc></w:tr></w:tbl>""" +
         """</w:body></w:document>""")), "UTF-8")
       val docx = concat(
-        entry("[Content_Types].xml", ascii("<Types/>")),
+        entry("[Content_Types].xml", asciiLit("<Types/>")),
         entry("word/document.xml", docXml))
       tp(s, dir, "documents").select(id.as("doc_id"),
         substring(call_function(graft.expr.DocxText.FunctionName, docx),
@@ -6568,22 +6042,12 @@ object SparkEntry {
     // excluded by default, this query proves every cell surfaces.
     "q187_docx_tables" -> ((s, dir) => {
       Graft.tune(s)
-      def ascii(x: String): Column = lit(x.getBytes("ISO-8859-1"))
-      def le16(c: Column): Column = {
-        val h = lpad(hex(c), 4, "0")
-        unhex(concat(substring(h, 3, 2), substring(h, 1, 2)))
-      }
-      def le32(c: Column): Column = {
-        val h = lpad(hex(c), 8, "0")
-        unhex(concat(substring(h, 7, 2), substring(h, 5, 2),
-          substring(h, 3, 2), substring(h, 1, 2)))
-      }
       def entry(name: String, data: Column): Column =
         concat(lit(Array[Byte]('P', 'K', 3, 4)), le16(lit(20)),
           le16(lit(0)), le16(lit(0)), le16(lit(0)), le16(lit(0)),
           le32(lit(0)), le32(length(data)), le32(length(data)),
           le16(lit(name.length)), le16(lit(0)),
-          ascii(name), data)
+          asciiLit(name), data)
       val id = col("doc_id")
       val safe = substring(
         regexp_replace(regexp_replace(coalesce(col("text"), lit("")),
@@ -6600,7 +6064,7 @@ object SparkEntry {
         cell(lit("r2c1")), cell(concat(lit("r2c2 "), (id * 7).cast(StringType))),
         lit("""</w:tr></w:tbl></w:body></w:document>""")), "UTF-8")
       val docx = concat(
-        entry("[Content_Types].xml", ascii("<Types/>")),
+        entry("[Content_Types].xml", asciiLit("<Types/>")),
         entry("word/document.xml", docXml))
       tp(s, dir, "documents").select(id.as("doc_id"),
         substring(call_function(graft.expr.DocxText.FunctionName, docx,

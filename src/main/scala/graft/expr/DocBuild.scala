@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.Writer
+
 /** Independent CFB + Word97 `.doc` WRITER for fixture construction —
   * its own sector layout, FAT/miniFAT/DIFAT, directory records, FIB
   * and piece-table emission; nothing shared with [[Cfb]]/[[DocText]]
@@ -13,17 +15,6 @@ private[graft] object DocBuild {
   private val Free = 0xffffffffL
   private val EndOfChain = 0xfffffffeL
   private val FatSect = 0xfffffffdL
-
-  private final class W(val out: java.io.ByteArrayOutputStream =
-      new java.io.ByteArrayOutputStream()) {
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def le32(v: Long): Unit = { var i = 0; while (i < 4) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
-    def bytes(b: Array[Byte]): Unit = out.write(b)
-    def pad(to: Int, fill: Int = 0): Unit =
-      while (out.size() % to != 0) u8(fill)
-    def result: Array[Byte] = out.toByteArray
-  }
 
   /** Assemble a v3 (512-byte sector) compound file from named
     * streams; `name` order becomes directory order after root. A
@@ -70,7 +61,7 @@ private[graft] object DocBuild {
     val regulars = streamNodes.filter(_.data.length >= 4096)
 
     // ---- mini stream + miniFAT
-    val miniData = new W
+    val miniData = new Writer
     val miniFat = scala.collection.mutable.ArrayBuffer.empty[Long]
     val miniStarts = new java.util.IdentityHashMap[Node, Long]()
     minis.foreach { node =>
@@ -111,7 +102,7 @@ private[graft] object DocBuild {
     regulars.foreach(node => regStarts.put(node, addChain(node.data)))
     val miniStreamStart = addChain(miniData.result)
     val miniFatBytes = {
-      val w = new W
+      val w = new Writer
       miniFat.foreach(w.le32)
       w.pad(sectorSize, 0xff) // trailing FREESECT entries
       w.result
@@ -122,7 +113,7 @@ private[graft] object DocBuild {
     // ---- directory: each node's siblings link as a right-leaning
     // chain off the parent's child pointer (a valid if unbalanced
     // binary tree — readers must follow both sibling arms)
-    def dirEntry(w: W, name: String, objType: Int, start: Long,
+    def dirEntry(w: Writer, name: String, objType: Int, start: Long,
         size: Long, child: Long, right: Long): Unit = {
       val base = w.out.size()
       name.foreach(c => w.le16(c))
@@ -150,7 +141,7 @@ private[graft] object DocBuild {
         else None
       }.nextOption().getOrElse(Free)
     }
-    val dirW = new W
+    val dirW = new Writer
     dirEntry(dirW, "Root Entry", 5, miniStreamStart,
       miniData.result.length.toLong, firstChild(0), Free)
     nodes.zipWithIndex.drop(1).foreach { case (node, idx) =>
@@ -173,7 +164,7 @@ private[graft] object DocBuild {
     val fatStart = sectors.length.toLong
     (0 until nFat).foreach(_ => fat += FatSect)
     val fatBytes = {
-      val w = new W
+      val w = new Writer
       fat.foreach(w.le32)
       while (w.out.size() < nFat * sectorSize) w.le32(Free)
       w.result
@@ -187,7 +178,7 @@ private[graft] object DocBuild {
     }
 
     // ---- header
-    val h = new W
+    val h = new Writer
     h.bytes(Array[Byte](0xd0.toByte, 0xcf.toByte, 0x11, 0xe0.toByte,
       0xa1.toByte, 0xb1.toByte, 0x1a, 0xe1.toByte))
     (0 until 16).foreach(_ => h.u8(0)) // clsid
@@ -224,7 +215,7 @@ private[graft] object DocBuild {
   def doc(pieces: Seq[(String, Boolean)], padTo4k: Boolean = false):
       Array[Byte] = {
     val fibLen = 0x200
-    val word = new W
+    val word = new Writer
     (0 until fibLen).foreach(_ => word.u8(0))
     val fib = word.result // placeholder; patch after layout
     val text = new java.io.ByteArrayOutputStream()
@@ -239,7 +230,7 @@ private[graft] object DocBuild {
       (fcRaw, s.length.toLong)
     }
     // Clx: one Prc (skipped) + Pcdt
-    val clx = new W
+    val clx = new Writer
     clx.u8(0x01); clx.le16(2); clx.le16(0x2222) // Prc: cb=2 + payload
     clx.u8(0x02)
     val n = pieces.length
@@ -253,7 +244,7 @@ private[graft] object DocBuild {
       clx.le16(0)
     }
     val clxOff = 16 // nonzero: proves fcClx is honored
-    val table = new W
+    val table = new Writer
     (0 until clxOff).foreach(_ => table.u8(0x5a))
     table.bytes(clx.result)
 

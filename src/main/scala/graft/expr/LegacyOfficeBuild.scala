@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.Writer
+
 /** Independent BIFF8 `.xls` and PowerPoint-97 `.ppt` WRITERS for
   * fixture construction — their own record emission (SST CONTINUE
   * splitting at character boundaries with per-segment high-byte
@@ -31,18 +33,6 @@ private[graft] object LegacyOfficeBuild {
   /** Formula with a cached boolean result (FORMULA, tag 1). */
   final case class FBool(v: Boolean) extends Cell
 
-  private final class W(val out: java.io.ByteArrayOutputStream =
-      new java.io.ByteArrayOutputStream()) {
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def le32(v: Long): Unit = {
-      var i = 0
-      while (i < 4) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-    }
-    def bytes(b: Array[Byte]): Unit = out.write(b)
-    def result: Array[Byte] = out.toByteArray
-  }
-
   private def cp1252(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.Charset.forName("windows-1252"))
 
@@ -50,12 +40,12 @@ private[graft] object LegacyOfficeBuild {
   // .xls
   // ------------------------------------------------------------------
 
-  private def record(w: W, id: Int, payload: Array[Byte]): Unit = {
+  private def record(w: Writer, id: Int, payload: Array[Byte]): Unit = {
     w.le16(id); w.le16(payload.length); w.bytes(payload)
   }
 
   private def bof(dt: Int): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.le16(0x0600) // BIFF8
     w.le16(dt)
     w.le16(0x0dbb); w.le16(0x07cc) // build id / year (cosmetic)
@@ -72,12 +62,12 @@ private[graft] object LegacyOfficeBuild {
   private def sstRecords(strings: Seq[String], total: Int,
       maxData: Int): Seq[(Int, Array[Byte])] = {
     val recs = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
-    var cur = new W
+    var cur = new Writer
     var first = true
     def flush(): Unit = {
       recs += ((if (first) 0x00fc else 0x003c, cur.result))
       first = false
-      cur = new W
+      cur = new Writer
     }
     cur.le32(total.toLong)
     cur.le32(strings.length.toLong)
@@ -147,7 +137,7 @@ private[graft] object LegacyOfficeBuild {
       case _ => ()
     }))
 
-    val w = new W
+    val w = new Writer
     record(w, 0x0809, bof(0x0005)) // globals BOF
     if (sstIndex.nonEmpty)
       sstRecords(sstIndex.keys.toSeq, totalUses, maxSstData)
@@ -158,7 +148,7 @@ private[graft] object LegacyOfficeBuild {
       record(w, 0x0809, bof(0x0010)) // worksheet BOF
       rows.zipWithIndex.foreach { case (cells, r) =>
         def number(r: Int, c: Int, v: Double): Unit = {
-          val p = new W
+          val p = new Writer
           p.le16(r); p.le16(c); p.le16(0x000f)
           val bits = java.lang.Double.doubleToLongBits(v)
           p.le32(bits & 0xffffffffL); p.le32(bits >>> 32)
@@ -174,7 +164,7 @@ private[graft] object LegacyOfficeBuild {
               var e = c
               while (e < cells.length && cells(e).isInstanceOf[I] &&
                   rkBits(cells(e)).isDefined) e += 1
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c)
               (c until e).foreach { k =>
                 p.le16(0x000f) // ixfe
@@ -186,7 +176,7 @@ private[graft] object LegacyOfficeBuild {
             case i @ I(v) =>
               rkBits(i) match {
                 case Some(rk) =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   p.le32(rk.toLong & 0xffffffffL)
                   record(w, 0x027e, p.result)
@@ -195,7 +185,7 @@ private[graft] object LegacyOfficeBuild {
             case x @ X100(v) =>
               rkBits(x) match {
                 case Some(rk) =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   p.le32(rk.toLong & 0xffffffffL)
                   record(w, 0x027e, p.result)
@@ -204,19 +194,19 @@ private[graft] object LegacyOfficeBuild {
             case N(v) =>
               number(r, c, v)
             case S(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.le32(sstIndex(v).toLong)
               record(w, 0x00fd, p.result)
             case SInline(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               val hi = v.exists(_ > 0xff)
               p.le16(v.length); p.u8(if (hi) 1 else 0)
               if (hi) v.foreach(p.le16(_)) else p.bytes(cp1252(v))
               record(w, 0x0204, p.result)
             case B(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.u8(if (v) 1 else 0); p.u8(0) // fError = 0
               record(w, 0x0205, p.result)
@@ -235,8 +225,8 @@ private[graft] object LegacyOfficeBuild {
   /** FORMULA record (+ STRING for cached strings): the 8-byte cached
     * slot, flags, chn, and a minimal parsed expression (ptgInt 7).
     */
-  private def formula(w: W, r: Int, c: Int, cell: Cell): Unit = {
-    val p = new W
+  private def formula(w: Writer, r: Int, c: Int, cell: Cell): Unit = {
+    val p = new Writer
     p.le16(r); p.le16(c); p.le16(0x000f)
     cell match {
       case FNum(v) =>
@@ -258,7 +248,7 @@ private[graft] object LegacyOfficeBuild {
     record(w, 0x0006, p.result)
     cell match {
       case FStr(v) =>
-        val sp = new W
+        val sp = new Writer
         val hi = v.exists(_ > 0xff)
         sp.le16(v.length); sp.u8(if (hi) 1 else 0)
         if (hi) v.foreach(sp.le16(_)) else sp.bytes(cp1252(v))
@@ -274,9 +264,9 @@ private[graft] object LegacyOfficeBuild {
     * like Excel 95 did.
     */
   def xls5(sheets: Seq[Seq[Seq[Cell]]]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     def bof5(dt: Int): Array[Byte] = {
-      val b = new W
+      val b = new Writer
       b.le16(0x0500); b.le16(dt); b.le16(0x0dbb); b.le16(0x07cb)
       b.result
     }
@@ -289,18 +279,18 @@ private[graft] object LegacyOfficeBuild {
           cell match {
             case S(v0) =>
               val v = v0.map(ch => if (ch > 0xff) '?' else ch)
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.le16(v.length); p.bytes(cp1252(v))
               record(w, 0x0204, p.result)
             case SInline(v0) =>
               val v = v0.map(ch => if (ch > 0xff) '?' else ch)
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.le16(v.length); p.bytes(cp1252(v))
               record(w, 0x0204, p.result)
             case N(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               val bits = java.lang.Double.doubleToLongBits(v)
               p.le32(bits & 0xffffffffL); p.le32(bits >>> 32)
@@ -308,12 +298,12 @@ private[graft] object LegacyOfficeBuild {
             case i @ I(v) =>
               rkBits(i) match {
                 case Some(rk) =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   p.le32(rk.toLong & 0xffffffffL)
                   record(w, 0x027e, p.result)
                 case None =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   val bits = java.lang.Double.doubleToLongBits(v.toDouble)
                   p.le32(bits & 0xffffffffL); p.le32(bits >>> 32)
@@ -322,24 +312,24 @@ private[graft] object LegacyOfficeBuild {
             case x @ X100(v) =>
               rkBits(x) match {
                 case Some(rk) =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   p.le32(rk.toLong & 0xffffffffL)
                   record(w, 0x027e, p.result)
                 case None =>
-                  val p = new W
+                  val p = new Writer
                   p.le16(r); p.le16(c); p.le16(0x000f)
                   val bits = java.lang.Double.doubleToLongBits(v)
                   p.le32(bits & 0xffffffffL); p.le32(bits >>> 32)
                   record(w, 0x0203, p.result)
               }
             case B(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.u8(if (v) 1 else 0); p.u8(0)
               record(w, 0x0205, p.result)
             case FNum(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               val bits = java.lang.Double.doubleToLongBits(v)
               p.le32(bits & 0xffffffffL); p.le32(bits >>> 32)
@@ -348,18 +338,18 @@ private[graft] object LegacyOfficeBuild {
               record(w, 0x0006, p.result)
             case FStr(v0) =>
               val v = v0.map(ch => if (ch > 0xff) '?' else ch)
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.u8(0); p.u8(0); p.u8(0); p.u8(0); p.u8(0); p.u8(0)
               p.le16(0xffff)
               p.le16(0); p.le32(0); p.le16(3)
               p.u8(0x1e); p.le16(7)
               record(w, 0x0006, p.result)
-              val sp = new W // BIFF5 STRING: a byte string
+              val sp = new Writer // BIFF5 STRING: a byte string
               sp.le16(v.length); sp.bytes(cp1252(v))
               record(w, 0x0207, sp.result)
             case FBool(v) =>
-              val p = new W
+              val p = new Writer
               p.le16(r); p.le16(c); p.le16(0x000f)
               p.u8(1); p.u8(0); p.u8(if (v) 1 else 0)
               p.u8(0); p.u8(0); p.u8(0)
@@ -379,11 +369,11 @@ private[graft] object LegacyOfficeBuild {
     * formatting runs the reader must skip.
     */
   def rstringSheet(row: Int, col: Int, v: String): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     record(w, 0x0809, bof(0x0005))
     record(w, 0x000a, Array.emptyByteArray)
     record(w, 0x0809, bof(0x0010))
-    val p = new W
+    val p = new Writer
     p.le16(row); p.le16(col); p.le16(0x000f)
     val hi = v.exists(_ > 0xff)
     p.le16(v.length); p.u8(if (hi) 1 else 0)
@@ -398,9 +388,9 @@ private[graft] object LegacyOfficeBuild {
     * triage, never mis-decode.
     */
   def xlsEncrypted(): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     record(w, 0x0809, bof(0x0005))
-    val fp = new W
+    val fp = new Writer
     fp.le16(1); fp.le16(1); fp.le16(1) // RC4 CryptoAPI marker
     record(w, 0x002f, fp.result)
     record(w, 0x000a, Array.emptyByteArray)
@@ -411,24 +401,24 @@ private[graft] object LegacyOfficeBuild {
   // .ppt
   // ------------------------------------------------------------------
 
-  private def pptRec(w: W, verInst: Int, typ: Int,
+  private def pptRec(w: Writer, verInst: Int, typ: Int,
       payload: Array[Byte]): Unit = {
     w.le16(verInst); w.le16(typ)
     w.le32(payload.length.toLong)
     w.bytes(payload)
   }
 
-  private def slideContainer(stream: W, paras: Seq[String]): Unit = {
-    val inner = new W
+  private def slideContainer(stream: Writer, paras: Seq[String]): Unit = {
+    val inner = new Writer
     // SlideAtom stand-in the reader skips (non-text atom)
     pptRec(inner, 0x0002, 0x03ef, new Array[Byte](24))
     paras.grouped(2).foreach { group =>
       val text = group.mkString("\r")
-      val hdr = new W
+      val hdr = new Writer
       hdr.le32(0) // txtype: title/body/other — cosmetic here
       pptRec(inner, 0x0000, 0x0f9f, hdr.result) // TextHeaderAtom
       if (text.exists(_ > 0xff)) {
-        val p = new W
+        val p = new Writer
         text.foreach(p.le16(_))
         pptRec(inner, 0x0000, 0x0fa0, p.result) // TextCharsAtom
       } else
@@ -443,9 +433,9 @@ private[graft] object LegacyOfficeBuild {
     * persist directory — the reader's linear fallback shape.
     */
   def ppt(slides: Seq[Seq[String]]): Array[Byte] = {
-    val stream = new W
+    val stream = new Writer
     slides.foreach(slideContainer(stream, _))
-    val currentUser = new W
+    val currentUser = new Writer
     currentUser.le32(20); currentUser.le32(0xe391c05fL) // magic token
     DocBuild.cfb(Seq(
       "PowerPoint Document" -> stream.result,
@@ -461,7 +451,7 @@ private[graft] object LegacyOfficeBuild {
     * text stays in the stream but must not appear.
     */
   def pptIncremental(edits: Seq[Seq[(Int, Seq[String])]]): Array[Byte] = {
-    val stream = new W
+    val stream = new Writer
     var prevEdit = 0L
     edits.foreach { edit =>
       val offsets = edit.map { case (pid, paras) =>
@@ -470,14 +460,14 @@ private[graft] object LegacyOfficeBuild {
         pid -> off
       }
       val dirOff = stream.out.size()
-      val dp = new W
+      val dp = new Writer
       offsets.foreach { case (pid, off) =>
         dp.le32((1L << 20) | pid) // cPersist=1 in bits 20.., id low 20
         dp.le32(off.toLong)
       }
       pptRec(stream, 0x0000, 0x1772, dp.result) // PersistDirectoryAtom
       val editOff = stream.out.size()
-      val up = new W
+      val up = new Writer
       up.le32(0) // lastSlideIdRef
       up.le16(0); up.u8(0); up.u8(3) // version fields
       up.le32(prevEdit) // offsetLastEdit: 0 terminates the chain
@@ -488,9 +478,9 @@ private[graft] object LegacyOfficeBuild {
       pptRec(stream, 0x0000, 0x0ff5, up.result) // UserEditAtom
       prevEdit = editOff.toLong
     }
-    val cu = new W
+    val cu = new Writer
     cu.le16(0); cu.le16(0x0ff6) // CurrentUserAtom record header
-    val body = new W
+    val body = new Writer
     body.le32(20) // size
     body.le32(0xe391c05fL) // headerToken: not encrypted
     body.le32(prevEdit) // offsetToCurrentEdit
@@ -507,11 +497,11 @@ private[graft] object LegacyOfficeBuild {
     * is the MS-PPT encryption marker — the reader must triage.
     */
   def pptEncrypted(): Array[Byte] = {
-    val stream = new W
+    val stream = new Writer
     slideContainer(stream, Seq("cipher text"))
-    val cu = new W
+    val cu = new Writer
     cu.le16(0); cu.le16(0x0ff6)
-    val body = new W
+    val body = new Writer
     body.le32(20); body.le32(0xf3d1c4dfL); body.le32(0)
     body.le16(0); body.le16(0); body.u8(3); body.u8(0); body.le16(0)
     cu.le32(body.result.length.toLong)

@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.Writer
+
 /** Independent LZ4 WRITER for fixture construction — its own greedy
   * hash-table matcher and sequence emitter over the block format,
   * plus frame/legacy containers; nothing shared with [[Lz4]]'s
@@ -12,26 +14,13 @@ package graft.expr
   */
 private[graft] object Lz4Build {
 
-  private final class W(val out: java.io.ByteArrayOutputStream =
-      new java.io.ByteArrayOutputStream()) {
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def le32(v: Long): Unit = {
-      var i = 0
-      while (i < 4) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-    }
-    def bytes(b: Array[Byte], from: Int, len: Int): Unit =
-      out.write(b, from, len)
-    def result: Array[Byte] = out.toByteArray
-  }
-
   /** Greedy block compression: 4-byte-hash candidates, matches end
     * before the last 5 bytes, final sequence literal-only (the block
     * format's closing rule).
     */
   private[graft] def compressBlock(d: Array[Byte], from: Int,
       until: Int): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     val hashLog = 12
     val table = new Array[Int](1 << hashLog)
     java.util.Arrays.fill(table, -1)
@@ -88,11 +77,11 @@ private[graft] object Lz4Build {
     */
   def frame(data: Array[Byte], blockCk: Boolean = false,
       contentSize: Boolean = false): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.le32(0x184d2204L)
     val flg = 0x40 | 0x20 | 0x04 |
       (if (blockCk) 0x10 else 0) | (if (contentSize) 0x08 else 0)
-    val desc = new W
+    val desc = new Writer
     desc.u8(flg)
     desc.u8(0x40) // BD: 64 KiB max block
     if (contentSize) { desc.le32(data.length.toLong); desc.le32(0L) }
@@ -121,7 +110,7 @@ private[graft] object Lz4Build {
 
   /** Legacy frame: one 8 MiB-capped compressed block per chunk. */
   def legacy(data: Array[Byte]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.le32(0x184c2102L)
     var o = 0
     while (o < data.length || o == 0) {

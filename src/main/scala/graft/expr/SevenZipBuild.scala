@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.Writer
+
 /** Independent 7z WRITER for fixture construction — implemented from
   * the container description alone, sharing no parsing machinery
   * with [[SevenZip]] (numbers, bit vectors, CRCs and the header tree
@@ -24,10 +26,9 @@ private[graft] object SevenZipBuild {
     c.getValue
   }
 
-  private final class W {
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def bytes(b: Array[Byte]): Unit = out.write(b)
+  /** The 7z-specific encodings on top of the shared fixture writer. */
+  private implicit final class SevenZipWriter(private val w: Writer)
+      extends AnyVal {
     /** 7z variable-length number (shortest form). */
     def num(v: Long): Unit = {
       require(v >= 0)
@@ -38,12 +39,10 @@ private[graft] object SevenZipBuild {
       var i = 0
       while (i < extra) { firstMask |= 0x80 >> i; i += 1 }
       val high = if (extra < 8) (v >>> (8 * extra)).toInt else 0
-      u8(firstMask | high)
+      w.u8(firstMask | high)
       i = 0
-      while (i < extra) { u8(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
+      while (i < extra) { w.u8(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
     }
-    def le32(v: Long): Unit = { var i = 0; while (i < 4) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
-    def le64(v: Long): Unit = { var i = 0; while (i < 8) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
     /** MSB-first bit vector. */
     def bits(v: Seq[Boolean]): Unit = {
       var i = 0
@@ -51,18 +50,17 @@ private[graft] object SevenZipBuild {
       v.foreach { b =>
         if (b) cur |= 0x80 >> (i % 8)
         i += 1
-        if (i % 8 == 0) { u8(cur); cur = 0 }
+        if (i % 8 == 0) { w.u8(cur); cur = 0 }
       }
-      if (i % 8 != 0) u8(cur)
+      if (i % 8 != 0) w.u8(cur)
     }
-    def result: Array[Byte] = out.toByteArray
   }
 
   /** Store-mode LZMA2: the payload as uncompressed chunks + end
     * marker (a spec-valid LZMA2 stream, no encoder needed).
     */
   private def lzma2Store(data: Array[Byte]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     var off = 0
     var first = true
     while (off < data.length) {
@@ -85,7 +83,7 @@ private[graft] object SevenZipBuild {
       chain: Seq[(Long, Array[Byte], Long)],
       subSizes: Seq[Long], subCrcs: Seq[Long],
       packPos: Long): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.u8(0x01) // kHeader
     if (packSize > 0) {
       w.u8(0x04) // kMainStreamsInfo
@@ -124,18 +122,18 @@ private[graft] object SevenZipBuild {
     val anyEmpty = entries.exists(e => e.dir || e.content.isEmpty)
     if (anyEmpty) {
       val v = entries.map(e => e.dir || e.content.isEmpty)
-      val body = new W
+      val body = new Writer
       body.bits(v)
       w.num(0x0e); w.num(body.result.length); w.bytes(body.result)
       val emptyFiles = entries.filter(e => e.dir || e.content.isEmpty)
         .map(!_.dir)
       if (emptyFiles.exists(x => x)) {
-        val body2 = new W
+        val body2 = new Writer
         body2.bits(emptyFiles)
         w.num(0x0f); w.num(body2.result.length); w.bytes(body2.result)
       }
     }
-    val nameBody = new W
+    val nameBody = new Writer
     nameBody.u8(0) // internal
     entries.foreach { e =>
       e.name.foreach { ch => nameBody.u8(ch & 0xff); nameBody.u8(ch >> 8) }
@@ -149,10 +147,10 @@ private[graft] object SevenZipBuild {
 
   private def container(packed: Array[Byte], nextHeader: Array[Byte]):
       Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.bytes(Array[Byte]('7', 'z', 0xbc.toByte, 0xaf.toByte, 0x27, 0x1c))
     w.u8(0); w.u8(4) // version
-    val startHeader = new W
+    val startHeader = new Writer
     startHeader.le64(packed.length.toLong) // next header offset
     startHeader.le64(nextHeader.length.toLong)
     startHeader.le32(crc32(nextHeader, 0, nextHeader.length))
@@ -186,7 +184,7 @@ private[graft] object SevenZipBuild {
     if (!encodedHeader) container(packed, hdr)
     else {
       // ship the header as a Copy folder appended after the pack data
-      val w = new W
+      val w = new Writer
       w.u8(0x17) // kEncodedHeader
       w.u8(0x06); w.num(packed.length.toLong); w.num(1) // pack at offset
       w.u8(0x09); w.num(hdr.length.toLong); w.u8(0x00)
@@ -347,7 +345,7 @@ private[graft] object SevenZipBuild {
       streamed.foreach(e => cat.write(e.content))
       cat.toByteArray
     }
-    val w = new W
+    val w = new Writer
     w.u8(0x01) // kHeader
     w.u8(0x04) // kMainStreamsInfo
     w.u8(0x06) // kPackInfo
@@ -393,7 +391,7 @@ private[graft] object SevenZipBuild {
     // FilesInfo: names only (no empties in the BCJ2 fixtures)
     w.u8(0x05)
     w.num(entries.length.toLong)
-    val nameBody = new W
+    val nameBody = new Writer
     nameBody.u8(0)
     entries.foreach { e =>
       e.name.foreach { ch => nameBody.u8(ch & 0xff); nameBody.u8(ch >> 8) }

@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.Writer
+
 /** Independent Snappy WRITER for fixture construction — its own
   * greedy hash matcher and element emitter over the raw block
   * format, plus the framing container; nothing shared with
@@ -10,19 +12,11 @@ package graft.expr
   */
 private[graft] object SnappyBuild {
 
-  private final class W(val out: java.io.ByteArrayOutputStream =
-      new java.io.ByteArrayOutputStream()) {
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def bytes(b: Array[Byte], from: Int, len: Int): Unit =
-      out.write(b, from, len)
-    def result: Array[Byte] = out.toByteArray
-  }
-
   /** Raw snappy of `data`: varint length, then greedy literal/copy
     * elements (2-byte offsets, 64-byte copy segments).
     */
   def raw(data: Array[Byte]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     var v = data.length
     while ((v & ~0x7f) != 0) { w.u8((v & 0x7f) | 0x80); v >>>= 7 }
     w.u8(v)
@@ -85,7 +79,7 @@ private[graft] object SnappyBuild {
     * with the masked CRC32C of its uncompressed bytes.
     */
   def framed(data: Array[Byte]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.u8(0xff); w.u8(6); w.u8(0); w.u8(0)
     "sNaPpY".foreach(c => w.u8(c))
     var o = 0

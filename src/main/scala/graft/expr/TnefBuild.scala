@@ -1,31 +1,20 @@
 package graft.expr
 
-/** Independent TNEF WRITER for fixture construction — its own
-  * little-endian emitter, per-attribute byte-sum checksums, and MAPI
-  * property-list encoder (standard + named properties, fixed and
-  * variable values with 4-byte padding); nothing shared with
-  * [[Tnef]]'s reading direction, so parse(build(·)) is a genuine
-  * structural differential.
+import graft.fixtures.FixtureBytes.Writer
+
+/** Independent TNEF WRITER for fixture construction — little-endian
+  * fields through the shared fixture [[graft.fixtures.FixtureBytes.Writer]],
+  * per-attribute byte-sum checksums, and a MAPI property-list encoder
+  * (standard + named properties, fixed and variable values with 4-byte
+  * padding); nothing shared with [[Tnef]]'s reading direction, so
+  * parse(build(·)) is a genuine structural differential.
   */
 private[graft] object TnefBuild {
-
-  private final class W(val out: java.io.ByteArrayOutputStream =
-      new java.io.ByteArrayOutputStream()) {
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def le32(v: Long): Unit = {
-      var i = 0
-      while (i < 4) { u8(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-    }
-    def bytes(b: Array[Byte]): Unit = out.write(b)
-    def pad4(): Unit = while (out.size() % 4 != 0) u8(0)
-    def result: Array[Byte] = out.toByteArray
-  }
 
   private def cp1252(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.Charset.forName("windows-1252"))
 
-  private def attribute(w: W, level: Int, idType: Long,
+  private def attribute(w: Writer, level: Int, idType: Long,
       data: Array[Byte]): Unit = {
     w.u8(level)
     w.le32(idType)
@@ -37,7 +26,7 @@ private[graft] object TnefBuild {
   }
 
   private def atpStr(s: String): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.bytes(cp1252(s)); w.u8(0)
     w.result
   }
@@ -52,7 +41,7 @@ private[graft] object TnefBuild {
   final case class PNamed(id: Int, name: String, v: String) extends Prop
 
   private def mapi(props: Seq[Prop]): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.le32(props.length.toLong)
     props.foreach { p =>
       val ptype = p match {
@@ -67,22 +56,22 @@ private[graft] object TnefBuild {
           (0 until 16).foreach(_ => w.u8(0x42)) // property-set GUID
           w.le32(1) // kind: by name
           val nb = (name + "\u0000").getBytes("UTF-16LE")
-          w.le32(nb.length.toLong); w.bytes(nb); w.pad4()
+          w.le32(nb.length.toLong); w.bytes(nb); w.pad(4)
         case _ => ()
       }
       p match {
         case PLong(_, v) => w.le32(v)
         case PStr8(_, v) =>
           val raw = cp1252(v) :+ 0.toByte
-          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad4()
+          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad(4)
         case PNamed(_, _, v) =>
           val raw = cp1252(v) :+ 0.toByte
-          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad4()
+          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad(4)
         case PUni(_, v) =>
           val raw = (v + "\u0000").getBytes("UTF-16LE")
-          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad4()
+          w.le32(1); w.le32(raw.length.toLong); w.bytes(raw); w.pad(4)
         case PBin(_, v) =>
-          w.le32(1); w.le32(v.length.toLong); w.bytes(v); w.pad4()
+          w.le32(1); w.le32(v.length.toLong); w.bytes(v); w.pad(4)
       }
     }
     w.result
@@ -101,14 +90,14 @@ private[graft] object TnefBuild {
     */
   def tnef(subject: String, body: String, viaMapi: Boolean = false,
       atts: Seq[Attach] = Nil): Array[Byte] = {
-    val w = new W
+    val w = new Writer
     w.le32(Tnef.Signature)
     w.le16(0x1234) // legacy key
     attribute(w, 1, 0x00089006L, { // attTnefVersion
-      val v = new W; v.le32(0x00010000L); v.result
+      val v = new Writer; v.le32(0x00010000L); v.result
     })
     attribute(w, 1, 0x00069007L, { // attOemCodepage
-      val v = new W; v.le32(1252L); v.le32(0L); v.result
+      val v = new Writer; v.le32(1252L); v.le32(0L); v.result
     })
     if (viaMapi) {
       val props = scala.collection.mutable.ArrayBuffer.empty[Prop]

@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.fixtures.FixtureBytes.le32
+
 /** Minimal deterministic .xz WRITER for the oracle-gated xz queries
   * — NOT a compressor: the payload travels in LZMA2 UNCOMPRESSED
   * chunks (control 0x01/0x02), which is a fully valid stream per the
@@ -39,10 +41,6 @@ private[graft] object XzBuild {
     out.toByteArray
   }
 
-  private def le32(v: Long): Array[Byte] =
-    Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte,
-      (v >> 24).toByte)
-
   /** Store `data` (≤ ~8 MB practical fixture sizes) as one block of
     * uncompressed LZMA2 chunks under a CRC64 check.
     */
@@ -60,7 +58,7 @@ private[graft] object XzBuild {
     out.write(Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0))
     val flags = Array[Byte](0, 0x04)
     out.write(flags)
-    out.write(le32(crc32(flags, 0, 2)))
+    out.write(le32(crc32(flags, 0, 2).toInt))
 
     // ---- block header: LZMA2 filter, props = dict size code 0
     val hdrBody = new java.io.ByteArrayOutputStream()
@@ -75,7 +73,7 @@ private[graft] object XzBuild {
     val hb = hdrBody.toByteArray
     System.arraycopy(hb, 0, hdr, 1, hb.length)
     val hc = crc32(hdr, 0, hdrSize - 4)
-    System.arraycopy(le32(hc), 0, hdr, hdrSize - 4, 4)
+    System.arraycopy(le32(hc.toInt), 0, hdr, hdrSize - 4, 4)
     out.write(hdr)
 
     // ---- block data: uncompressed LZMA2 chunks (≤ 64 KiB each)
@@ -114,12 +112,12 @@ private[graft] object XzBuild {
     val idxArr = java.util.Arrays.copyOf(idx.toByteArray,
       idx.size() + ipad)
     out.write(idxArr)
-    out.write(le32(crc32(idxArr, 0, idxArr.length)))
+    out.write(le32(crc32(idxArr, 0, idxArr.length).toInt))
 
     // ---- footer: CRC32(backward+flags), backward size, flags, YZ
-    val backward = le32(((idxArr.length + 4) / 4 - 1).toLong)
+    val backward = le32((idxArr.length + 4) / 4 - 1)
     val tail = backward ++ flags
-    out.write(le32(crc32(tail, 0, tail.length)))
+    out.write(le32(crc32(tail, 0, tail.length).toInt))
     out.write(tail)
     out.write('Y'); out.write('Z')
     out.toByteArray

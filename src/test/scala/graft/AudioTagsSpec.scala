@@ -10,19 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class AudioTagsSpec extends AnyFunSuite {
 
   import graft.expr.AudioTags
+  import graft.fixtures.FixtureBytes._
 
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
 
   private def syncsafe(v: Int): Array[Byte] =
     bytes((v >> 21) & 0x7f, (v >> 14) & 0x7f, (v >> 7) & 0x7f, v & 0x7f)
-
-  private def be32(v: Int): Array[Byte] =
-    bytes(v >>> 24, (v >> 16) & 0xff, (v >> 8) & 0xff, v & 0xff)
-
-  private def le32(v: Int): Array[Byte] =
-    bytes(v & 0xff, (v >> 8) & 0xff, (v >> 16) & 0xff, v >>> 24)
-
-  private def ascii(s: String) = s.getBytes("ISO-8859-1")
 
   // ---- ID3v2 ----
 

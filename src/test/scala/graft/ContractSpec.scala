@@ -53,6 +53,38 @@ class ContractSpec extends AnyFunSuite {
     assert(bad.getMessage.contains("unsupported events.ts type"))
   }
 
+  test("fixture byte builders are declared only in graft.fixtures.FixtureBytes") {
+    // query bodies, dev mains, the *Build encoders and the specs call the
+    // one copy; a decoder's bounded reader `(b: Array[Byte], o: Int)` is
+    // a different thing and stays with its decoder
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val names = Seq("ascii", "le16", "le32", "le64", "be", "be16", "be32",
+      "byteHex", "le32hex", "hexOf", "pdfDoc", "docxDoc", "gz", "tarOf")
+    val decl = ("\\bdef (" + names.mkString("|") + ")\\b(.*)").r
+    def scalaFiles(dir: String): Seq[Path] = {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally s.close()
+    }
+    val files = Seq(Paths.get("src/main/scala/graft/SparkEntry.scala"),
+      Paths.get("src/main/scala/graft/ScaleShakeout.scala")) ++
+      scalaFiles("src/main/scala/graft/expr")
+        .filter(_.getFileName.toString.endsWith("Build.scala")) ++
+      scalaFiles("src/test/scala")
+    assert(files.forall(Files.isRegularFile(_)) && files.size > 20,
+      s"run from the repository root: $files")
+    val copies = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      m <- decl.findFirstMatchIn(line)
+      if !m.group(2).startsWith("(b: Array[Byte], o: Int)")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(copies.isEmpty,
+      s"use graft.fixtures.FixtureBytes instead of a local copy:\n" +
+        copies.mkString("\n"))
+  }
+
   test("every query's output schema is unambiguous for the driver compare") {
     // the driver sorts columns BY NAME before hashing — duplicate or
     // unstable names would silently scramble the comparison

@@ -712,4 +712,63 @@ class CorpusSpec extends SparkSpec {
         s"$op: instance exchange not reused:\n$plan")
     }
   }
+
+  test("q71/q84/q115: every tokenizer node runs split(lower(...)) once") {
+    // the r17 explode(array(...)) barriers keep a token-count gate from
+    // re-running the tokenizer once per conjunct below the exchange;
+    // equal rows would not notice that regression, so pin the executed
+    // adaptive plan: no node tokenizes twice, and the tokenizing nodes
+    // are exactly one per corpus subtree. Query stages and cached plans
+    // are walked once; a ReusedExchange runs nothing again.
+    import org.apache.spark.sql.catalyst.expressions.{Lower, StringSplit}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def tokenizers(root: SparkPlan): Seq[(String, Int)] = {
+      val seenCaches = new java.util.IdentityHashMap[AnyRef, AnyRef]()
+      def walk(p: SparkPlan): Seq[(String, Int)] = {
+        val n = p.expressions.map(_.collect {
+          case StringSplit(Lower(_), _, _) => 1 }.sum).sum
+        val here = if (n > 0) Seq(p.nodeName -> n) else Nil
+        here ++ (p match {
+          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+          case s: QueryStageExec => walk(s.plan)
+          case _: ReusedExchangeExec => Nil
+          case m: InMemoryTableScanExec =>
+            if (seenCaches.put(m.relation.cacheBuilder, m) != null) Nil
+            else walk(m.relation.cachedPlan)
+          case o => o.children.flatMap(walk)
+        })
+      }
+      walk(root)
+    }
+    // a documents table shaped like the sf0.001 one: 500 docs of 10–99
+    // words over a 40-word vocabulary, 20 sources of 25 docs each
+    val dir = java.nio.file.Files.createTempDirectory("corpus-plans").toFile
+    val vocab = (0 until 40).map(i => s"w$i")
+    val rnd = new scala.util.Random(7)
+    (0L until 500L).map { id =>
+      val text = Seq.fill(10 + rnd.nextInt(90))(vocab(rnd.nextInt(40)))
+        .mkString(" ")
+      (id, text, "en", s"src${id % 20}", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    try for ((q, subtrees) <- Seq(
+        // the gate's count on each anti-join side (decontaminate plans
+        // the gated corpus twice) + packSequences' count of the kept docs
+        "q71_curation_pipeline" -> 3,
+        // bigram histogram, cached unigram histogram, the totals
+        "q84_pmi_bigrams" -> 3,
+        // the scorers' one instance exchange + the cached model counts
+        "q115_bigram_lm" -> 2)) {
+      val df = SparkEntry.queries(q)(spark, dir.toString)
+      assert(df.collect().nonEmpty, s"$q: no rows")
+      val found = tokenizers(df.queryExecution.executedPlan)
+      graft.Caches.release(spark)
+      assert(found.forall(_._2 == 1) && found.size == subtrees,
+        s"$q: tokenizer nodes $found, want $subtrees single-call nodes:\n" +
+          df.queryExecution.executedPlan)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

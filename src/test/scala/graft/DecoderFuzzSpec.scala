@@ -22,6 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * add the entry point to [[decoders]] and the families apply.
   */
 class DecoderFuzzSpec extends AnyFunSuite {
+  import graft.fixtures.FixtureBytes._
 
   private val decoders: Seq[(String, Array[Byte] => Any)] = Seq(
     "AudioStats" -> (b => graft.expr.AudioStats.parse(b)),
@@ -166,10 +167,6 @@ class DecoderFuzzSpec extends AnyFunSuite {
   }
 
   test("every truncation of valid WAV/AVI/RTF/FLAC/zstd/7z/CFB containers never throws") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     val wav = ascii("RIFF") ++ le32(56) ++ ascii("WAVE") ++
       ascii("fmt ") ++ le32(16) ++ le16(1) ++ le16(2) ++ le32(8000) ++
       le32(32000) ++ le16(4) ++ le16(16) ++

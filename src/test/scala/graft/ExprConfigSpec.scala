@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Native cosine expression, CSV source/sink, YAML config loader. */
 class ExprConfigSpec extends SparkSpec {
+  import graft.fixtures.FixtureBytes._
   import spark.implicits._
 
   test("graft_nfc composes decomposed marks, passes ASCII through, null-safe") {
@@ -149,8 +150,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_pixel_stats decodes real PNGs (all filters/color types), PPM, BMP") {
-    def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val tb = typ.getBytes("ISO-8859-1")
       val crc = new java.util.zip.CRC32()
@@ -573,10 +572,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_meta decodes WAV/FLAC headers, nulls the rest") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     // a genuine 44-byte WAV header with a LIST chunk of ODD size before
     // fmt (exercises the word-alignment pad in the chunk walk)
     val wav = ascii("RIFF") ++ le32(36 + 400) ++ ascii("WAVE") ++
@@ -721,10 +716,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_stats decodes WAV PCM samples exactly, nulls the rest") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wav(ch: Int, rate: Int, bits: Int, data: Array[Byte],
         fmtCode: Int = 1, baOverride: Option[Int] = None,
         declaredSize: Option[Int] = None): Array[Byte] = {
@@ -818,10 +809,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_stats decodes G.711 and IMA ADPCM exactly, triages damage") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wavG711(fmtCode: Int, ch: Int, data: Array[Byte],
         bits: Int = 8): Array[Byte] =
       ascii("RIFF") ++ le32(36 + data.length) ++ ascii("WAVE") ++
@@ -948,10 +935,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_stats decodes MS-ADPCM blocks, reads the file's coef table") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wavMs(ch: Int, blockAlign: Int, spb: Int, data: Array[Byte],
         coefs: Seq[(Int, Int)] =
           graft.expr.AudioStats.MsStdCoef1.zip(
@@ -1117,9 +1100,6 @@ class ExprConfigSpec extends SparkSpec {
     // hand-built STORED zip with a deliberately WRONG CRC: the walk
     // must not care (a flipped bit costs a chapter, not the book —
     // and oracle fixtures replay without computing CRC32 in SQL)
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
     def zipStored(es: Seq[(String, String)]): Array[Byte] =
       es.flatMap { case (n, c) =>
         val name = n.getBytes("UTF-8")
@@ -1167,7 +1147,6 @@ class ExprConfigSpec extends SparkSpec {
 
   test("graft_pdf_text: shared parser distributed — filters, CMaps, triage") {
     def parse(b: Array[Byte]) = Option(graft.expr.PdfText.parse(b)).map(_.toString)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def deflate(s: String): Array[Byte] = {
       val d = new java.util.zip.Deflater()
       d.setInput(ascii(s)); d.finish()
@@ -1328,7 +1307,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("http transport decode: chunked framing + Content-Encoding") {
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def textOf(b: Array[Byte]) =
       graft.expr.HttpText.parse(b).getUTF8String(3).toString
     def bodyOf(b: Array[Byte]) = graft.expr.HttpBody.parse(b).getBinary(2)
@@ -1399,7 +1377,6 @@ class ExprConfigSpec extends SparkSpec {
 
   test("graft_http_body: binary body split for non-text crawl payloads") {
     def parse(b: Array[Byte]) = Option(graft.expr.HttpBody.parse(b))
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     // binary body bytes must survive UNDECODED — including sequences
     // that are invalid UTF-8 (the text path would replace them)
     val body = Array[Byte](0x25, 0x50, 0x44, 0x46, 0xFF.toByte,
@@ -1504,10 +1481,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_env_sig: cross-codec fingerprints through the shared decoder") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wavPcm16(samples: Seq[Int]): Array[Byte] = {
       val data = samples.flatMap(v => le16(v & 0xFFFF).toSeq).toArray
       ascii("RIFF") ++ le32(36 + data.length) ++ ascii("WAVE") ++
@@ -1583,10 +1556,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_audio_env_sig: envelope dHash, gain invariance, silence NULL") {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wav16(samples: Seq[Int], ch: Int = 1,
         declaredSize: Option[Int] = None): Array[Byte] = {
       val data = samples.flatMap(v => le16(v & 0xFFFF).toSeq).toArray
@@ -1646,9 +1615,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_avi_frames: movi walk, rec groups, padding, bomb guards") {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def chunk(id: String, data: Array[Byte]): Array[Byte] =
       ascii(id) ++ le32(data.length) ++ data ++
         (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
@@ -1728,10 +1694,7 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_mp4_frames: sample-table walk, stsc runs, co64, guards") {
-    def be32(v: Int) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
     def be64(v: Long) = be32((v >> 32).toInt) ++ be32(v.toInt)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def box(name: String, payload: Array[Byte]): Array[Byte] =
       be32(payload.length + 8) ++ ascii(name) ++ payload
     def hdlr(t: String) = box("hdlr",
@@ -1829,8 +1792,6 @@ class ExprConfigSpec extends SparkSpec {
 
     // pipeline dispatch: AVI and MP4 rows explode through the SAME
     // videoFrames operator; junk contributes nothing
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
     def chunk(id: String, data: Array[Byte]): Array[Byte] =
       ascii(id) ++ le32(data.length) ++ data ++
         (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
@@ -1863,9 +1824,6 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("videoNearDup pairs brightness-shifted twins, drops constants") {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def chunk(id: String, data: Array[Byte]): Array[Byte] =
       ascii(id) ++ le32(data.length) ++ data ++
         (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
@@ -1905,9 +1863,6 @@ class ExprConfigSpec extends SparkSpec {
 
   test("VideoDecoder seam: stub inter-frame codec end-to-end") {
     import graft.operators.Multimodal
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def chunk(id: String, data: Array[Byte]): Array[Byte] =
       ascii(id) ++ le32(data.length) ++ data ++
         (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
@@ -1981,8 +1936,6 @@ class ExprConfigSpec extends SparkSpec {
 
   test("AudioDecoder seam: stub lossy codec end-to-end") {
     import graft.operators.Multimodal
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
     def gaud(rate: Int, samples: Seq[Int]): Array[Byte] =
       "GAUD".getBytes("ISO-8859-1") ++ le32(rate) ++
         samples.map(_.toByte).toArray
@@ -2388,8 +2341,6 @@ class ExprConfigSpec extends SparkSpec {
     // contract); JPEG goes through the hand decoder — a DC-only flat
     // block resizes to the same flat value at every scale
     val gray = { // 2×1 gray PNG, values 10 and 30
-      def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
       def chunk(t: String, d: Array[Byte]): Array[Byte] = {
         val tb = t.getBytes("ISO-8859-1")
         val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(d)
@@ -2417,10 +2368,6 @@ class ExprConfigSpec extends SparkSpec {
 
   test("graft_resample_pcm: exact box means incl. floor on negatives, upsample, stereo, codecs, triage") {
     import graft.expr.ResamplePcm
-    def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
     def wav16(rate: Int, ch: Int, samples: Seq[Int]): Array[Byte] =
       ascii("RIFF") ++ le32(36 + samples.size * 2) ++ ascii("WAVE") ++
         ascii("fmt ") ++ le32(16) ++ le16(1) ++ le16(ch) ++ le32(rate) ++
@@ -2609,11 +2556,6 @@ class ExprConfigSpec extends SparkSpec {
         headers.map { case (k, v) => s"$k: $v\r\n" }.mkString +
         s"Content-Length: ${payload.length}\r\n\r\n")
         .getBytes("UTF-8") ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
-    def gz(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(b); g.close(); bos.toByteArray
-    }
     val info = rec(Seq("WARC-Type" -> "warcinfo",
       "WARC-Date" -> "2026-01-01T00:00:00Z"),
       "software: graft\r\n".getBytes("UTF-8"))
@@ -2697,44 +2639,39 @@ class ExprConfigSpec extends SparkSpec {
   }
 
   test("graft_video_meta walks MP4 box trees, nulls the rest") {
-    def be32(v: Long) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
-    def be64(v: Long) = be32(v >> 32) ++ be32(v & 0xffffffffL)
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
+    def be64(v: Long) = be32((v >> 32).toInt) ++ be32(v.toInt)
     def box(name: String, payload: Array[Byte]) =
-      be32(payload.length + 8L) ++ ascii(name) ++ payload
+      be32(payload.length + 8) ++ ascii(name) ++ payload
     val ftyp = box("ftyp", ascii("isom") ++ Array.fill[Byte](4)(0))
     // mvhd VERSION 1 (64-bit times): ver=1, ctime/mtime 8B each,
     // timescale@20, duration@24 (8B)
     val mvhd1 = box("mvhd", Array[Byte](1, 0, 0, 0) ++
-      Array.fill[Byte](16)(0) ++ be32(90000L) ++ be64(90000L * 7))
+      Array.fill[Byte](16)(0) ++ be32(90000) ++ be64(90000L * 7))
     // an AUDIO track first (0x0 dims) — the walk must skip it
     val tkhdAudio = box("tkhd", Array.fill[Byte](76)(0) ++
-      be32(0L) ++ be32(0L))
+      be32(0) ++ be32(0))
     // then the visual track, tkhd VERSION 1 (width at +88)
     val tkhdVideo = box("tkhd", Array[Byte](1, 0, 0, 0) ++
-      Array.fill[Byte](84)(0) ++ be32(640L << 16) ++ be32(360L << 16))
+      Array.fill[Byte](84)(0) ++ be32(640 << 16) ++ be32(360 << 16))
     val moov = box("moov",
       mvhd1 ++ box("trak", tkhdAudio) ++ box("trak", tkhdVideo))
     val m = graft.expr.VideoMeta.parse(ftyp ++ moov)
     assert(m != null && m.getInt(1) == 640 && m.getInt(2) == 360 &&
       m.getLong(3) == 7000L && m.getInt(4) == 90000)
     // AVI: avih MainAVIHeader — 40 ms/frame × 250 frames of 320×240
-    def le32v(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-      (v >> 16).toByte, (v >> 24).toByte)
-    val avih = le32v(40000) ++ Array.fill[Byte](12)(0) ++ le32v(250) ++
-      Array.fill[Byte](12)(0) ++ le32v(320) ++ le32v(240) ++
+    val avih = le32(40000) ++ Array.fill[Byte](12)(0) ++ le32(250) ++
+      Array.fill[Byte](12)(0) ++ le32(320) ++ le32(240) ++
       Array.fill[Byte](16)(0)
-    val hdrl = ascii("hdrl") ++ ascii("avih") ++ le32v(avih.length) ++ avih
-    val avi = ascii("RIFF") ++ le32v(4 + 8 + hdrl.length) ++ ascii("AVI ") ++
-      ascii("LIST") ++ le32v(hdrl.length) ++ hdrl
+    val hdrl = ascii("hdrl") ++ ascii("avih") ++ le32(avih.length) ++ avih
+    val avi = ascii("RIFF") ++ le32(4 + 8 + hdrl.length) ++ ascii("AVI ") ++
+      ascii("LIST") ++ le32(hdrl.length) ++ hdrl
     val am = graft.expr.VideoMeta.parse(avi)
     assert(am != null && am.getUTF8String(0).toString == "avi" &&
       am.getInt(1) == 320 && am.getInt(2) == 240 &&
       am.getLong(3) == 10000L && am.getInt(4) == 25, am)
     // AVI with no hdrl/avih → null
     assert(graft.expr.VideoMeta.parse(
-      ascii("RIFF") ++ le32v(4) ++ ascii("AVI ")) == null)
+      ascii("RIFF") ++ le32(4) ++ ascii("AVI ")) == null)
 
     // GIF: 3 frames at 7 cs each → 210 ms, timescale 100
     val gifMeta = graft.expr.VideoMeta.parse(
@@ -3064,8 +3001,6 @@ class ExprConfigSpec extends SparkSpec {
     import graft.expr.OrientPixels
     // grayscale PNG (colorType 0) decodes with ch=1; the transform
     // must widen it, not NULL out — 3×2 grid A..F rotated 90° CW (o=6)
-    def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
     def chunk(typ: String, payload: Array[Byte]): Array[Byte] = {
       val tb = typ.getBytes("ISO-8859-1")
       val crc = new java.util.zip.CRC32()

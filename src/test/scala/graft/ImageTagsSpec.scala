@@ -11,14 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class ImageTagsSpec extends AnyFunSuite {
 
   import graft.expr.ImageTags
+  import graft.fixtures.FixtureBytes._
 
   private def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
-  private def ascii(s: String) = s.getBytes("ISO-8859-1")
-  private def be32(v: Int): Array[Byte] =
-    bytes(v >>> 24, (v >> 16) & 0xff, (v >> 8) & 0xff, v & 0xff)
-  private def le32(v: Int): Array[Byte] =
-    bytes(v & 0xff, (v >> 8) & 0xff, (v >> 16) & 0xff, v >>> 24)
-  private def le16(v: Int): Array[Byte] = bytes(v & 0xff, (v >> 8) & 0xff)
 
   /** Little-endian TIFF with IFD0 ASCII entries (+ optional Exif
     * sub-IFD holding 0x9003).

@@ -12,9 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class SevenZipSpec extends AnyFunSuite {
 
   import graft.expr.{SevenZip, SevenZipBuild}
+  import graft.fixtures.FixtureBytes._
   import SevenZipBuild.Entry
-
-  private def ascii(s: String) = s.getBytes("ISO-8859-1")
 
   private def hx(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
@@ -202,7 +201,6 @@ class SevenZipSpec extends AnyFunSuite {
         payload))
     }
   }
-
 
   test("BCJ2 pinned by a PYTHON encoder + REAL liblzma LZMA2 carriers") {
     // the control stream and the stream split were produced by an

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * foreachBatch SCD sink driven synchronously by MemoryStream.
   */
 class StreamingSpec extends SparkSpec {
+  import graft.fixtures.FixtureBytes._
   import spark.implicits._
 
   private case class Ev(link: String, published: java.sql.Timestamp, title: String)
@@ -916,9 +917,6 @@ class StreamingSpec extends SparkSpec {
         vals.flatMap(v => Seq.fill(3)(v.toByte)).toArray
     def bmp(vals: Seq[Int]): Array[Byte] = {
       // minimal bottom-up 24bpp BMP, rows padded to 4 bytes (4·3=12 ✓)
-      def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
-        (v >> 16).toByte, (v >> 24).toByte)
-      def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
       val px = (1 to 0 by -1).flatMap(r => // bottom-up row order
         (0 until 4).flatMap { x =>
           val v = vals(r * 4 + x).toByte
@@ -1060,50 +1058,9 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-doc-dd").toString
     val table = "graft_test_docingest_postings"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    def ascii(s: String) = s.getBytes("ISO-8859-1")
-    def pdfDoc(line: String): Array[Byte] = {
-      val content = s"BT /F1 12 Tf ($line) Tj ET"
-      ascii("%PDF-1.4\n" +
-        s"4 0 obj << /Length ${content.length} >> stream\n" +
-        content + "\nendstream endobj\ntrailer << /Root 1 0 R >>\n%%EOF\n")
-    }
-    def docxDoc(line: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val z = new java.util.zip.ZipOutputStream(bos)
-      z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
-      z.write(("<w:document xmlns:w=\"http://schemas.openxmlformats" +
-        s".org/wordprocessingml/2006/main\"><w:body><w:p><w:r><w:t>" +
-        s"$line</w:t></w:r></w:p></w:body></w:document>").getBytes("UTF-8"))
-      z.closeEntry(); z.close(); bos.toByteArray
-    }
     def docDoc(line: String): Array[Byte] =
       graft.expr.DocBuild.doc(Seq((line + "\r", true)))
     def rtfDoc(line: String): Array[Byte] = ascii(s"{\\rtf1 $line\\par}")
-    def tarOf(entries: (String, Array[Byte])*): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      entries.foreach { case (name, c) =>
-        val h = new Array[Byte](512)
-        def putStr(o: Int, len: Int, str: String): Unit = {
-          val bb = str.getBytes("UTF-8")
-          System.arraycopy(bb, 0, h, o, math.min(bb.length, len))
-        }
-        def putOctal(o: Int, len: Int, v: Long): Unit =
-          putStr(o, len, ("%0" + (len - 1) + "o").format(v))
-        putStr(0, 100, name)
-        putOctal(100, 8, 420); putOctal(108, 8, 0); putOctal(116, 8, 0)
-        putOctal(124, 12, c.length); putOctal(136, 12, 1700000000L)
-        java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-        h(156) = '0'.toByte
-        putStr(257, 6, "ustar"); h(263) = '0'; h(264) = '0'
-        var sum = 0L
-        (0 until 512).foreach(i => sum += h(i) & 0xff)
-        putStr(148, 7, "%06o".format(sum) + " ")
-        out.write(h); out.write(c)
-        out.write(new Array[Byte]((512 - c.length % 512) % 512))
-      }
-      out.write(new Array[Byte](1024))
-      out.toByteArray
-    }
     def ingest(rows: (Long, Array[Byte])*): Unit = {
       val files = rows.toSeq.toDF("file_id", "content")
       val batch = files
@@ -1129,12 +1086,12 @@ class StreamingSpec extends SparkSpec {
     val t3 = "fresh words entirely novel content here"
     // batch 1: t1 as PDF and t2 as DOCX, plus t1 AGAIN as .doc in the
     // SAME archive (within-batch cross-format dup: one survivor)
-    ingest(1L -> tarOf("a.pdf" -> pdfDoc(t1), "b.docx" -> docxDoc(t2),
-      "c.doc" -> docDoc(t1)))
+    ingest(1L -> tarOf(Seq("a.pdf" -> pdfDoc(t1), "b.docx" -> docxDoc(t2),
+      "c.doc" -> docDoc(t1))))
     assert(texts() == Set(t1, t2))
     // batch 2: t1 re-arrives as RTF in a NEW archive (drops vs the
     // index), t3 arrives fresh as .doc (lands)
-    ingest(2L -> tarOf("d.rtf" -> rtfDoc(t1), "e.doc" -> docDoc(t3)))
+    ingest(2L -> tarOf(Seq("d.rtf" -> rtfDoc(t1), "e.doc" -> docDoc(t3))))
     assert(texts() == Set(t1, t2, t3))
     // batch 3: t2 re-arrives as the BODY of an .eml message (the mail
     // arm of the document dispatch; near-dup at jaccard ~0.78 against
@@ -1143,13 +1100,13 @@ class StreamingSpec extends SparkSpec {
     def emlDoc(subject: String, body: String): Array[Byte] =
       (s"From: x@example.com\nSubject: $subject\n\n$body\n")
         .getBytes("ISO-8859-1")
-    ingest(3L -> tarOf("f.eml" -> emlDoc("re", t2),
-      "g.eml" -> emlDoc("fresh", "completely new mail body words here")))
+    ingest(3L -> tarOf(Seq("f.eml" -> emlDoc("re", t2),
+      "g.eml" -> emlDoc("fresh", "completely new mail body words here"))))
     val after3 = texts()
     assert(after3.size == 4 && after3.exists(_.contains("new mail body")))
     // replay self-filters
-    ingest(3L -> tarOf("f.eml" -> emlDoc("re", t2),
-      "g.eml" -> emlDoc("fresh", "completely new mail body words here")))
+    ingest(3L -> tarOf(Seq("f.eml" -> emlDoc("re", t2),
+      "g.eml" -> emlDoc("fresh", "completely new mail body words here"))))
     assert(texts() == after3)
     // batch 4: a longer document lands as DOCX; batch 5 re-delivers
     // it as an Outlook .msg (the compound-file mail arm — the same
@@ -1158,12 +1115,12 @@ class StreamingSpec extends SparkSpec {
     // body) — drops, while a fresh .msg lands
     val t4 = "long base sentence carrying enough tokens that the " +
       "subject prefix stays a near duplicate"
-    ingest(4L -> tarOf("h.docx" -> docxDoc(t4)))
+    ingest(4L -> tarOf(Seq("h.docx" -> docxDoc(t4))))
     assert(texts().size == 5)
-    ingest(5L -> tarOf(
+    ingest(5L -> tarOf(Seq(
       "i.msg" -> graft.expr.MsgBuild.msg("re", t4),
       "j.msg" -> graft.expr.MsgBuild.msg("fresh",
-        "outlook container novel words entirely")))
+        "outlook container novel words entirely"))))
     val after5 = texts()
     assert(after5.size == 6 &&
       after5.exists(_.contains("outlook container novel")))

@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TarEntriesSpec extends AnyFunSuite {
 
   import graft.expr.TarEntries
-
-  private def ascii(s: String) = s.getBytes("ISO-8859-1")
+  import graft.fixtures.FixtureBytes._
 
   private def header(name: String, size: Long, typeflag: Char,
       prefix: String = ""): Array[Byte] = {
