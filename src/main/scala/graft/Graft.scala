@@ -100,7 +100,32 @@ object Graft {
     spark
   }
 
-  /** Standard local session for tests / ad-hoc runs. */
+  /** Standard local session for tests / ad-hoc runs.
+    *
+    * Spark keeps compiled generated code in one JVM-wide LRU cache of
+    * `spark.sql.codegen.cache.maxEntries` classes (default 100). The
+    * pipeline's steady state needs more: one `runRegions` backfill plus
+    * its enrichment uses 85 distinct generated classes, and one
+    * streaming SCD2 round 101, of which 26–34 are new every round
+    * (timestamp literals are inlined into the generated Java). At 100
+    * entries every repeated backfill recompiled 55 of its classes and
+    * every round 72–90. 1000 holds that working set with headroom.
+    *
+    * The cache is keyed by the generated source, and by default each
+    * whole-stage class is named after its codegen stage id. Under AQE
+    * that id depends on the order in which query stages were planned,
+    * so an identical stage could come back under another name and be
+    * compiled again (PipelineSpec saw 4 such recompiles in a repeated
+    * backfill pass). `useIdInClassName = false` drops the id from the
+    * name, so identical stages share one compiled class.
+    *
+    * The setting is a static conf that Spark reads only once per JVM,
+    * when `CodeGenerator` first loads (its static initializer calls
+    * `SQLConf.codegenCacheMaxEntries`). It therefore takes effect only
+    * when a session built here is the first session in the JVM to
+    * generate code; a later session, or `getOrCreate` returning an
+    * existing one, keeps the size the cache was built with.
+    */
   def session(master: String = "local[4]", shufflePartitions: Int = 8): SparkSession = {
     val s = SparkSession
       .builder()
@@ -109,6 +134,8 @@ object Graft {
       // the production install path: native functions injected into the
       // base registry of every session state (see plans.GraftExtensions)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")

@@ -167,8 +167,8 @@ object Corpus {
       .select(col("_id"), xxhash64(col("_t0")).as("_t"))
     // ONE instance exchange for the histogram and the score probe (the
     // q115/bigramLmScore restructure — see there for the
-    // greatest/least-references-_id device and the skew note: the
-    // probe always shuffled raw instances on _t, so clustering the
+    // greatest/least/xxhash64-references-_id device and the skew note:
+    // the probe always shuffled raw instances on _t, so clustering the
     // histogram on the same exchange adds no new skew surface). The
     // vocabulary cache is dropped in this form: a cached plan is its
     // own query execution, so exchange reuse cannot cross it — the
@@ -179,7 +179,7 @@ object Corpus {
       .getOption("spark.graft.lm.sharedExchange").contains("0")
     val tokAll = if (shared) toks(df).repartition(col("_t")) else toks(df)
     val counts0 = tokAll.groupBy("_t").agg(
-      (if (shared) sum(greatest(lit(1L), least(col("_id"), lit(1L))))
+      (if (shared) sum(greatest(lit(1L), least(xxhash64(col("_id")), lit(1L))))
       else count(lit(1))).as("_cnt"))
     val counts =
       if (shared) counts0 else counts0.transform(graft.Caches.own)
@@ -246,9 +246,11 @@ object Corpus {
     // COMPLETE above the same exchange instead of re-deriving the
     // corpus (scan+tokenize+posexplode) a second time for its own
     // partial-agg shuffle. The histogram references _id through
-    // greatest(1, least(_id, 1)) — exactly 1 for every row (least
-    // caps at 1, greatest floors at 1, and greatest skips a null _id),
-    // i.e. count(1) — because with a bare count(1) column pruning
+    // greatest(1, least(xxhash64(_id), 1)) — exactly 1 for every row
+    // (least caps at 1, greatest floors at 1; xxhash64 is a non-null
+    // long for any id type, null included, so the count stays a long
+    // and a string or struct id analyses too), i.e. count(1) —
+    // because with a bare count(1) column pruning
     // would strip _id below the repartition on the histogram branch
     // and the two exchange subtrees would stop being canonically
     // equal (the q97/docFreq lesson). Skew note: the hot-bigram
@@ -276,7 +278,7 @@ object Corpus {
       count(lit(1)).cast(DoubleType).as("_V")))
     val bg = inst.groupBy(col("_a"), col("_b"))
       .agg((if (shared)
-        sum(greatest(lit(1L), least(col("_id"), lit(1L))))
+        sum(greatest(lit(1L), least(xxhash64(col("_id")), lit(1L))))
       else count(lit(1))).as("_cab"))
     val logp = bg.join(uni.select(col("_t").as("_a"), col("_ca")), "_a")
       .crossJoin(vocabRow)

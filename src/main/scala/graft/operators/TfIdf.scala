@@ -66,7 +66,7 @@ object TfIdf {
     val idf: Column => Column = smoothIdf
 
     // (doc, term) postings with term frequency
-    // tf feeds dfreq + weights, and weights feeds docNorm + dots, so
+    // tf feeds dfreq + weights, so
     // the scan→tokenize→explode→aggregate chain is evaluated once per
     // consumer. Measured at sf0.1, that recompute is CHEAPER than
     // persisting either frame (2.7 s uncached vs 6.5 s with tf cached,
@@ -85,9 +85,6 @@ object TfIdf {
       .select(col("_id"), col("_t"),
         round(col("_tf") * idf(col("_df")), 6).cast(wDec).as("_w"))
 
-    val docNorm = weights.groupBy("_id")
-      .agg(sqrt(sum(col("_w") * col("_w")).cast(DoubleType)).as("_norm"))
-
     // query vector: tf over the literal text, idf from the corpus
     val qTf = Seq(queryText).toDF("_qtext")
       .select(explode(TextAnalysis.tokens(col("_qtext"))).as("_t"))
@@ -100,13 +97,17 @@ object TfIdf {
     val qNormRow = broadcast(qWeights
       .agg(sqrt(sum(col("_qw") * col("_qw")).cast(DoubleType)).as("_qnorm")))
 
-    val dots = weights.join(qWeights, "_t")
-      .groupBy("_id")
-      .agg(sum(col("_w") * col("_qw")).cast(DoubleType).as("_dot"))
+    // norm and dot product in one per-document aggregate: every weight
+    // row counts toward the norm, and a row whose term is not in the
+    // query adds nothing to the dot (`sum` skips the null product), so
+    // `_dot` is null exactly when the document shares no query term
+    val perDoc = weights.join(qWeights, Seq("_t"), "left_outer")
+      .groupBy(col("_id").as(idCol))
+      .agg(sqrt(sum(col("_w") * col("_w")).cast(DoubleType)).as("_norm"),
+        sum(col("_w") * col("_qw")).cast(DoubleType).as("_dot"))
 
     docs.select(col(idCol))
-      .join(dots.withColumnRenamed("_id", idCol), Seq(idCol), "left_outer")
-      .join(docNorm.withColumnRenamed("_id", idCol), Seq(idCol), "left_outer")
+      .join(perDoc, Seq(idCol), "left_outer")
       .crossJoin(qNormRow)
       .select(col(idCol),
         when(col("_dot").isNotNull && col("_norm") > 0 && col("_qnorm") > 0,
@@ -241,6 +242,12 @@ object TfIdf {
     * corpus size for the idf; pass it from the snapshot metadata —
     * the default recomputes it from the postings (token-less docs
     * never reach the index, so supply the true count when they exist).
+    *
+    * `table` must hold (_id, _t, _tf) rows with `_tf` non-null and
+    * `>= 1`, one row per (document, term), as [[writePostings]] writes
+    * them. The document frequency counts rows as `sum(least(_tf, 1))`
+    * (see `docFreq`), which equals `count(1)` only under that
+    * contract: a null or 0 `_tf` row would lower a term's df.
     */
   def topTermsFromPostings(spark: org.apache.spark.sql.SparkSession,
       table: String, k: Int, nDocs: Long = -1L,

@@ -713,6 +713,44 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
+  test("LM scorers: string and struct ids score as long ids do; counts stay long") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.types.LongType
+    // the shared-exchange histograms count through the _id-referencing
+    // constant-1 device: it must stay a long count for any id type,
+    // and a struct id must analyse
+    val longIds = ((1L to 30L).map(i =>
+      (i, s"alpha beta gamma delta tok$i alpha beta")) :+
+      ((31L, "alpha beta")) :+ ((32L, ""))).toDF("doc_id", "text")
+    val stringIds = longIds.select(col("doc_id").cast("string").as("doc_id"),
+      col("text"))
+    val structIds = longIds.select(
+      struct(col("doc_id").as("n"), lit("x").as("tag")).as("doc_id"), col("text"))
+    for ((op, score, count) <- Seq(
+        ("uni", Corpus.unigramLmScore _, "_cnt"),
+        ("bi", Corpus.bigramLmScore _, "_cab"))) {
+      def rows(ids: org.apache.spark.sql.DataFrame,
+          id: org.apache.spark.sql.Row => Long): Map[Long, (Long, Double)] = {
+        val q = score(ids, "doc_id", "text")
+        val countTypes = q.queryExecution.analyzed.collect {
+          case a: Aggregate => a.aggregateExpressions.collect {
+            case al: Alias if al.name == count => al.dataType
+          }
+        }.flatten
+        assert(countTypes.nonEmpty && countTypes.forall(_ == LongType),
+          s"$op $count types: $countTypes")
+        val got = q.collect().map(r => id(r) -> ((r.getLong(1), r.getDouble(2)))).toMap
+        graft.Caches.release(spark)
+        got
+      }
+      val expected = rows(longIds, _.getLong(0))
+      assert(expected.nonEmpty)
+      assert(rows(stringIds, _.getString(0).toLong) == expected, s"$op: string ids")
+      assert(rows(structIds, _.getStruct(0).getLong(0)) == expected, s"$op: struct ids")
+    }
+  }
+
   test("q71/q84/q115: every tokenizer node runs split(lower(...)) once") {
     // the r17 explode(array(...)) barriers keep a token-count gate from
     // re-running the tokenizer once per conjunct below the exchange;

@@ -43,6 +43,18 @@ class EnrichmentBoundarySpec extends SparkSpec {
     assert(sims.values.forall(s => s >= 0.0 && s <= 1.0))
   }
 
+  test("tf-idf similarity scores token-less, null and disjoint docs exactly 0") {
+    val docs = Seq[(Long, String)](
+      (1L, "spark sql"),            // the query's own vector: cosine 1
+      (2L, "!!! --- ..."),          // no tokens, no postings
+      (3L, null),                   // null text, no postings
+      (4L, "gardening tips")        // postings, none shared with the query
+    ).toDF("doc_id", "text")
+    val sims = TfIdf.similarity(docs, "doc_id", "text", "spark sql")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(sims == Map(1L -> 1.0, 2L -> 0.0, 3L -> 0.0, 4L -> 0.0))
+  }
+
   test("bm25 saturates tf, normalizes length, zeroes disjoint docs") {
     val docs = Seq(
       (1L, "spark sql spark sql spark sql spark sql"), // high tf, short

@@ -889,6 +889,64 @@ class PipelineSpec extends SparkSpec {
       r.getAs[Long]("rows_out"))) == Seq((stageRows, 0L, stageRows)))
   }
 
+  test("a repeated runRegions and enrichment pass compiles no new code") {
+    import graft.operators.{Merges, TfIdf}
+    import graft.pipeline.JobPipeline.{MergeUpsert, RegionConfig}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // one backfill operation of the pipeline benchmark, small: two
+    // regions through runRegions, then the filtered rows enriched and
+    // merged back into the stage rows. Its generated classes must stay
+    // in Spark's codegen cache and keep their names (Graft.session sizes
+    // the cache and leaves stage ids out of class names), so repeating
+    // it compiles nothing
+    val resume = "python spark sql linux"
+    val regions = Seq("a" -> Scd1, "b" -> MergeUpsert).map { case (r, strategy) =>
+      val polls = feedDir((0 until 3).map { p =>
+        "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel><title>Feed</title>" +
+          (0 until 4).map { i =>
+            s"<item><title>Role $p$i</title><link>http://$r/$p/$i</link>" +
+              "<pubDate>Sun, 28 Jan 2024 10:00:00 +0000</pubDate>" +
+              s"<description>&lt;p&gt;python&amp;nbsp;and spark, sql $r$p$i&lt;/p&gt;" +
+              "</description></item>"
+          }.mkString + "</channel></rss>"
+      }: _*)
+      (r, polls, strategy)
+    }
+    val transport = new Enrichment.BatchTransport {
+      def scoreBatch(jobs: Seq[String], resume: String): Seq[Double] =
+        jobs.map(_.length.toDouble)
+    }
+    val scorer = new Enrichment.RetryingScorer(transport, maxTokens = 1000L)
+    def pass(dir: String): Long = {
+      val (results, ok) = JobPipeline.runRegions(spark, regions.map {
+        case (r, polls, strategy) => RegionConfig(r, feed(polls),
+          s"$dir/$r/stage", s"$dir/$r/result", strategy, FilterConfig(daysBack = 30))
+      }, batchTs)
+      assert(ok, results)
+      def union(table: String) = regions.map { case (r, _, _) =>
+        spark.read.parquet(s"$dir/$r/$table").select(Schemas.FeedEntryCols.map(col): _*)
+      }.reduce(_ unionByName _)
+      val filtered = union("result_next")
+      val widened = Enrichment.toSinkColumns(Enrichment.withLlmScoreBatched(
+        Enrichment.withSkillsColumns(filtered, "summary", resume)
+          .join(TfIdf.similarity(filtered, "link", "summary", resume), Seq("link")),
+        "summary", resume, scorer))
+      val added = widened.schema.fields
+        .filterNot(f => Schemas.FeedEntryCols.contains(f.name))
+      val hist = union("stage").select(Schemas.FeedEntryCols.map(col) ++
+        added.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      Merges.scd1(hist, widened.select(hist.columns.map(col).toIndexedSeq: _*), "link",
+        Schemas.CompareCols).write.parquet(s"$dir/enriched")
+      spark.read.parquet(s"$dir/enriched").filter(col("llm_score").isNotNull).count()
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(pass(s"$tmp/1") == 24L)
+    val before = compiles.getCount
+    assert(pass(s"$tmp/2") == 24L)
+    assert(compiles.getCount - before == 0L)
+  }
+
   test("display timezone converts the published string at ingest") {
     val raw = Seq(
       ("DE", "l1", "T", "2024-01-15 12:00:00", "Feed", "rss", "15min", "s")

@@ -1,6 +1,8 @@
 #!/bin/bash
 # Direct JVM runner for graft mains — skips sbt startup.
 # usage: tools/run.sh graft.Scratch [args...]
+# Runs the classes compiled in the checkout this script belongs to.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-32g} -XX:+UseParallelGC -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
