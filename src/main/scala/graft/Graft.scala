@@ -87,16 +87,18 @@ object Graft {
     // of them on a session built without spark.sql.extensions, none on
     // one built with GraftExtensions (or already tuned)
     graft.plans.GraftExtensions.registerMissing(spark)
-    // per-session injection of the opt-in AQP rewrite (a no-op unless
-    // spark.graft.approxCountDistinct is set) — works on sessions
-    // built without spark.sql.extensions, e.g. the driver's own.
+    // per-session injection of the optimizer rules GraftExtensions
+    // injects: the opt-in AQP rewrite (a no-op unless
+    // spark.graft.approxCountDistinct is set) and the scan pushdown of
+    // referenced timestamps — works on sessions built without
+    // spark.sql.extensions, e.g. the driver's own.
     // Append-if-absent: assignment would clobber user-installed rules
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.ApproxCountDistinctRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.ApproxCountDistinctRewrite
-    }
+    Seq(graft.plans.ApproxCountDistinctRewrite, graft.plans.ScanTimestampLiterals)
+      .foreach { rule =>
+        if (!spark.experimental.extraOptimizations.contains(rule))
+          spark.experimental.extraOptimizations =
+            spark.experimental.extraOptimizations :+ rule
+      }
     spark
   }
 
@@ -106,10 +108,9 @@ object Graft {
     * `spark.sql.codegen.cache.maxEntries` classes (default 100). The
     * pipeline's steady state needs more: one `runRegions` backfill plus
     * its enrichment uses 85 distinct generated classes, and one
-    * streaming SCD2 round 101, of which 26–34 are new every round
-    * (timestamp literals are inlined into the generated Java). At 100
-    * entries every repeated backfill recompiled 55 of its classes and
-    * every round 72–90. 1000 holds that working set with headroom.
+    * streaming SCD2 round 101. At 100 entries every repeated backfill
+    * recompiled 55 of its classes and every round 72–90. 1000 holds
+    * that working set with headroom.
     *
     * The cache is keyed by the generated source, and by default each
     * whole-stage class is named after its codegen stage id. Under AQE
@@ -125,6 +126,24 @@ object Graft {
     * when a session built here is the first session in the JVM to
     * generate code; a later session, or `getOrCreate` returning an
     * existing one, keeps the size the cache was built with.
+    *
+    * The cache key also holds the class loader the code is compiled
+    * under. A streaming query runs on a clone of its session, and under
+    * Spark 4's per-session artifact isolation each clone gets its own
+    * `ExecutorClassLoader` on the executor, so every `start()` of a
+    * stream compiled its classes again: 18 of the 26 classes a steady
+    * streaming SCD2 round compiled were code the cache already held.
+    * `spark.sql.artifact.isolation.enabled = false` keeps one executor
+    * loader for the session and all its clones. Nothing in the engine
+    * adds session artifacts (`addArtifact`, `addJar`), so isolation
+    * bought nothing. Spark reads this conf only when a session is
+    * created, and a cloned session inherits it; the mains that build
+    * their own session (`Verify`, `Bench`, `Scratch`, …) keep Spark's
+    * default. Of the round's other 8 compiles, 5 were the engine's own
+    * per-round timestamps inlined as literals, which the operators now
+    * pass by reference (`Normalize.tsRef`). A steady round compiles
+    * the remaining 3: the caller's own timestamp filter, on the driver
+    * and the executor, and Spark's watermark predicate.
     */
   def session(master: String = "local[4]", shufflePartitions: Int = 8): SparkSession = {
     val s = SparkSession
@@ -136,6 +155,7 @@ object Graft {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,10 +81,23 @@ object Normalize {
 
   /** C14: missing event time falls back to a fixed batch timestamp
     * (reference: core/etl.py:137-139 uses `now`; we take the captured
-    * batch literal so one merge sees one timestamp, SURVEY §7.4).
+    * batch value so one merge sees one timestamp, SURVEY §7.4).
     */
   def tsOrBatch(c: Column, batchTs: java.sql.Timestamp): Column =
-    coalesce(c, lit(batchTs))
+    coalesce(c, tsRef(batchTs))
+
+  /** `ts` as a constant column that equals `lit(ts)` but that generated
+    * code reads by reference ([[graft.expr.TimestampRef]]), so a plan
+    * rebuilt for the next batch time reuses the compiled classes of the
+    * last one. Use it for every per-run timestamp (batch and as-of
+    * times); `tsFormat(lit(ts))` needs none, as it folds to a string
+    * literal, which Spark already passes by reference. A comparison of
+    * a scanned column with it is still pushed into the scan
+    * ([[graft.plans.ScanTimestampLiterals]]).
+    */
+  def tsRef(ts: java.sql.Timestamp): Column =
+    call_function(graft.expr.TimestampRef.FunctionName,
+      lit(DateTimeUtils.fromJavaTimestamp(ts)))
 
   /** C15: int coercion with default 0 (reference: scd2_manager.py:74). */
   def intOrZero(c: Column): Column = coalesce(c.cast(IntegerType), lit(0))

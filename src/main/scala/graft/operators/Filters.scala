@@ -21,12 +21,12 @@ object Filters {
     */
   def dateRange(tsCol: Column, daysBack: Int, asOf: java.sql.Timestamp): Column =
     if (daysBack <= 0) lit(true)
-    else tsCol.isNotNull && tsCol >= (lit(asOf) - expr(s"INTERVAL $daysBack DAYS"))
+    else tsCol.isNotNull && tsCol >= (Normalize.tsRef(asOf) - expr(s"INTERVAL $daysBack DAYS"))
 
   /** F2: hours-lookback variant (reference: run_ats_enrichment.py:528-537). */
   def hoursRange(tsCol: Column, hoursBack: Int, asOf: java.sql.Timestamp): Column =
     if (hoursBack <= 0) lit(true)
-    else tsCol.isNotNull && tsCol >= (lit(asOf) - expr(s"INTERVAL $hoursBack HOURS"))
+    else tsCol.isNotNull && tsCol >= (Normalize.tsRef(asOf) - expr(s"INTERVAL $hoursBack HOURS"))
 
   /** F3: non-empty-content filter — every required column must be
     * non-null, non-whitespace, and not the literal 'nan' artifact

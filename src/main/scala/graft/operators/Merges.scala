@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Normalize.preferNonBlank
+import graft.functions.Normalize.{preferNonBlank, tsRef}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,18 +160,22 @@ object Merges {
     lazy val outFieldNames: Seq[String] =
       (key +: dataCols) ++ Seq(S.EffectiveStart, S.EffectiveEnd, S.CurrentFlag, StatusCol)
 
+    // by reference, like every per-run timestamp; today the emit array is
+    // evaluated by array_compact's lambda, which Spark does not generate
+    // code for, so a literal here would not reach the class text either
+    val batchTsCol = tsRef(batchTs)
     val histRow: Seq[Column] = (col(key) +: dataCols.map(c => col(c + "_hist"))) ++
       Seq(col(S.EffectiveStart + "_hist"), col(S.EffectiveEnd + "_hist"),
         col(S.CurrentFlag + "_hist").cast(IntegerType))
     val expiredRow: Seq[Column] = histRow.dropRight(2) ++
-      Seq(lit(batchTs).cast(TimestampType), lit(0))
+      Seq(batchTsCol, lit(0))
     val newVersionData = dataCols.map { c =>
       if (notesCol.contains(c) && carryNotes)
         when(inHist, preferNonBlank(col(c), col(c + "_hist"))).otherwise(col(c))
       else col(c)
     }
     val insertRow: Seq[Column] = (col(key) +: newVersionData) ++
-      Seq(lit(batchTs).cast(TimestampType), lit(null).cast(TimestampType), lit(1))
+      Seq(batchTsCol, lit(null).cast(TimestampType), lit(1))
 
     val nullRow = lit(null).cast(
       StructType(outFieldNames.zip(

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.expr.{AudioDecodeExpr, AudioEnvSig, AudioMeta, AudioStats, AudioTags, ImageTags, VideoTags, TarEntries, ZipEntries, ArEntries, CpioEntries, SevenZip, SevenZipEntries, Bunzip2Expr, UnxzExpr, UnzstdExpr, UnLz4Expr, UnSnappyExpr, DecompressExpr, Decompress, DocText, DocTextExpr, DocumentText, DocumentTextExpr, OfficeText, PptxText, XlsxText, LegacyOffice, XlsTextExpr, PptTextExpr, OdfText, OdfTextExpr, EmlText, EmlTextExpr, MboxMessages, EmlAttachments, MsgText, MsgTextExpr, MsgAttachments, Tnef, TnefTextExpr, TnefAttachments, VcardText, VcardTextExpr, IcsTextExpr, LatexText, LatexTextExpr, AviFrames, BpeEncode, DocxText, ExifOrientation, OrientPixels, EpubText, HttpBody, HttpText, Mp4Frames, H264Frames, PdfText, ResamplePcm, ResizePixels, RtfToText, SigL1, VideoMeta, WarcRecords, GifFrames, BloomMightContain, CmsSketchAgg, CosineSimilarity, DotProduct, ExprArgs, ImageMeta, KmvQuantileAgg, KmvSketchAgg, L2SqDistance, LangIdWide, MinHashSignature, NfcNormalize, OrderedPairs, OrderedPairsGen, PackBytes, PixelGridSig, PixelStats, PostingPairsAgg, SimHash60, VecArgmaxCos, VecArgmin, VecArgminL2, VecDistance, WinnowFingerprints, WordGramHashes, WordShingles}
+import graft.expr.{AudioDecodeExpr, AudioEnvSig, AudioMeta, AudioStats, AudioTags, ImageTags, VideoTags, TarEntries, ZipEntries, ArEntries, CpioEntries, SevenZip, SevenZipEntries, Bunzip2Expr, UnxzExpr, UnzstdExpr, UnLz4Expr, UnSnappyExpr, DecompressExpr, Decompress, DocText, DocTextExpr, DocumentText, DocumentTextExpr, OfficeText, PptxText, XlsxText, LegacyOffice, XlsTextExpr, PptTextExpr, OdfText, OdfTextExpr, EmlText, EmlTextExpr, MboxMessages, EmlAttachments, MsgText, MsgTextExpr, MsgAttachments, Tnef, TnefTextExpr, TnefAttachments, VcardText, VcardTextExpr, IcsTextExpr, LatexText, LatexTextExpr, AviFrames, BpeEncode, DocxText, ExifOrientation, OrientPixels, EpubText, HttpBody, HttpText, Mp4Frames, H264Frames, PdfText, ResamplePcm, ResizePixels, RtfToText, SigL1, VideoMeta, WarcRecords, GifFrames, BloomMightContain, CmsSketchAgg, CosineSimilarity, DotProduct, ExprArgs, ImageMeta, KmvQuantileAgg, KmvSketchAgg, L2SqDistance, LangIdWide, MinHashSignature, NfcNormalize, OrderedPairs, OrderedPairsGen, PackBytes, PixelGridSig, PixelStats, PostingPairsAgg, SimHash60, TimestampRef, VecArgmaxCos, VecArgmin, VecArgminL2, VecDistance, WinnowFingerprints, WordGramHashes, WordShingles}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -25,6 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in AQP: COUNT(DISTINCT) → KMV sketch estimate when
     // spark.graft.approxCountDistinct=true (no-op otherwise)
     ext.injectOptimizerRule(_ => ApproxCountDistinctRewrite)
+    ext.injectOptimizerRule(_ => ScanTimestampLiterals)
   }
 }
 
@@ -322,7 +323,11 @@ object GraftExtensions {
       (FunctionIdentifier(KmvQuantileAgg.FunctionName),
         info(KmvQuantileAgg.FunctionName, classOf[KmvQuantileAgg]),
         exprs => KmvQuantileAgg(exprs(0), exprs(1),
-          ExprArgs.intLit(KmvQuantileAgg.FunctionName, "k", exprs(2))))
+          ExprArgs.intLit(KmvQuantileAgg.FunctionName, "k", exprs(2)))),
+      (FunctionIdentifier(TimestampRef.FunctionName),
+        info(TimestampRef.FunctionName, classOf[TimestampRef]),
+        exprs => TimestampRef(
+          ExprArgs.longLit(TimestampRef.FunctionName, "micros", exprs.head)))
     )
 
   /** Whole-operator SQL surfaces (asof/range join, BM25, semantic

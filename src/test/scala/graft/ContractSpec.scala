@@ -57,16 +57,11 @@ class ContractSpec extends AnyFunSuite {
     // query bodies, dev mains, the *Build encoders and the specs call the
     // one copy; a decoder's bounded reader `(b: Array[Byte], o: Int)` is
     // a different thing and stays with its decoder
-    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val names = Seq("ascii", "le16", "le32", "le64", "be", "be16", "be32",
       "byteHex", "le32hex", "hexOf", "pdfDoc", "docxDoc", "gz", "tarOf")
     val decl = ("\\bdef (" + names.mkString("|") + ")\\b(.*)").r
-    def scalaFiles(dir: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(dir))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally s.close()
-    }
     val files = Seq(Paths.get("src/main/scala/graft/SparkEntry.scala"),
       Paths.get("src/main/scala/graft/ScaleShakeout.scala")) ++
       scalaFiles("src/main/scala/graft/expr")
@@ -83,6 +78,39 @@ class ContractSpec extends AnyFunSuite {
     assert(copies.isEmpty,
       s"use graft.fixtures.FixtureBytes instead of a local copy:\n" +
         copies.mkString("\n"))
+  }
+
+  test("per-run timestamps reach generated code by reference, not as literals") {
+    // Spark inlines a timestamp literal into the generated Java, so an
+    // operator that takes its batch or as-of time as `lit(...)` compiles
+    // new code for every run; Normalize.tsRef passes the value by
+    // reference. `tsFormat(lit(...))` folds to a string literal, which
+    // Spark already passes by reference, and stays allowed
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val inlined = """(?<!tsFormat\()\blit\(\s*(batchTs|asOf|ts)\s*\)""".r
+    val files = Seq("operators", "pipeline", "streaming")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d")) :+
+      Paths.get("src/main/scala/graft/functions/Normalize.scala")
+    assert(files.forall(Files.isRegularFile(_)) && files.size > 10,
+      s"run from the repository root: $files")
+    val literals = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if inlined.findFirstIn(code).isDefined
+    } yield s"$f:${i + 1}: $code"
+    assert(literals.isEmpty,
+      "pass per-run timestamps through Normalize.tsRef, not lit:\n" +
+        literals.mkString("\n"))
+  }
+
+  private def scalaFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally s.close()
   }
 
   test("every query's output schema is unambiguous for the driver compare") {

@@ -571,6 +571,77 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a second cron round with new batch and as-of times compiles no new code") {
+    import graft.functions.Normalize
+    import graft.model.Schemas
+    import graft.pipeline.JobPipeline
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    // the paper's cron round, small: poll files streamed through the feed
+    // source, normalize and the keyed dedup into an SCD2 history, then the
+    // filter stage over the current rows written out. Each round's stream
+    // runs on a clone of the session, and the round's batch id (so its
+    // version timestamp) and as-of time are new; with one executor class
+    // loader for every clone and the timestamps read by reference, the
+    // second round reuses the first round's compiled code
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cron-codegen")
+    val polls = java.nio.file.Files.createDirectories(tmp.resolve("polls"))
+    val table = tmp.resolve("history").toString
+    val seeded = t("2024-01-20 00:00:00")
+    val histSchema = StructType(
+      (StructField("link", StringType) +: Schemas.FeedEntryCols.filterNot(_ == "link")
+        .map(StructField(_, StringType))) ++ Schemas.Scd2Schema.fields.takeRight(3))
+    spark.createDataFrame(spark.sparkContext.parallelize((0 until 4).map(i =>
+      Row(s"http://h/$i", "", s"Role h$i", "2024-01-27 09:00:00", "Feed", "", "",
+        s"old $i", "", seeded, null, 1)), 2), histSchema).write.parquet(table)
+    def round(i: Int, items: (String, String)*): Long = {
+      // every item has the same event time, so round 2 leaves the
+      // watermark where round 1 put it
+      java.nio.file.Files.writeString(polls.resolve(s"poll-$i.xml"),
+        "<?xml version=\"1.0\"?><rss version=\"2.0\"><channel><title>Feed</title>" +
+          items.map { case (link, summary) =>
+            s"<item><title>Role $link</title><link>$link</link>" +
+              "<pubDate>Sun, 28 Jan 2024 10:00:00 +0000</pubDate>" +
+              s"<description>$summary</description></item>"
+          }.mkString + "</channel></rss>")
+      val asOf = t(s"2024-02-0${i + 1} 00:00:00")
+      val raw = spark.readStream.format("graft.sources.feed.FeedDataSource")
+        .option("path", polls.toString).load()
+      val norm = JobPipeline.normalizeEntries(raw, asOf)
+        .withColumn("_evt", Normalize.tsParse(col("published")))
+      val deduped = StreamingIngest.dedupStreamByKey(norm, "link", "_evt", "1 minute")
+        .drop("_evt")
+      val q = StreamingIngest.scd2Sink(deduped, table, s"$tmp/ckpt", "link",
+          Schemas.CompareCols, id => new java.sql.Timestamp(seeded.getTime + (id + 1) * 1000L),
+          trigger = Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(60000) finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      val current = spark.read.parquet(table).filter(col(Schemas.CurrentFlag) === 1)
+        .select(Schemas.FeedEntryCols.map(col): _*)
+      JobPipeline.filterStage(current, JobPipeline.FilterConfig(daysBack = 30), asOf)
+        .write.parquet(s"$tmp/result-$i")
+      spark.read.parquet(s"$tmp/result-$i").count()
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    // round 1: two new links and one changed history row
+    assert(round(1, "http://n/1" -> "new 1", "http://n/2" -> "new 2",
+      "http://h/0" -> "changed 0") == 6L)
+    val before = compiles.getCount
+    // round 2: one new link, one re-polled link and one changed history row
+    assert(round(2, "http://n/3" -> "new 3", "http://n/1" -> "new 1",
+      "http://h/1" -> "changed 1") == 7L)
+    assert(compiles.getCount - before == 0L)
+    val history = spark.read.parquet(table)
+    assert(history.count() == 9L)
+    // the two rounds stamped their versions with different batch times
+    assert(history.select(Schemas.EffectiveStart).distinct().count() == 3L)
+    assert(spark.read.parquet(s"$tmp/result-1").select("AS_OF_DT").as[String]
+      .collect().toSet == Set("2024-02-02 00:00:00"))
+  }
+
   test("dedup-on-ingest sinks evaluate each micro-batch once") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-once").toString
