@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale utilities: skew-aware joins and bucketed storage for
-  * shuffle-free merges. These are the knobs a 1000-executor deployment
+  * shuffle-free joins. These are the knobs a 1000-executor deployment
   * turns; local runs exercise the same plans.
   */
 object Scale {
@@ -127,11 +127,10 @@ object Scale {
     salted.join(replicated, Seq(key, "_salt"), joinType).drop("_salt")
   }
 
-  /** Write a table bucketed by the merge key. Two tables bucketed the
-    * same way join with ZERO exchanges — the SCD merges become
-    * shuffle-free, which at 100 TB is the difference between a
-    * re-shuffle of the whole history per batch and a local merge.
-    * (Requires the session catalog; parquet + saveAsTable.)
+  /** Write a table bucketed by `key`. Two tables bucketed the same way
+    * join with ZERO exchanges ([[TfIdf.writePostings]] keeps its
+    * postings index this way). (Requires the session catalog; parquet
+    * + saveAsTable.)
     */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int): Unit = {
@@ -273,16 +272,5 @@ object Scale {
       }
     }
     n
-  }
-
-  /** Register both sides of a merge as bucketed tables and return the
-    * (history, batch) frames whose join needs no shuffle.
-    */
-  def bucketedPair(spark: SparkSession, hist: DataFrame, batch: DataFrame,
-      key: String, buckets: Int, histTable: String = "graft_hist_bucketed",
-      batchTable: String = "graft_batch_bucketed"): (DataFrame, DataFrame) = {
-    writeBucketed(hist, histTable, key, buckets)
-    writeBucketed(batch, batchTable, key, buckets)
-    (spark.table(histTable), spark.table(batchTable))
   }
 }

@@ -4,7 +4,7 @@ import graft.functions.{HtmlToText, Normalize}
 import graft.model.Schemas
 import graft.operators.{Filters, Merges}
 import graft.sources.Tables
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -166,8 +166,8 @@ object JobPipeline {
         s"$invalid rows with null/blank primary key '${Schemas.PrimaryKey}'")
     } catch {
       case NonFatal(e) =>
-        FileSystem.get(spark.sparkContext.hadoopConfiguration)
-          .delete(new Path(tmp), true)
+        val p = new Path(tmp)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
         throw e
     }
     Tables.swapTable(spark, stagePath)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.Normalize
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -33,8 +33,8 @@ object Tables {
     * delete-then-rename swap could.)
     */
   private[graft] def swapTable(spark: SparkSession, tablePath: String): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(tablePath)
+    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(tablePath + "_tmp")
     val bak = new Path(tablePath + "_bak")
     def renameOrThrow(src: Path, to: Path): Unit =
@@ -62,8 +62,9 @@ object Tables {
     */
   private[graft] def readCommitted(spark: SparkSession, tablePath: String,
       ifAbsent: StructType): DataFrame = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(tablePath))) spark.read.parquet(tablePath)
+    val table = new Path(tablePath)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(table)) spark.read.parquet(tablePath)
     else if (fs.exists(new Path(tablePath + "_bak")))
       spark.read.parquet(tablePath + "_bak")
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ifAbsent)

@@ -88,21 +88,6 @@ object StreamingIngest {
       StructField(S.CurrentFlag, IntegerType)))
   }
 
-  /** Writes `merged` into the bucketed table at `tablePath`, replacing
-    * only the `_bucket` partitions it holds (dynamic partition
-    * overwrite), and restores the session's overwrite mode.
-    */
-  private def overwriteBuckets(merged: DataFrame, tablePath: String): Unit = {
-    val spark = merged.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
   /** The skeleton every sink below shares: update mode, the checkpoint
     * and the trigger, with `perBatch` run on each micro-batch and its id.
     */
@@ -128,54 +113,6 @@ object StreamingIngest {
       merged.write.mode("overwrite").parquet(tablePath + "_tmp")
       Tables.swapTable(spark, tablePath)
     }
-
-  /** Incremental SCD1 sink: the table is laid out in `numBuckets`
-    * key-hash partitions, and each micro-batch rewrites ONLY the
-    * buckets its keys fall in (dynamic partition overwrite) — write
-    * volume per trigger is touched/numBuckets of the table instead of
-    * all of it, which is what a 100 TB history table needs from a
-    * plain-parquet sink. History for untouched buckets is never read
-    * either: the scan prunes to the touched partitions.
-    *
-    * Crash guarantee is WEAKER than the flat sink's [[Tables.swapTable]]:
-    * dynamic partition overwrite deletes and replaces each touched
-    * bucket directly, so a crash mid-commit can leave a touched bucket
-    * deleted-but-not-rewritten (untouched buckets are never at risk).
-    * The trade is deliberate — staging every touched bucket through a
-    * `_tmp`/`_bak` swap would multiply rename round-trips per trigger
-    * on an object store. Callers that need single-table crash atomicity
-    * should use the flat sink (or a transactional table format in a
-    * real deployment).
-    */
-  def scd1SinkBucketed(stream: DataFrame, tablePath: String, checkpoint: String,
-      key: String, compareCols: Seq[String], numBuckets: Int = 64,
-      trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    sink(stream, checkpoint, trigger) { (batch, _) => evaluatedOnce(batch) { batch =>
-      val spark = batch.sparkSession
-      def bucketOf(c: org.apache.spark.sql.Column) =
-        pmod(xxhash64(c), lit(numBuckets.toLong))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
-      // ≤ numBuckets longs — a bounded driver-side collect
-      val touched = batch.select(bucketOf(col(key)).as("_bucket"))
-        .distinct().collect().map(_.getLong(0))
-      val hist =
-        if (exists)
-          spark.read.parquet(tablePath)
-            .filter(col("_bucket").isin(touched: _*)) // partition-pruned
-            .drop("_bucket")
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], batch.schema)
-      overwriteBuckets(
-        Merges.scd1(hist, batch, key, compareCols, notesCol = None)
-          .withColumn("_bucket", bucketOf(col(key))),
-        tablePath)
-    }}
-
-  /** Read a bucketed SCD1 table back without its layout column. */
-  def readBucketedTable(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read.parquet(tablePath).drop("_bucket")
 
   /** Streaming ingest with DEDUP-ON-ARRIVAL: each micro-batch is
     * checked against the ACCUMULATED corpus via its materialized
@@ -791,8 +728,7 @@ object StreamingIngest {
     * batchIsSnapshot`: a single full-outer join of the batch against
     * the current history, after which the whole table is rewritten.
     * The join shuffles the current history once per trigger, the same
-    * order of cost as the rewrite; [[scd2MergeBatchBucketed]] is the
-    * path for tables too large to rewrite. The batch is evaluated once
+    * order of cost as the rewrite. The batch is evaluated once
     * ([[evaluatedOnce]]).
     *
     * Idempotence under foreachBatch retries: `batchTs` MUST be derived
@@ -818,146 +754,6 @@ object StreamingIngest {
       .write.mode("overwrite").parquet(tablePath + "_tmp")
     Tables.swapTable(spark, tablePath)
   }
-
-  /** St6 incremental-IO variant: SCD2 history laid out in `numBuckets`
-    * key-hash partitions; each micro-batch rewrites ONLY the buckets
-    * its keys fall in (dynamic partition overwrite) and reads only
-    * those buckets' history — per-trigger IO is touched/numBuckets of
-    * the table, the same 100 TB story as [[scd1SinkBucketed]]. All
-    * versions of a key share its bucket (the hash is on the key, not
-    * the version timestamp), so a bucket rewrite is self-contained:
-    * expiring a current row and inserting its successor touch the same
-    * partition. Incremental semantics only: within the touched buckets
-    * the batch meets the history in one [[Merges.scd2]] join with
-    * `expireAbsent = false`, so keys absent from the batch pass through
-    * unchanged; snapshot-expiry with bucketed IO is
-    * [[scd2MergeBatchBucketedSnapshot]]. An empty batch touches no
-    * bucket and writes nothing. Retry idempotence is inherited: same
-    * deterministic `batchTs`, same fixed-point merge, and a replayed
-    * batch rewrites its buckets with identical content. The batch is
-    * evaluated once ([[evaluatedOnce]]). Crash guarantee is weaker than
-    * the flat sink's — see [[scd1SinkBucketed]]'s note on dynamic
-    * partition overwrite.
-    */
-  def scd2MergeBatchBucketed(tablePath: String, batch: DataFrame, key: String,
-      compareCols: Seq[String], batchTs: java.sql.Timestamp,
-      numBuckets: Int = 64, notesCol: Option[String] = Some("notes"),
-      carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
-    val spark = batch.sparkSession
-    def bucketOf(c: Column) = pmod(xxhash64(c), lit(numBuckets.toLong))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // ≤ numBuckets longs — a bounded driver-side collect
-    val touched = batch.select(bucketOf(col(key)).as("_bucket"))
-      .distinct().collect().map(_.getLong(0))
-    if (touched.nonEmpty) {
-      val hist =
-        if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
-          spark.read.parquet(tablePath)
-            .filter(col("_bucket").isin(touched: _*)) // partition-pruned
-            .drop("_bucket")
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], scd2Schema(batch))
-      overwriteBuckets(
-        Merges.scd2(hist, batch, key, compareCols, batchTs, notesCol, carryNotes,
-            expireAbsent = false)
-          .withColumn("_bucket", bucketOf(col(key))),
-        tablePath)
-    }
-  }
-
-  /** St6 snapshot-mode bucketed SCD2: the micro-batch is a FULL feed
-    * poll (one reference cron run) — current keys absent from the batch
-    * are EXPIRED — but IO stays bucketed, closing the gap where
-    * snapshot semantics previously forced the flat full-table
-    * [[scd2MergeBatch]].
-    *
-    * Expiry detection can't prune buckets a priori (an absent key may
-    * live anywhere), so the batch's key+compare columns are joined
-    * against a column-pruned scan of the table's CURRENT rows only
-    * (`current_flag = 1` pushes to parquet; history depth and payload
-    * width never enter this scan). That classifies every key as
-    * new / changed / absent / unchanged; the DIRTY buckets — those
-    * holding a new, changed, or absent key — come back as a bounded
-    * `collect` (≤ numBuckets longs). Only dirty buckets are then read
-    * in full and re-merged ([[Merges.scd2]] snapshot semantics: batch
-    * rows co-located in a dirty bucket but unchanged pass through as
-    * fixed points; current rows absent from the batch expire), and
-    * dynamic partition overwrite rewrites only those buckets. A
-    * replayed (retried) batch finds zero dirty keys and returns
-    * without writing at all — byte-identical table, stronger than the
-    * flat sink's rewrite-identical-content idempotence. The batch feeds
-    * both the classification and the merge, so it is evaluated once
-    * ([[evaluatedOnce]]).
-    *
-    * Per-trigger cost on a 100 TB table: one pruned scan of current
-    * rows (~entity count, not history volume) + full IO only for
-    * dirty/numBuckets of the table. Crash guarantee: same dynamic
-    * partition overwrite trade as [[scd1SinkBucketed]].
-    */
-  def scd2MergeBatchBucketedSnapshot(tablePath: String, batch: DataFrame,
-      key: String, compareCols: Seq[String], batchTs: java.sql.Timestamp,
-      numBuckets: Int = 64, notesCol: Option[String] = Some("notes"),
-      carryNotes: Boolean = true): Unit = evaluatedOnce(batch) { batch =>
-    import graft.model.{Schemas => S}
-    val spark = batch.sparkSession
-    def bucketOf(c: Column) = pmod(xxhash64(c), lit(numBuckets.toLong))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tablePath))) {
-      // first snapshot: every key inserts — write all buckets directly
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], scd2Schema(batch))
-      Merges.scd2(empty, batch, key, compareCols, batchTs, notesCol, carryNotes)
-        .withColumn("_bucket", bucketOf(col(key)))
-        .write.mode("overwrite").partitionBy("_bucket").parquet(tablePath)
-    } else {
-      // key + compare columns of current rows only — column-pruned,
-      // current_flag pushed to the parquet scan
-      val currentKC = spark.read.parquet(tablePath)
-        .filter(col(S.CurrentFlag) === 1)
-        .select((key +: compareCols).map(c =>
-          if (c == key) col(c) else col(c).as(c + "_hist")): _*)
-        .withColumn("_in_hist", lit(1))
-      val batchKC = batch.select((key +: compareCols).map(col): _*)
-        .withColumn("_in_new", lit(1))
-      val ch = Merges.changed(compareCols, c => col(c), c => col(c + "_hist"))
-      val dirtyKeys = batchKC.join(currentKC, Seq(key), "full_outer")
-        .filter(col("_in_new").isNull || col("_in_hist").isNull || ch)
-        .select(col(key))
-      // ≤ numBuckets longs — a bounded driver-side collect
-      val dirty = dirtyKeys.select(bucketOf(col(key)).as("_bucket"))
-        .distinct().collect().map(_.getLong(0))
-      // a replayed/no-op snapshot has no dirty bucket: table untouched
-      if (dirty.nonEmpty) {
-        val hist = spark.read.parquet(tablePath)
-          .filter(col("_bucket").isin(dirty: _*)) // partition-pruned
-          .drop("_bucket")
-        val batchDirty = batch.filter(bucketOf(col(key)).isin(dirty: _*))
-        overwriteBuckets(
-          Merges.scd2(hist, batchDirty, key, compareCols, batchTs,
-              notesCol, carryNotes)
-            .withColumn("_bucket", bucketOf(col(key))),
-          tablePath)
-      }
-    }
-  }
-
-  /** [[scd2Sink]]'s bucketed form — see [[scd2MergeBatchBucketed]] and,
-    * for `batchIsSnapshot=true`, [[scd2MergeBatchBucketedSnapshot]]. */
-  def scd2SinkBucketed(stream: DataFrame, tablePath: String, checkpoint: String,
-      key: String, compareCols: Seq[String],
-      batchTs: Long => java.sql.Timestamp, numBuckets: Int = 64,
-      batchIsSnapshot: Boolean = false,
-      notesCol: Option[String] = Some("notes"), carryNotes: Boolean = true,
-      trigger: Trigger = Trigger.ProcessingTime("15 minutes")): DataStreamWriter[Row] =
-    sink(stream, checkpoint, trigger) { (batch, id) =>
-      if (batchIsSnapshot)
-        scd2MergeBatchBucketedSnapshot(tablePath, batch, key, compareCols,
-          batchTs(id), numBuckets, notesCol, carryNotes)
-      else
-        scd2MergeBatchBucketed(tablePath, batch, key, compareCols, batchTs(id),
-          numBuckets, notesCol, carryNotes)
-    }
 
   /** St6: wire a deduped stream into an SCD2-versioned parquet table via
     * foreachBatch — the streaming form of batch M3 ([[Merges.scd2]]),

@@ -105,11 +105,8 @@ class CacheLifecycleSpec extends SparkSpec {
         org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]](
       (s, tmp) => StreamingIngest.scd2Sink(s, s"$tmp/table", s"$tmp/ckpt", "link",
         cmp, ts, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)),
-      (s, tmp) => StreamingIngest.scd2SinkBucketed(s, s"$tmp/table", s"$tmp/ckpt",
-        "link", cmp, ts, numBuckets = 4,
-        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)),
-      (s, tmp) => StreamingIngest.scd2SinkBucketed(s, s"$tmp/table", s"$tmp/ckpt",
-        "link", cmp, ts, numBuckets = 4, batchIsSnapshot = true,
+      (s, tmp) => StreamingIngest.scd2Sink(s, s"$tmp/table", s"$tmp/ckpt", "link",
+        cmp, ts, batchIsSnapshot = true,
         trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)))
     for (sink <- sinks) {
       val tmp = java.nio.file.Files.createTempDirectory("graft-scd2cache").toString

@@ -106,6 +106,41 @@ class ContractSpec extends AnyFunSuite {
         literals.mkString("\n"))
   }
 
+  test("tables resolve their filesystem from their path; no partition-overwrite commits") {
+    // FileSystem.get(conf) is the DEFAULT filesystem, which fails with
+    // "Wrong FS" on a table under any other scheme; a path's own
+    // filesystem comes from Path.getFileSystem (or FileSystem.get(uri, conf)).
+    // Dynamic partition overwrite is a second, weaker commit protocol
+    // beside Tables.swapTable, and flips a session-wide conf.
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val files = Seq("sources", "pipeline", "streaming", "operators")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+    assert(files.forall(Files.isRegularFile(_)) && files.size > 10,
+      s"run from the repository root: $files")
+    // FileSystem.get with one argument, a Configuration, across lines too
+    val defaultFsCall = """FileSystem\.get\(\s*[\w.]+(\(\))?\s*\)""".r
+    val defaultFs = for {
+      f <- files
+      text = new String(Files.readAllBytes(f), "UTF-8")
+      m <- defaultFsCall.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}"
+    assert(defaultFs.isEmpty,
+      "resolve a table's filesystem with new Path(p).getFileSystem(" +
+        "spark.sessionState.newHadoopConf()):\n" + defaultFs.mkString("\n"))
+    // the conf's last key segment is also the per-write option name
+    val modeConf = org.apache.spark.sql.internal.SQLConf.PARTITION_OVERWRITE_MODE
+    val overwrite = for {
+      f <- scalaFiles("src/main/scala")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(modeConf.key.split('.').last) ||
+        line.contains("PARTITION_OVERWRITE_MODE")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(overwrite.isEmpty,
+      "commit tables through Tables.swapTable, not dynamic partition " +
+        "overwrite:\n" + overwrite.mkString("\n"))
+  }
+
   private def scalaFiles(dir: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
